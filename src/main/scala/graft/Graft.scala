@@ -43,6 +43,9 @@ object Graft {
     * plans (an analytics service, a scheduled sweep), re-compiling and
     * re-JITting generated classes that were hot minutes ago; measured 21%
     * across the full 183-query inventory at sf0.1 (BASELINE.md r11).
+    * Streaming checkpoints are written through
+    * [[graft.streaming.LocalCheckpointFileManager]], which spares `file:`
+    * checkpoints a forked `chmod`/`readlink` per file.
     * `spark.sql.shuffle.partitions` is left to the caller/cluster defaults —
     * size it to your core count (the harness uses 32 on local[32]).
     */
@@ -51,6 +54,8 @@ object Graft {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      .config(graft.streaming.LocalCheckpointFileManager.ConfKey,
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
   // ===== dedup (docs: (doc_id, text)) =====
 

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Storage layout for the captured event log — the write side of the 100 TB
   * story. The reference streams events onward and keeps nothing
   * (`README.md:3` "populating other systems"); the system being populated
@@ -442,21 +444,29 @@ object Layout {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       archiveMasters.values.foreach { dir =>
-        try {
-          val root = java.nio.file.Paths.get(dir)
-          val walk = java.nio.file.Files.walk(root)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: java.io.IOException => () } // best-effort cleanup
+        try deleteTree(dir)
+        catch { case _: java.io.IOException => () } // best-effort cleanup
       }))
+  }
+
+  private def deleteTree(dir: String): Unit = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally walk.close()
   }
 
   private[graft] def stagedArchiveClone(spark: SparkSession, sfDir: String,
                                         ev: DataFrame, tag: String): String = {
     val master = archiveMasters.getOrElseUpdate(s"$tag#$sfDir", {
       val dir = java.nio.file.Files.createTempDirectory(s"${tag}_master").toString
-      writeEventArchive(ev, dir)
+      // a failed build is not cached: drop its partial tree so the next
+      // call starts from an empty directory and /tmp keeps no orphan
+      try writeEventArchive(ev, dir)
+      catch { case NonFatal(e) =>
+        try deleteTree(dir) catch { case io: java.io.IOException => e.addSuppressed(io) }
+        throw e
+      }
       dir
     })
     val clone = java.nio.file.Files.createTempDirectory(tag).toString
@@ -466,7 +476,9 @@ object Layout {
 
   /** Recursive hardlink clone: directories recreated, files linked (same
     * inode — O(files) metadata ops, zero data bytes copied). Safe for
-    * parquet trees because writers never modify files in place.
+    * parquet trees because writers never modify files in place. A file
+    * that cannot be linked (no hardlink support, or master and clone on
+    * different filesystems) is copied instead.
     */
   private def hardlinkTree(src: String, dst: String): Unit = {
     val s = java.nio.file.Paths.get(src)
@@ -476,7 +488,11 @@ object Layout {
       val t = d.resolve(s.relativize(p).toString)
       if (java.nio.file.Files.isDirectory(p))
         java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.createLink(t, p)
+      else try java.nio.file.Files.createLink(t, p)
+      catch {
+        case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+          java.nio.file.Files.copy(p, t)
+      }
     } finally stream.close()
   }
 

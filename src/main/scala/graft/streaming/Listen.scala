@@ -11,6 +11,8 @@ import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.ForeachWriter
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Push transport — the analog of the reference's server-streaming `Listen`
   * RPC (reference `pqstream.proto:7-10`, `server.go:284-315`): a client
   * connects, sends a `ListenRequest` carrying a table regexp, and receives an
@@ -317,12 +319,12 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
           val line = queue.poll(200, TimeUnit.MILLISECONDS)
           if (line != null) emit(line)
         }
-      } catch { case _: Throwable => () } // client went away: unregister below
+      } catch { case NonFatal(_) => () } // client went away: unregister below
       finally remove()
     }
     def remove(): Unit = if (gone.compareAndSet(false, true)) {
       subs.remove(this)
-      try socket.close() catch { case _: Throwable => () }
+      try socket.close() catch { case NonFatal(_) => () }
     }
   }
 
@@ -342,7 +344,7 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
       // "a token you must refuse" — NullNode.asText() is the string
       // "null", which would otherwise trip the unparseable-token refusal
       Option(node.get(field)).filter(n => !n.isNull).map(_.asText())
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** An OBJECT-valued handshake field as (key → text value) pairs — the
@@ -360,7 +362,7 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
         n.properties().asScala.filter(!_.getValue.isNull)
           .map(e => e.getKey -> e.getValue.asText()).toMap
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   private def handleConnection(socket: Socket): Unit = {
@@ -455,7 +457,7 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
             s.registered.countDown()
             s.ready.await(5, TimeUnit.SECONDS)
             // reader side: only used to detect client disconnect
-            try { while (in.readLine() != null) () } catch { case _: Throwable => () }
+            try { while (in.readLine() != null) () } catch { case NonFatal(_) => () }
             s.remove()
           } catch {
             case e: PatternSyntaxException =>
@@ -485,14 +487,14 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
         // forever with no error response and leaks the fd
         daemon(s"listen-conn") {
           try handleConnection(s)
-          catch { case _: Throwable => try s.close() catch { case _: Throwable => () } }
+          catch { case NonFatal(_) => try s.close() catch { case NonFatal(_) => () } }
         }
       }
-    } catch { case _: Throwable => () } // server socket closed
+    } catch { case NonFatal(_) => () } // server socket closed
   }
 
   override def close(): Unit = if (closed.compareAndSet(false, true)) {
-    try server.close() catch { case _: Throwable => () }
+    try server.close() catch { case NonFatal(_) => () }
     subs.keySet.forEach(_.remove())
   }
 }
@@ -600,8 +602,8 @@ final class SocketEventWriter(host: String, port: Int, flushEach: Boolean)
   }
 
   override def close(errorOrNull: Throwable): Unit = {
-    if (out != null) { try { out.flush() } catch { case _: Throwable => () } }
-    if (socket != null) { try socket.close() catch { case _: Throwable => () } }
+    if (out != null) { try { out.flush() } catch { case NonFatal(_) => () } }
+    if (socket != null) { try socket.close() catch { case NonFatal(_) => () } }
   }
 }
 

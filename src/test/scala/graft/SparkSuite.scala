@@ -3,15 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all Spark-backed suites. */
+/** One shared local session for all Spark-backed suites, built on
+  * [[Graft.sessionBuilder]] so every spec runs the session defaults users get.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Graft.sessionBuilder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
     .getOrCreate()
 
   /** Run `body` with codegen forced (no interpreter fallback), restoring the
