@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader for the driver testdata layout
   * (`/root/testdata/sf{0.001,0.01,0.1}/<name>.parquet`, see
@@ -11,12 +13,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    FanOutTables.get(name) match {
-      case Some(key) =>
-        fanOut(spark, loadRaw(spark, sfDir, name), s"$sfDir/$name.parquet", key)
-      case None => loadRaw(spark, sfDir, name)
-    }
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val (df, bytes) = loadRaw(spark, sfDir, name)
+    FanOutTables.get(name).fold(df)(key => fanOut(spark, df, bytes, key))
+  }
 
   /** [[load]] WITHOUT the scan-parallelism fan-out — for consumers whose
     * plan is a scan→partial-agg/filter shape (token counts, vocabulary,
@@ -33,7 +33,7 @@ object Tables {
     * identical.
     */
   def loadPlain(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    loadRaw(spark, sfDir, name)
+    loadRaw(spark, sfDir, name)._1
 
   /** Only the CONTENT-BEARING tables fan out, hashed on their named unique
     * key (NOT positionally on the leading column — a schema evolution that
@@ -71,12 +71,9 @@ object Tables {
     * from the plan (the x10/x100 blowup dirs already take that branch);
     * a lower SPARK_GRAFT_CPUS lowers the target with it.
     */
-  private def fanOut(spark: SparkSession, df: DataFrame, path: String,
+  private def fanOut(spark: SparkSession, df: DataFrame, bytes: Long,
                      key: String): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
-    val p = new org.apache.hadoop.fs.Path(path)
-    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
     // split estimate mirroring FilePartition packing: bytes / min(max split,
     // max(open cost, bytes/cores)) — the estimate never FALSELY triggers
     // (row-group packing can only lower the real task count below it), but
@@ -115,7 +112,69 @@ object Tables {
     df.coalesce(parts)
   }
 
-  private def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  /** What a load knows about a table root without reading a footer: the
+    * schema parquet inference returned and the root's byte size, valid
+    * while `signature` still matches.
+    */
+  private final case class TableMeta(signature: (Long, Long, Seq[Option[String]]),
+                                     schema: StructType, bytes: Long)
+
+  /** One entry per qualified table path, shared by every session in the
+    * JVM. A catalog session builds hundreds of queries over the same ten
+    * tables, and `spark.read.parquet` infers the schema in a Spark job
+    * that reads a footer on every call (one job and 70–90 ms per load at
+    * sf0.001 on 4 vCPUs). Entries are replaced, never added per version,
+    * so the map is bounded by the number of table paths.
+    */
+  private val tableMeta = new java.util.concurrent.ConcurrentHashMap[String, TableMeta]()
+
+  /** Every SQL conf that changes what parquet schema inference returns
+    * (the settings `ParquetToSparkSchemaConverter` and parquet's schema
+    * merge read). Part of the signature, so a session that reads the same
+    * file under different settings infers afresh instead of reusing a
+    * schema it would not have inferred.
+    */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** Read a table root and return it with its byte size. The key is one
+    * `getFileStatus` whatever the table's size: the root's length and
+    * modification time plus [[InferenceConfs]]. On a hit the read carries
+    * the cached schema, so no footer is read and no job runs; Spark still
+    * lists the files, so rows added since are read. A miss, a changed
+    * signature or a root whose modification time is 0 (some object stores
+    * report that for directories) infers with `spark.read.parquet`. No
+    * lock is held while inferring: two racing misses both infer, the
+    * later entry wins, and both entries are correct.
+    */
+  private def scan(spark: SparkSession, path: String): (DataFrame, Long) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val key = st.getPath.toString
+    val signature = (st.getLen, st.getModificationTime, InferenceConfs.map(spark.conf.getOption))
+    Option(tableMeta.get(key)).filter(_.signature == signature) match {
+      case Some(m) => (spark.read.schema(m.schema).parquet(path), m.bytes)
+      case None =>
+        val df = spark.read.parquet(path)
+        val bytes = if (st.isDirectory) fs.getContentSummary(p).getLength else st.getLen
+        if (st.getModificationTime > 0L) tableMeta.put(key, TableMeta(signature, df.schema, bytes))
+        (df, bytes)
+    }
+  }
+
+  private def loadRaw(spark: SparkSession, sfDir: String, name: String): (DataFrame, Long) = {
     // events.ts has shipped in two physical layouts: TIMESTAMP(NANOS)
     // (read as a raw-nanos long under nanosAsLong, then converted — also the
     // layout ScaleProbe's blowup dirs keep for DuckDB-comparability) and
@@ -124,8 +183,8 @@ object Tables {
     // every downstream query sees one ts type regardless of layout; under
     // the UTC session zone the NTZ→LTZ cast is wall-clock identity.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    if (name == "events") df.schema("ts").dataType match {
+    val (df, bytes) = scan(spark, s"$sfDir/$name.parquet")
+    val normalized = if (name == "events") df.schema("ts").dataType match {
       // a long-typed ts is ONLY ever nanosAsLong's rendering of
       // TIMESTAMP(NANOS) — a hypothetical raw-micros-as-long layout would
       // silently come out 1000x too small here, so any NEW long-shaped
@@ -144,5 +203,6 @@ object Tables {
         throw new IllegalStateException(
           s"events.ts has unrecognized physical type $other — inspect the parquet and extend Tables.load")
     } else df
+    (normalized, bytes)
   }
 }

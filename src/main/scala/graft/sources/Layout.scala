@@ -435,6 +435,11 @@ object Layout {
     * still serves the erased user's rows byte-for-byte). Each invocation
     * still computes its erasure from a full archive of the parquet inputs
     * — nothing of the QUERY's work is cached, only the fixture build.
+    *
+    * A master is keyed by tag, sfDir and the semantic hash of `ev`'s
+    * analyzed plan: canonicalization erases expression ids, so the two
+    * erase audits (each loading events afresh) still share one master,
+    * while a differently shaped `ev` under the same tag gets its own.
     */
   private val archiveMasters =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -458,7 +463,7 @@ object Layout {
 
   private[graft] def stagedArchiveClone(spark: SparkSession, sfDir: String,
                                         ev: DataFrame, tag: String): String = {
-    val master = archiveMasters.getOrElseUpdate(s"$tag#$sfDir", {
+    val master = archiveMasters.getOrElseUpdate(s"$tag#$sfDir#${ev.semanticHash()}", {
       val dir = java.nio.file.Files.createTempDirectory(s"${tag}_master").toString
       // a failed build is not cached: drop its partial tree so the next
       // call starts from an empty directory and /tmp keeps no orphan

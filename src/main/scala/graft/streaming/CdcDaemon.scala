@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** New-table re-discovery — the reference's own TODO (`server.go:133`
@@ -39,12 +40,22 @@ final class CdcDaemon(
 
   private val attached = scala.collection.mutable.LinkedHashMap.empty[String, StreamingQuery]
   private var timer: Option[ScheduledExecutorService] = None
+  private val failures = new AtomicLong()
+  @volatile private var lastError: Option[String] = None
 
   /** Tables currently under capture (schema-qualified, discovery order). */
   def tables: Seq[String] = synchronized { attached.keys.toSeq }
 
   /** Active capture queries, one per attached table. */
   def queries: Seq[StreamingQuery] = synchronized { attached.values.toSeq }
+
+  /** Timer polls that threw since [[start]] (explicit [[rescan]] calls
+    * throw to their caller and are not counted).
+    */
+  def pollFailures: Long = failures.get
+
+  /** The most recent failed poll's error, `Class: message`. */
+  def lastPollError: Option[String] = lastError
 
   /** One discovery pass: enumerate matching tables, attach capture for any
     * not yet under it. Returns the newly attached names (empty when the
@@ -59,9 +70,10 @@ final class CdcDaemon(
     fresh
   }
 
-  /** Start polling the catalog every `pollIntervalMs`. Errors in a poll
-    * (catalog briefly unreachable) are swallowed so one failed enumeration
-    * never kills re-discovery — the next tick retries.
+  /** Start polling the catalog every `pollIntervalMs`. A failed poll
+    * (catalog briefly unreachable) is counted in [[pollFailures]] and kept
+    * as [[lastPollError]], and never kills re-discovery: the next tick
+    * retries.
     */
   def start(pollIntervalMs: Long): this.type = synchronized {
     require(timer.isEmpty, "daemon already started")
@@ -69,7 +81,10 @@ final class CdcDaemon(
       val th = new Thread(r, "cdc-daemon-rescan"); th.setDaemon(true); th
     }
     ex.scheduleWithFixedDelay(
-      () => try rescan() catch { case scala.util.control.NonFatal(_) => () },
+      () => try rescan() catch { case scala.util.control.NonFatal(e) =>
+        lastError = Some(s"${e.getClass.getName}: ${e.getMessage}")
+        failures.incrementAndGet(); ()
+      },
       pollIntervalMs, pollIntervalMs, TimeUnit.MILLISECONDS)
     timer = Some(ex)
     this

@@ -168,6 +168,10 @@ object CdcSource {
     private val feeds = new java.util.concurrent.ConcurrentHashMap[String, MemoryFeed]()
     def get(name: String): MemoryFeed =
       feeds.computeIfAbsent(name, _ => new MemoryFeed)
+    /** Install a caller-built feed (e.g. one that instruments its polls)
+      * under `name`, replacing any feed registered there.
+      */
+    def register(name: String, feed: MemoryFeed): Unit = { feeds.put(name, feed); () }
   }
 
   /** Deterministic row for synthetic id `id`: user cycles over `numUsers`
@@ -199,7 +203,7 @@ object CdcSource {
       feeds.computeIfAbsent(name, _ => new SyntheticFeed(numUsers))
   }
 
-  final class MemoryFeed extends ChangeFeed {
+  class MemoryFeed extends ChangeFeed {
     private val rows = new java.util.concurrent.ConcurrentSkipListMap[Long, CdcStream.RawChange]()
     def append(rs: CdcStream.RawChange*): Unit = rs.foreach(r => rows.put(r.event_id, r))
     override def latestId(): Long = if (rows.isEmpty) -1L else rows.lastKey()
@@ -323,9 +327,19 @@ object CdcSource {
       * scheduled backfill. Long.MaxValue = normal unbounded trigger.
       */
     @volatile private var availableNowTail: Long = Long.MaxValue
+    /** The uncapped tail the last probe read; `None` before the first. */
+    @volatile private var lastTail: Option[Long] = None
+    /** One `MAX(event_id)` round trip to the log, remembered for
+      * [[reportLatestOffset]].
+      */
+    private def probeTail(): Long = {
+      val t = latestIdOf(spec)
+      lastTail = Some(t)
+      t
+    }
     override def prepareForTriggerAvailableNow(): Unit =
-      availableNowTail = latestIdOf(spec)
-    override def latestOffset(): Offset = CdcOffset(latestIdOf(spec))
+      availableNowTail = probeTail()
+    override def latestOffset(): Offset = CdcOffset(probeTail())
     override def getDefaultReadLimit: ReadLimit =
       (maxIdsPerTrigger > 0L, maxBytesPerTrigger > 0L) match {
         case (true, true) => ReadLimit.compositeLimit(Array(
@@ -349,15 +363,20 @@ object CdcSource {
       case _ => latest
     }
     override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-      val latest = math.min(latestIdOf(spec), availableNowTail)
+      val latest = math.min(probeTail(), availableNowTail)
       val from = start.asInstanceOf[CdcOffset].maxId
       CdcOffset(capFor(limit, from, latest))
     }
     /** Progress reporting: the TRUE tail, so backlog (latest − committed)
       * is visible in `StreamingQueryProgress` even while batches are
-      * capped — the number an operator watches during catch-up.
+      * capped — the number an operator watches during catch-up. Spark
+      * calls this right after `latestOffset(start, limit)` in the same
+      * trigger, so it returns the uncapped tail that call just read
+      * instead of paying a second round trip; it probes only when nothing
+      * has been read yet.
       */
-    override def reportLatestOffset(): Offset = CdcOffset(latestIdOf(spec))
+    override def reportLatestOffset(): Offset =
+      CdcOffset(lastTail.getOrElse(probeTail()))
     override def initialOffset(): Offset = CdcOffset(startAfterId)
     override def deserializeOffset(json: String): Offset = CdcOffset.fromJson(json)
     override def commit(end: Offset): Unit = ()

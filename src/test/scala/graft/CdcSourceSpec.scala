@@ -165,4 +165,62 @@ class CdcSourceSpec extends SparkSuite {
     assert(spark.table("src_availnow").count() == 100L,
       "a stopped AvailableNow query must not deliver post-tail rows")
   }
+
+  /** Counts every tail probe the source makes. */
+  private class CountingFeed extends CdcSource.MemoryFeed {
+    val latestIdCalls = new java.util.concurrent.atomic.AtomicLong()
+    override def latestId(): Long = { latestIdCalls.incrementAndGet(); super.latestId() }
+  }
+
+  test("one tail probe per trigger: reportLatestOffset returns the tail latestOffset read") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val feed = new CountingFeed
+    CdcSource.FeedRegistry.register("spec_one_probe", feed)
+    (0L until 100L).foreach(i =>
+      feed.append(RawChange(i, t(i), i % 5, "click", s"""{"k":$i}""")))
+    val stream = new CdcSource.CdcMicroBatchStream(
+      CdcSource.MemorySpec("spec_one_probe"), numPartitions = 2, maxIdsPerTrigger = 30L)
+    // nothing read yet: the progress call probes on its own
+    assert(stream.reportLatestOffset() == CdcSource.CdcOffset(99L))
+    assert(feed.latestIdCalls.get == 1L)
+    // Spark's per-trigger protocol for an admission-controlled source
+    var start: CdcSource.CdcOffset = CdcSource.CdcOffset(-1L)
+    (1 to 4).foreach { trigger =>
+      val end = stream.latestOffset(start, ReadLimit.maxRows(30L)).asInstanceOf[CdcSource.CdcOffset]
+      assert(end.maxId == math.min(99L, start.maxId + 30L), s"trigger $trigger not capped")
+      // the true tail, even though the batch is capped
+      assert(stream.reportLatestOffset() == CdcSource.CdcOffset(99L))
+      assert(feed.latestIdCalls.get == 1L + trigger, s"trigger $trigger probed the tail twice")
+      start = end
+    }
+    // a tail that moved since the trigger's probe shows up on the next trigger
+    feed.append(RawChange(100L, t(100), 0L, "click", """{"k":100}"""))
+    stream.latestOffset(start, ReadLimit.maxRows(30L))
+    assert(stream.reportLatestOffset() == CdcSource.CdcOffset(100L))
+  }
+
+  test("capped query: progress reports the true tail while batches stay capped") {
+    import spark.implicits._
+    val feed = new CountingFeed
+    CdcSource.FeedRegistry.register("spec_progress_tail", feed)
+    (0L until 100L).foreach(i =>
+      feed.append(RawChange(i, t(i), i % 5, "click", s"""{"k":$i}""")))
+    val q = spark.readStream.format("graft.streaming.CdcSourceProvider")
+      .option("feed", "spec_progress_tail").option("maxIdsPerTrigger", "30").load()
+      .writeStream.format("memory").queryName("src_progress_tail")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .outputMode("append").start()
+    assert(q.awaitTermination(120000), "AvailableNow query must stop by itself")
+    val ids = spark.table("src_progress_tail").select("event_id").as[Long].collect()
+    assert(ids.sorted.toSeq == (0L until 100L), s"delivery broken: ${ids.length} rows")
+    val progs = q.recentProgress.filter(_.numInputRows > 0)
+    val capped = progs.filter(_.sources.head.endOffset != """{"maxId":99}""")
+    assert(capped.nonEmpty, "the cap must leave batches short of the tail")
+    assert(progs.forall(_.sources.head.latestOffset == """{"maxId":99}"""),
+      s"progress lost the true tail: ${progs.map(_.sources.head.latestOffset).toSeq}")
+    // one probe when the drain is prepared, then at most one per trigger:
+    // never two per data batch
+    assert(feed.latestIdCalls.get <= 1L + progs.length + 1L,
+      s"${feed.latestIdCalls.get} tail probes for ${progs.length} batches")
+  }
 }

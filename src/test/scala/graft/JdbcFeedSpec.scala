@@ -265,6 +265,38 @@ class JdbcFeedSpec extends SparkSuite {
     }
   }
 
+  test("daemon: failed polls are counted, and polling goes on until the catalog answers") {
+    import graft.streaming.CdcDaemon
+    // no `create=true`: every catalog call fails until the database exists
+    val url = "jdbc:derby:memory:daemon_polls"
+    val daemon = new CdcDaemon(url, "APP", "(?i)^polled", (table, spec) =>
+      CdcCatalog.readAll(spark, Seq(spec))
+        .writeStream.format("memory").queryName("daemon_polls_" + table.replace(".", "_").toLowerCase)
+        .outputMode("append").start())
+    try {
+      assert(daemon.pollFailures == 0L && daemon.lastPollError.isEmpty)
+      daemon.start(pollIntervalMs = 50L)
+      def await(cond: => Boolean, what: String): Unit = {
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(cond, what)
+      }
+      await(daemon.pollFailures >= 1L, "a failed poll must be counted")
+      val seen = daemon.pollFailures
+      await(daemon.pollFailures > seen, "the daemon must keep polling after a failure")
+      assert(daemon.lastPollError.exists(_.contains("SQLException")),
+        s"last error not kept: ${daemon.lastPollError}")
+      // the catalog comes up: the next poll attaches, and counting stops
+      exec("jdbc:derby:memory:daemon_polls;create=true",
+        "CREATE TABLE polled (event_id BIGINT PRIMARY KEY, ts TIMESTAMP, " +
+          "user_id BIGINT, event_type VARCHAR(32), props VARCHAR(500))")
+      await(daemon.tables == Seq("APP.POLLED"), "a poll after the failures must attach the table")
+      val settled = daemon.pollFailures
+      Thread.sleep(300)
+      assert(daemon.pollFailures == settled, "successful polls must not count as failures")
+    } finally daemon.stop()
+  }
+
   test("generic daemon: a table of ANY shape created mid-stream is captured without restart") {
     import graft.streaming.CdcDaemon
     withDb("genredisc") { url =>

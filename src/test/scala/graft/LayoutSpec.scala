@@ -519,4 +519,33 @@ class LayoutSpec extends SparkSuite {
       "erasing one clone must not reach through the hardlinks into the master")
     assert(after2.count() == total)
   }
+
+  test("COW staging: one master per frame shape, shared across fresh loads of the same frame") {
+    import java.nio.file.{Files, Path, Paths}
+    // the erase audits' shape: each call loads and normalizes events afresh
+    def ev() = graft.cdc.EventLog.normalize(Tables.load(spark, sf, "events"))
+      .select(col("event_id"), col("ts"), col("user_id"), col("op"), col("props"))
+    def dataFiles(dir: String): Seq[Path] = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(Paths.get(dir).relativize(_)).toSeq.sortBy(_.toString)
+      finally walk.close()
+    }
+    // two clones share a master iff their data files are the same inodes
+    def sameMaster(a: String, b: String): Boolean = {
+      val fa = dataFiles(a)
+      fa.nonEmpty && fa == dataFiles(b) &&
+        fa.forall(f => Files.isSameFile(Paths.get(a).resolve(f), Paths.get(b).resolve(f)))
+    }
+    val a = Layout.stagedArchiveClone(spark, sf, ev(), "erase_key_spec")
+    val b = Layout.stagedArchiveClone(spark, sf, ev(), "erase_key_spec")
+    assert(sameMaster(a, b), "two fresh loads of the same frame must share one master")
+    // same tag, differently filtered frame: its own master, its own rows
+    val filtered = ev().filter(col("user_id") % 2 === 0)
+    val c = Layout.stagedArchiveClone(spark, sf, filtered, "erase_key_spec")
+    assert(!sameMaster(a, c), "a differently filtered frame must not reuse the master")
+    assert(spark.read.parquet(c).count() == filtered.count())
+    assert(spark.read.parquet(a).count() == ev().count())
+  }
 }
