@@ -9,14 +9,15 @@ import org.apache.spark.sql.SparkSession
   * capture), then erase a 10k-entity backlog and measure BOTH deployment
   * shapes:
   *
-  *  - '''in-place''' ([[CdcStream.withPrevStateTwsErasing]] on the SAME
+  *  - '''in-place''' (`CdcStream.withPrevStateTws(ds, erased)` on the SAME
   *    checkpoint): the erased keys here are exactly the users of the next
   *    wave (recurring keys — the sentinel-free case), so the measured
   *    micro-batch carries one event per erased key; an identically-sized
   *    NO-ERASURE control wave runs first, and the difference is the
   *    in-place erasure cost itself — which must be ~zero, because only
   *    the touched keys' entries change and the non-erased millions sleep;
-  *  - '''offline rewrite''' ([[StateErasure.erasePrevImageStateTws]] →
+  *  - '''offline rewrite''' ([[StateErasure.erasePrevImageState]] over
+  *    [[StateMigration.readPrevImageStateTws]] →
   *    fresh checkpoint via the erasing initial-state resume): read every
   *    state row, anti-join, re-seed — scales with TOTAL key count, the
   *    price of the layout rewrite and the reason in-place is the default
@@ -90,7 +91,7 @@ object EraseScaleBench {
       val waveIds = (n + nErased) until (n + 2L * nErased)
       val erased: Map[Long, Long] =
         waveIds.map(id => (id % users) -> (n + nErased - 1)).toMap
-      val q = CdcStream.withPrevStateTwsErasing(src(), erased)
+      val q = CdcStream.withPrevStateTws(src(), erased)
         .writeStream.format("noop")
         .option("checkpointLocation", chk).outputMode("append").start()
       val t0 = System.nanoTime()
@@ -116,12 +117,13 @@ object EraseScaleBench {
         .filterNot(_._1 == driverId % users).toMap
       val dir = java.nio.file.Files.createTempDirectory("erase_scale_chk_b").toString
       val t0 = System.nanoTime()
-      val stE = StateErasure.erasePrevImageStateTws(spark, chk, erased2.keySet)
+      val stE = StateErasure.erasePrevImageState(
+        StateMigration.readPrevImageStateTws(spark, chk), erased2.keySet)
       // fresh checkpoint: the source must resume AFTER everything the old
       // query consumed (the migration offset-handoff discipline), or batch
       // 0 would re-ingest the whole history instead of seeding state
-      val q = CdcStream.withPrevStateTwsErasingFrom(
-          src(startAfter = n + 2L * nErased - 1), erased2, stE)
+      val q = CdcStream.withPrevStateTws(
+          src(startAfter = n + 2L * nErased - 1), erased2, Some(stE))
         .writeStream.format("noop")
         .option("checkpointLocation", dir).outputMode("append").start()
       feed.advanceTo(driverId); q.processAllAvailable() // batch 0 persists the seed
@@ -166,7 +168,7 @@ object EraseScaleBench {
         .filter(u => u < users && u != driver2 % users).distinct
       val chkC = java.nio.file.Files.createTempDirectory("erase_scale_chk_c").toString
       val store = graft.streaming.EraseEverywhere.TwsOffline("tws", chkB, { filtered =>
-        val q = CdcStream.withPrevStateTwsFrom(src(startAfter = driverId), filtered)
+        val q = CdcStream.withPrevStateTws(src(startAfter = driverId), initial = Some(filtered))
           .writeStream.format("noop")
           .option("checkpointLocation", chkC).outputMode("append").start()
         feed.advanceTo(driver2); q.processAllAvailable() // batch 0 commits the seed

@@ -597,7 +597,7 @@ object Graft {
     graft.streaming.ProtoWire.eventFrames(schema, table, op, id, payload, changes)
 
   /** The archive's recorded erasure set (user → cutoff event id) — feeds
-    * [[CdcStream.withPrevStateTwsErasing]] (in-place targeted key removal
+    * `CdcStream.withPrevStateTws(ds, erased)` (in-place targeted key removal
     * on an existing transformWithState checkpoint) and the offline
     * rewrites in [[graft.streaming.StateErasure]]; see that object for
     * the complete erase-to-durable-state recipe both stateful APIs get.

@@ -98,7 +98,7 @@ object SparkEntry {
 
   /** Point-in-time erasure SEMANTICS in batch — the oracle-expressible twin
     * of the streaming state erasure ([[graft.streaming.StateErasure]] /
-    * `ErasingPrevImageProcessor`): the erased entity's rows at or below the
+    * `PrevImageProcessor` with an erasure set): the erased entity's rows at or below the
     * tombstone cutoff are gone, its first post-cutoff event sees
     * `previous = null` (first-sight), every other user's prev-image chain
     * is untouched, and null-key rows survive (the `<=>` null-proofing the

@@ -613,7 +613,7 @@ object DedupStream {
     // TTL expiry fires the handler with an EMPTY iterator — remove and do
     // NOT re-arm: re-arming a timed-out key writes the entry back and it
     // re-fires forever, so the store never shrinks (the same trap
-    // documented at CdcStream.withPrevState)
+    // documented at CdcStream's classic prev-image fold)
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
       // deterministic within a micro-batch: the min doc_id claims an

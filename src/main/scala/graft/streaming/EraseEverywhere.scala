@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * erasure-set publication ([[StateErasure.erasureSet]]), sentinel
   * injection through the live feed ([[StateErasure.eraseSentinels]]), the
   * in-place transformWithState removal
-  * ([[CdcStream.ErasingPrevImageProcessor]]), the offline rewrites for the
+  * ([[CdcStream.PrevImageProcessor]]), the offline rewrites for the
   * classic/generic layouts, and the fingerprint-store filters. A production
   * user had to sequence five calls across the archive and N checkpoints to
   * erase one user everywhere — and nothing verified they did it completely.
@@ -138,7 +138,7 @@ object EraseEverywhere {
     * JDBC table itself (ids above the live max, so the source delivers
     * them — reaching keys that never recur), then runs `resumeErasing`:
     * the deployment's "bounce the query under
-    * [[CdcStream.withPrevStateTwsErasing]] with this erasure set" action
+    * `CdcStream.withPrevStateTws(ds, erased)` with this erasure set" action
     * (in production a config flip + restart; the handler drops sentinels
     * unconditionally and stamps `erasedAt` receipts, so the bounce is
     * idempotent).
@@ -170,13 +170,13 @@ object EraseEverywhere {
   }
 
   /** BY-TABLE transformWithState prev-image state — the multi-table
-    * daemon's (table, user) key ([[CdcStream.withPrevStateByTableTwsFrom]]
+    * daemon's (table, user) key ([[CdcStream.withPrevStateByTableTws]]
     * over a [[CdcCatalog.readAll]] union): erased IN PLACE like
     * [[TwsInPlace]], but the entity must be reached in EVERY captured
     * table it is known in, so sentinels are inserted into EACH listed
     * table (each insert allocates ids above THAT table's own live max —
     * per-table id spaces are independent) and the bounce runs
-    * [[CdcStream.withPrevStateByTableTwsErasing]]. The erasure set's
+    * `withPrevStateByTableTws(ds, k => erased.get(k._2))`. The erasure set's
     * cutoffs are applied in every table's id space, so they must be
     * globally valid — deployments whose tables share the archive's id
     * space get that from the tombstones; otherwise the archive-absent
@@ -210,7 +210,7 @@ object EraseEverywhere {
     * `spark.sql.streaming.minBatchesToRetain`, but present on disk until
     * then). The rewrite reads the state, anti-joins the erased keys, hands
     * the filtered frame to `resumeFrom` (the deployment's
-    * "[[CdcStream.withPrevStateTwsFrom]] on a FRESH checkpoint" action),
+    * "`CdcStream.withPrevStateTws(ds, initial = ...)` on a FRESH checkpoint" action),
     * then decommissions the old directory whole — no version of any file
     * survives. Costs the full-store reshuffle `EraseScaleBench` measured
     * (grows with key count, vs in-place staying flat) — use [[TwsInPlace]]
@@ -226,7 +226,8 @@ object EraseEverywhere {
         .map(_._1)(org.apache.spark.sql.Encoders.scalaLong))
     private[graft] def erase(spark: SparkSession, erased: Map[Long, Long],
                              ledger: String): Store = {
-      val filtered = StateErasure.erasePrevImageStateTws(spark, checkpointDir, erased.keySet)
+      val filtered = StateErasure.erasePrevImageState(
+        StateMigration.readPrevImageStateTws(spark, checkpointDir), erased.keySet)
       val fresh = resumeFrom(filtered)
       decommission(spark, checkpointDir, fresh, ledger, name)
       copy(checkpointDir = fresh)
@@ -240,7 +241,7 @@ object EraseEverywhere {
     * receipt). The orchestrator reads the checkpoint's state, anti-joins
     * the erased keys, hands the filtered frame to `resumeFrom` — the
     * deployment's "start the query on a FRESH checkpoint via
-    * [[CdcStream.withPrevStateFrom]]" action, returning the new
+    * `CdcStream.withPrevState(ds, initial = ...)`" action, returning the new
     * checkpoint dir once the first batch commits — then DECOMMISSIONS the
     * old checkpoint directory (its files still hold the payload bytes;
     * leaving them is the compliance hole the one-call form exists to
@@ -256,7 +257,8 @@ object EraseEverywhere {
         .map(_._1)(org.apache.spark.sql.Encoders.scalaLong))
     private[graft] def erase(spark: SparkSession, erased: Map[Long, Long],
                              ledger: String): Store = {
-      val filtered = StateErasure.erasePrevImageState(spark, checkpointDir, erased.keySet)
+      val filtered = StateErasure.erasePrevImageState(
+        StateMigration.readPrevImageState(spark, checkpointDir), erased.keySet)
       val fresh = resumeFrom(filtered)
       decommission(spark, checkpointDir, fresh, ledger, name)
       copy(checkpointDir = fresh)
@@ -285,8 +287,9 @@ object EraseEverywhere {
     }
     private[graft] def erase(spark: SparkSession, erased: Map[Long, Long],
                              ledger: String): Store = {
-      val filtered = StateErasure.erasePrevImageStateByRowKey(
-        spark, checkpointDir, rowKeysOf.artifacts(erased.keySet))
+      val filtered = StateErasure.erasePrevImageState(
+        StateMigration.readPrevImageStateByRowKey(spark, checkpointDir),
+        rowKeysOf.artifacts(erased.keySet))
       val fresh = resumeFrom(filtered)
       decommission(spark, checkpointDir, fresh, ledger, name)
       copy(checkpointDir = fresh)
@@ -544,8 +547,10 @@ object EraseEverywhere {
   /** Sentinel command rows inserted into the CAPTURED TABLE ITSELF — the
     * "through the real feed" half the memory-harness specs stubbed: ids
     * allocated above the table's live max (so the monotone source actually
-    * delivers them), `event_type = 'erase'`, null ts/props. The handler
-    * drops them unconditionally, so they never become events — they exist
+    * delivers them), `event_type = 'erase'`, null ts/props. Every typed
+    * consumer of the feed — the prev-image fold on both stateful APIs and
+    * the stateless tail — drops them unconditionally, so they never become
+    * events, not even for subscribers that erase nothing — they exist
     * to make the stateful handler FIRE for keys that would otherwise never
     * recur. Retry-wrapped AND single-transaction: the insert races the
     * capture's own poller for row locks, and a lock-victim retry must not
@@ -1299,7 +1304,7 @@ object EraseEverywhere {
   /** By-table transformWithState prev-image state erased in place with
     * PER-(table, user) cutoffs: sentinels are inserted into each table the
     * erasure set names (ids above THAT table's own live max), then the
-    * bounce runs [[CdcStream.withPrevStateByTableTwsErasingKeys]]. Same
+    * bounce runs `CdcStream.withPrevStateByTableTws(ds, erasedKeys.get)`. Same
     * latest-version scope caveat as [[TwsInPlace]].
     */
   final case class TwsInPlacePerTable(name: String, checkpointDir: String,

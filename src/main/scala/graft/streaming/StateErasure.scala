@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * Two deployment shapes, matching the two stateful APIs:
   *
   *  - '''transformWithState (in-place)''' — resume the EXISTING checkpoint
-  *    under [[CdcStream.ErasingPrevImageProcessor]]
-  *    ([[CdcStream.withPrevStateTwsErasing]]): per-key targeted removal
+  *    under [[CdcStream.PrevImageProcessor]]
+  *    (`CdcStream.withPrevStateTws(ds, erased)`): per-key targeted removal
   *    driven by the broadcast erasure set ([[erasureSet]] — the tombstone
   *    table the archive already writes), restart-idempotent, with the
   *    tombstone cutoff dropping replayed pre-erasure rows in-handler. Keys
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *    the recipe is the [[StateMigration]] one with a filter in the
   *    middle: read the checkpoint's state through the state data source,
   *    anti-join the tombstones ([[erasePrevImageState]]), and resume on a
-  *    FRESH checkpoint via `withPrevStateFrom(..., initial)` +
+  *    FRESH checkpoint via `withPrevState(..., initial)` +
   *    `StateMigration.committedOffset` — the first batch persists the
   *    erased layout through the normal commit path. The OLD checkpoint
   *    directory still holds the payload bytes; delete it once the new
@@ -71,9 +71,10 @@ object StateErasure {
     * to fire (and clear) even for a user who never sends another event.
     * Inject into the same feed the query reads — with a monotone source
     * (the CDC feed, a JDBC table with a sequence id) pass `firstId` above
-    * the source's current max so the rows are actually delivered; the
-    * handler drops `event_type == "erase"` rows unconditionally, so the id
-    * never enters the fold and no CdcEvent is emitted for a sentinel. With
+    * the source's current max so the rows are actually delivered; the typed
+    * prev-image fold and `statelessEvents` drop `event_type == "erase"` rows
+    * unconditionally, so the id never enters the fold and no event is
+    * emitted for a sentinel. With
     * no `firstId` each sentinel reuses its cutoff as the id (the
     * memory-harness shape).
     */
@@ -87,7 +88,7 @@ object StateErasure {
   /** By-table sentinels: one command row per (table, erased user) — a
     * multi-table capture's handler fires per (table, user) key, so each
     * table the entity is known in needs its own nudge
-    * ([[CdcStream.withPrevStateByTableTwsErasing]]).
+    * ([[CdcStream.withPrevStateByTableTws]]).
     */
   def eraseSentinelsByTable(erased: Map[Long, Long], tables: Seq[String],
                             firstId: Long = -1L): Seq[CdcStream.TableRawChange] = {
@@ -101,35 +102,21 @@ object StateErasure {
     }
   }
 
-  /** Offline rewrite, classic prev-image layout: the old checkpoint's
-    * state minus the erased keys — the initial-state frame for
-    * `withPrevStateFrom` on a fresh checkpoint.
+  /** Offline rewrite of any prev-image layout: the state frame read from
+    * the old checkpoint minus the erased keys — the initial state for the
+    * matching entry point on a FRESH checkpoint. Pair the reader with the
+    * resume side:
+    *  - [[StateMigration.readPrevImageState]] → `withPrevState(..., initial)`;
+    *  - [[StateMigration.readPrevImageStateTws]] → `withPrevStateTws(...,
+    *    initial)` (the in-place path is usually better there — this is the
+    *    fresh-checkpoint migration-plus-erasure combination);
+    *  - [[StateMigration.readPrevImageStateByRowKey]] →
+    *    `withPrevStateByRowKey(..., initial)`, the erased entity named by
+    *    its ROW KEY values (e.g. the natural-key strings of the user's rows
+    *    across captured tables).
     */
-  def erasePrevImageState(spark: SparkSession, checkpointDir: String,
-                          erased: Set[Long]): Dataset[(Long, String)] =
-    StateMigration.readPrevImageState(spark, checkpointDir)
-      .filter(r => !erased.contains(r._1))
-
-  /** Offline rewrite, transformWithState prev-image layout (the in-place
-    * path is usually better there — this exists for the fresh-checkpoint
-    * migration-plus-erasure combination).
-    */
-  def erasePrevImageStateTws(spark: SparkSession, checkpointDir: String,
-                             erased: Set[Long]): Dataset[(Long, String)] =
-    StateMigration.readPrevImageStateTws(spark, checkpointDir)
-      .filter(r => !erased.contains(r._1))
-
-  /** Offline rewrite for the GENERIC capture's prev-image state
-    * ([[CdcStream.withPrevStateByRowKey]] — string row keys from a JSON
-    * path into the dynamic payload): the erased entity is named by its
-    * ROW KEY values (e.g. the natural-key strings of the user's rows
-    * across captured tables). Resume side:
-    * [[CdcStream.withPrevStateByRowKeyFrom]].
-    */
-  def erasePrevImageStateByRowKey(spark: SparkSession, checkpointDir: String,
-                                  erasedKeys: Set[String]): Dataset[(String, String)] =
-    StateMigration.readPrevImageStateByRowKey(spark, checkpointDir)
-      .filter(r => !erasedKeys.contains(r._1))
+  def erasePrevImageState[K](st: Dataset[(K, String)], erased: Set[K]): Dataset[(K, String)] =
+    st.filter(r => !erased.contains(r._1))
 
   /** Text-dedup bucket store minus buckets whose EXEMPLAR is an erased
     * document: the stored doc_id is the erased user's fingerprintable

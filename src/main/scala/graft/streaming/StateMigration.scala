@@ -52,7 +52,8 @@ object StateMigration {
 
   /** State rows of a transformWithState prev-image checkpoint
     * ([[CdcStream.withPrevStateTws]]'s layout — named state variable
-    * "prev"): (user_id, prev-payload JSON). The reverse-migration reader.
+    * "prev", beside the erasure receipt "erasedAt"): (user_id,
+    * prev-payload JSON). The reverse-migration reader.
     */
   def readPrevImageStateTws(spark: SparkSession,
                             checkpointDir: String): Dataset[(Long, String)] = {
@@ -120,7 +121,7 @@ object StateMigration {
       .map(CdcSource.CdcOffset.fromJson(_).maxId)
 
   /** State rows of a BY-TABLE transformWithState prev-image checkpoint
-    * ([[CdcStream.withPrevStateByTableTwsFrom]]'s layout — (table, user)
+    * ([[CdcStream.withPrevStateByTableTws]]'s layout — (table, user)
     * tuple key, named state variable "prev"): ((table, user_id), prev).
     */
   def readPrevImageStateByTableTws(spark: SparkSession, checkpointDir: String)
@@ -137,7 +138,7 @@ object StateMigration {
   /** State rows of a GENERIC-capture prev-image checkpoint
     * ([[CdcStream.withPrevStateByRowKey]]'s layout — string row key from a
     * JSON path into the dynamic payload): (row_key, prev-payload JSON).
-    * Resume side: [[CdcStream.withPrevStateByRowKeyFrom]].
+    * Resume side: `CdcStream.withPrevStateByRowKey(..., initial)`.
     */
   def readPrevImageStateByRowKey(spark: SparkSession,
                                  checkpointDir: String): Dataset[(String, String)] = {
@@ -231,8 +232,8 @@ object StateMigration {
     * move without state loss. The repartition recipe is the migration
     * one under a different conf: read the old checkpoint's state
     * ([[readPrevImageState]] / [[readPrevImageStateTws]] — one task per
-    * OLD partition), then START the resume-side query (`withPrevStateFrom`
-    * / `withPrevStateTwsFrom` + [[committedOffset]]) inside this scope —
+    * OLD partition), then START the resume-side query (`withPrevState` /
+    * `withPrevStateTws` with `initial` + [[committedOffset]]) inside this scope —
     * its batch 0 shuffles the initial state by key into the NEW layout
     * and pins `n` into the NEW checkpoint. Distributed end to end: the
     * only driver-side piece is the conf set/restore. Works in both

@@ -85,11 +85,18 @@ class CdcContinuousSpec extends SparkSuite {
       .trigger(Trigger.Continuous("1 second"))
       .start()
     try {
+      // id 12 is an erasure sentinel (StateErasure.eraseSentinels' shape):
+      // a command for the stateful handlers, never a subscriber event; id
+      // 13 follows it on the same reader, so its arrival means 12 was read
       feed.append(
         RawChange(10, t(0), 1, "purchase", """{"k": 1, "secret": "x"}"""),
-        RawChange(11, t(1), 2, "error", """{"k": 2}"""))
-      await(ContinuousCollector.queue("cont2").size >= 2)
+        RawChange(11, t(1), 2, "error", """{"k": 2}"""),
+        RawChange(12, null, 3, "erase", null),
+        RawChange(13, t(3), 4, "view", """{"k": 4}"""))
       import scala.jdk.CollectionConverters._
+      def ids = ContinuousCollector.queue("cont2").asScala.toSeq.map(_.takeWhile(_ != '|'))
+      await(ids.contains("13"))
+      assert(ids.sorted == Seq("10", "11", "13"), s"sentinel delivered as an event: $ids")
       val byId = ContinuousCollector.queue("cont2").asScala.toSeq.sortBy(_.takeWhile(_ != '|'))
       // UPDATE row: envelope present, redaction applied inside the payload
       assert(byId.head.contains(""""op":"UPDATE""""), byId.head)

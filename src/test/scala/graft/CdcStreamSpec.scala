@@ -65,25 +65,33 @@ class CdcStreamSpec extends SparkSuite {
       RawChange(1, t(0), 1, "signup", """{"k":1}"""),
       RawChange(2, t(1), 1, "purchase", """{"k":2,"x":"a"}"""),
       RawChange(3, t(0), 2, "signup", """{"k":9}"""))
+    // a null payload clears the image (the classic path used to die
+    // storing it: GroupState refuses null), and an erasure sentinel is a
+    // command both APIs drop, not an event
     val batch2 = Seq(
       RawChange(4, t(2), 1, "view", """{"k":5}"""),
-      RawChange(5, t(2), 2, "error", """{"k":9}"""))
+      RawChange(5, t(2), 2, "error", """{"k":9}"""),
+      RawChange(6, t(3), 1, "purchase", null),
+      RawChange(7, null, 2, "erase", null))
+    val batch3 = Seq(RawChange(8, t(4), 1, "view", """{"k":8}"""))
     def run(name: String, f: org.apache.spark.sql.Dataset[RawChange] =>
         org.apache.spark.sql.Dataset[CdcEvent]): Seq[String] = {
       val in = MemoryStream[RawChange]
       val q = f(in.toDS()).writeStream.format("memory")
         .queryName(name).outputMode("append").start()
       try {
-        in.addData(batch1: _*); q.processAllAvailable()
-        in.addData(batch2: _*); q.processAllAvailable()
+        Seq(batch1, batch2, batch3).foreach { b => in.addData(b: _*); q.processAllAvailable() }
         spark.table(name).orderBy("event_id").collect().map(_.toString).toSeq
       } finally q.stop()
     }
     try {
       val modern = run("tws_out", ds => CdcStream.withPrevStateTws(ds))
       val classic = run("classic_out", ds => CdcStream.withPrevState(ds))
-      assert(modern.size == 5)
       assert(modern == classic, s"API paths diverged:\n$modern\nvs\n$classic")
+      val byId = spark.table("classic_out").as[CdcEvent].collect().map(e => e.event_id -> e).toMap
+      assert(byId.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L, 8L), s"sentinel leaked: ${byId.keySet}")
+      assert(byId(6L).payload == null && byId(6L).previous == """{"k":5}""")
+      assert(byId(8L).previous == null, "a null payload must clear the prev-image")
     } finally {
       prior match {
         case Some(v) => spark.conf.set(key, v)

@@ -140,7 +140,7 @@ class EraseEverywhereSpec extends SparkSuite {
     val stores = Seq(
       TwsInPlace("tws", chkTws, url, "events", erased => {
         bounces += 1
-        withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chkTws) }
+        withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chkTws) }
       }),
       DedupBuckets("dedup", chkDd, { filtered =>
         val fresh = tmp("erase_e2e_dd_b")
@@ -236,7 +236,7 @@ class EraseEverywhereSpec extends SparkSuite {
       Seq(ClassicOffline("cls", chkA, { filtered =>
         val fresh = tmp("erase_cls_b"); freshDir = fresh
         val in2 = MemoryStream[RawChange]
-        val q2 = CdcStream.withPrevStateFrom(in2.toDS(), filtered).writeStream
+        val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(filtered)).writeStream
           .format("memory").queryName("ee_cls_resume")
           .option("checkpointLocation", fresh).outputMode("append").start()
         try {
@@ -279,7 +279,7 @@ class EraseEverywhereSpec extends SparkSuite {
       calls += 1
       val fresh = tmp("erase_clean_b")
       val in2 = MemoryStream[RawChange]
-      val q2 = CdcStream.withPrevStateFrom(in2.toDS(), filtered).writeStream
+      val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(filtered)).writeStream
         .format("memory").queryName(s"ee_clean_resume_$calls")
         .option("checkpointLocation", fresh).outputMode("append").start()
       try {
@@ -336,8 +336,7 @@ class EraseEverywhereSpec extends SparkSuite {
       try q.processAllAvailable() finally q.stop()
     }
     withRocks {
-      runBt(CdcStream.withPrevStateByTableTwsFrom(raw(),
-        spark.emptyDataset[((String, Long), String)]))
+      runBt(CdcStream.withPrevStateByTableTws(raw()))
     }
     assert(StateMigration.readPrevImageStateByTableTws(spark, chk).collect().toMap ==
       Map(("t1", 1L) -> """{"k":1}""", ("t1", 2L) -> """{"k":2}""",
@@ -353,7 +352,7 @@ class EraseEverywhereSpec extends SparkSuite {
     val stores = Seq(EraseEverywhere.TwsInPlaceByTable("bytable", chk, url,
       Seq("t1", "t2"), erased => {
         bounces += 1
-        withRocks { runBt(CdcStream.withPrevStateByTableTwsErasing(raw(), erased)) }
+        withRocks { runBt(CdcStream.withPrevStateByTableTws(raw(), k => erased.get(k._2))) }
       }))
     val (rep, moved) = EraseEverywhere.runDetailed(spark, adir, Seq(1L), stores)
     assert(reportMap(rep)("bytable") == (2L, 0L),
@@ -425,8 +424,7 @@ class EraseEverywhereSpec extends SparkSuite {
       got.synchronized(got.sortBy(e => (e.table, e.event_id)).toVector)
     }
     withRocks {
-      runBt(CdcStream.withPrevStateByTableTwsFrom(raw(),
-        spark.emptyDataset[((String, Long), String)]))
+      runBt(CdcStream.withPrevStateByTableTws(raw()))
     }
 
     // one archive per table, ids overlapping across archives
@@ -446,7 +444,7 @@ class EraseEverywhereSpec extends SparkSuite {
     var lastErased: Map[(String, Long), Long] = Map.empty
     val stores = Seq(EraseEverywhere.TwsInPlacePerTable("pertable", chk, url, erased => {
       bounces += 1; lastErased = erased
-      withRocks { runBt(CdcStream.withPrevStateByTableTwsErasingKeys(raw(), erased)) }
+      withRocks { runBt(CdcStream.withPrevStateByTableTws(raw(), erased.get)) }
     }))
     val (rep, moved) = EraseEverywhere.runMultiArchive(spark, archives, Seq(1L), stores)
     val r = reportMap(rep)
@@ -478,7 +476,7 @@ class EraseEverywhereSpec extends SparkSuite {
     // cutoff (4) but below m2's (9) — a merged cutoff would drop it
     ins("m1", (6L, 1L, 100))
     val out = withRocks {
-      runBt(CdcStream.withPrevStateByTableTwsErasingKeys(raw(), lastErased))
+      runBt(CdcStream.withPrevStateByTableTws(raw(), lastErased.get))
     }
     val e6 = out.find(e => e.table == "m1" && e.event_id == 6L)
     assert(e6.isDefined,
@@ -514,7 +512,7 @@ class EraseEverywhereSpec extends SparkSuite {
         val fresh = tmp("erase_twsoff_b"); freshDir = fresh
         withRocks {
           val in2 = MemoryStream[RawChange]
-          val q2 = CdcStream.withPrevStateTwsFrom(in2.toDS(), filtered).writeStream
+          val q2 = CdcStream.withPrevStateTws(in2.toDS(), initial = Some(filtered)).writeStream
             .format("memory").queryName("ee_twsoff_resume")
             .option("checkpointLocation", fresh).outputMode("append").start()
           try {
@@ -546,7 +544,7 @@ class EraseEverywhereSpec extends SparkSuite {
       calls += 1
       val fresh = tmp("erase_ledger_b")
       val in2 = MemoryStream[RawChange]
-      val q2 = CdcStream.withPrevStateFrom(in2.toDS(), filtered).writeStream
+      val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(filtered)).writeStream
         .format("memory").queryName(s"ee_ledger_resume_$calls")
         .option("checkpointLocation", fresh).outputMode("append").start()
       try {
@@ -619,7 +617,7 @@ class EraseEverywhereSpec extends SparkSuite {
     withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url)), chkT) }
     val rep = reportMap(EraseEverywhere.run(spark, adir, Seq(1L),
       Seq(TwsInPlace("twsf2", chkT, url, "events", erased => {
-        withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chkT) }
+        withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chkT) }
       }))))
     assert(rep("archive") == (2L, 0L) && rep("twsf2") == (1L, 0L), s"got $rep")
     // state side: the stamped cutoff is the LIVE max (4), not the
@@ -665,7 +663,7 @@ class EraseEverywhereSpec extends SparkSuite {
         n += 1
         val fresh = tmp("erase_crash_b")
         val in2 = MemoryStream[RawChange]
-        val q2 = CdcStream.withPrevStateFrom(in2.toDS(), filtered).writeStream
+        val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(filtered)).writeStream
           .format("memory").queryName(s"ee_crash_resume_$n")
           .option("checkpointLocation", fresh).outputMode("append").start()
         try {
@@ -712,7 +710,7 @@ class EraseEverywhereSpec extends SparkSuite {
       n += 1
       val fresh = tmp(s"erase_fwd_b$n")
       val in2 = MemoryStream[RawChange]
-      val q2 = CdcStream.withPrevStateFrom(in2.toDS(), filtered).writeStream
+      val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(filtered)).writeStream
         .format("memory").queryName(s"ee_fwd_resume_$n")
         .option("checkpointLocation", fresh).outputMode("append").start()
       try {
@@ -754,7 +752,7 @@ class EraseEverywhereSpec extends SparkSuite {
     val chkT = tmp("erase_ratchet_tws")
     withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url)), chkT) }
     def store = TwsInPlace("rat", chkT, url, "events", erased => {
-      withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chkT) }
+      withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chkT) }
     })
     val rep1 = reportMap(EraseEverywhere.run(spark, adir, Seq(1L), Seq(store)))
     assert(rep1("rat") == (1L, 0L))
@@ -805,7 +803,7 @@ class EraseEverywhereSpec extends SparkSuite {
     val chk = tmp("erase_grown_tws")
     withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url)), chk) }
     def store = TwsInPlace("grown", chk, url, "events", erased => {
-      withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chk) }
+      withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chk) }
     })
     assert(reportMap(EraseEverywhere.run(spark, adir, Seq(1L), Seq(store)))
       .values.forall(_._2 == 0L))
@@ -864,7 +862,7 @@ class EraseEverywhereSpec extends SparkSuite {
 
     val rep = reportMap(EraseEverywhere.run(spark, adir, Seq(1L),
       Seq(TwsInPlace("cw", chk, url, "events", erased => {
-        withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chk) }
+        withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chk) }
       }))))
     assert(rep("cw") == (1L, 0L))
     assert(graft.streaming.StateErasure.erasureSet(spark, adir)(1L) == 4L,
@@ -886,7 +884,7 @@ class EraseEverywhereSpec extends SparkSuite {
     val chk = tmp("erase_revlive_tws")
     withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url)), chk) }
     def store = TwsInPlace("rvl", chk, url, "events", erased => {
-      withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chk) }
+      withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chk) }
     })
     assert(reportMap(EraseEverywhere.run(spark, adir, Seq(1L), Seq(store)))
       .values.forall(_._2 == 0L))
@@ -930,7 +928,7 @@ class EraseEverywhereSpec extends SparkSuite {
     val store = ClassicOffline("fr", chkA, { filtered =>
       val fresh = tmp("erase_fwdref_b")
       val in2 = MemoryStream[RawChange]
-      val q2 = CdcStream.withPrevStateFrom(in2.toDS(), filtered).writeStream
+      val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(filtered)).writeStream
         .format("memory").queryName("ee_fwdref_resume")
         .option("checkpointLocation", fresh).outputMode("append").start()
       try {
@@ -1049,7 +1047,7 @@ class EraseEverywhereSpec extends SparkSuite {
 
     val rep = reportMap(EraseEverywhere.run(spark, adir, Seq(1L),
       Seq(TwsInPlace("twsf", chkT, url, "events", erased => {
-        withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chkT) }
+        withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chkT) }
       }))))
     assert(rep("archive") == (0L, 0L) && rep("twsf") == (1L, 0L), s"got $rep")
     // the stamped cutoff must be the LIVE max (4): an archive-max cutoff
@@ -1112,7 +1110,7 @@ class EraseEverywhereSpec extends SparkSuite {
         val fresh = tmp("erase_livefeeds_b")
         withRocks {
           val in2 = MemoryStream[RawChange]
-          val q2 = CdcStream.withPrevStateTwsFrom(in2.toDS(), filtered).writeStream
+          val q2 = CdcStream.withPrevStateTws(in2.toDS(), initial = Some(filtered)).writeStream
             .format("memory").queryName("ee_livefeeds_resume")
             .option("checkpointLocation", fresh).outputMode("append").start()
           try {
@@ -1152,7 +1150,7 @@ class EraseEverywhereSpec extends SparkSuite {
     var broken = true
     def store = TwsInPlace("pu", chk, url, "events", erased => {
       val applied = if (broken) erased.view.filterKeys(_ != 2L).toMap else erased
-      withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), applied), chk) }
+      withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), applied), chk) }
     })
     val rep1 = reportMap(EraseEverywhere.run(spark, adir, Seq(1L, 2L), Seq(store)))
     assert(rep1("pu") == (2L, 1L), s"user 2's state must survive the broken bounce: $rep1")
@@ -1187,7 +1185,7 @@ class EraseEverywhereSpec extends SparkSuite {
     val chk = tmp("erase_preview_tws")
     withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url)), chk) }
     def store = TwsInPlace("pv", chk, url, "events", erased => {
-      withRocks { runTws(CdcStream.withPrevStateTwsErasing(jdbcSrc(url), erased), chk) }
+      withRocks { runTws(CdcStream.withPrevStateTws(jdbcSrc(url), erased), chk) }
     })
     def previewMap(users: Seq[Long]): Map[(String, Long), Long] =
       EraseEverywhere.preview(spark, adir, users, Seq(store)).collect()

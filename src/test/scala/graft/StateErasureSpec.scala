@@ -1,8 +1,27 @@
 package graft
 
 import graft.streaming.{CdcStream, DedupStream, SemDedupStream, StateErasure, StateMigration}
-import graft.streaming.CdcStream.RawChange
+import graft.streaming.CdcStream.{CdcEvent, RawChange}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues,
+  TTLConfig, ValueState}
+
+/** The transformWithState prev-image layout written before the plain and
+  * erasing processors became one: "prev" alone, no "erasedAt" receipt.
+  */
+class PrevOnlyProcessor extends StatefulProcessor[Long, RawChange, CdcEvent] {
+  @transient private var prev: ValueState[String] = _
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+    prev = getHandle.getValueState[String]("prev", Encoders.STRING, TTLConfig.NONE)
+  override def handleInputRows(key: Long, rows: Iterator[RawChange],
+                               timerValues: TimerValues): Iterator[CdcEvent] =
+    rows.toList.sortBy(_.event_id).map { r =>
+      val p = if (prev.exists()) prev.get() else null
+      prev.update(r.props)
+      CdcEvent(r.event_id, r.ts, r.user_id, CdcStream.opOf(r.event_type), r.props, p, null)
+    }.iterator
+}
 
 /** Entity erasure reaching STREAMING STATE (r10 verdict #1): erase →
   * restart → the erased payload is gone from the state reader's output AND
@@ -42,28 +61,31 @@ class StateErasureSpec extends SparkSuite {
   private val cutoff = 6L
   private val erased = Map(1L -> cutoff, 3L -> cutoff)
 
-  test("transformWithState: in-place targeted removal on the EXISTING checkpoint (DSv2 feed)") {
-    import graft.streaming.CdcSource
-    val feedName = "erase_tws_feed"
-    val feed = CdcSource.FeedRegistry.get(feedName)
-    def src() = spark.readStream.format("graft.streaming.CdcSourceProvider")
-      .option("feed", feedName).option("numPartitions", "2")
+  /** One drain of `events` on checkpoint `chk`. The memory sink refuses
+    * checkpoint RECOVERY (it is not fault-tolerant); same-checkpoint
+    * restarts need a recoverable sink — foreachBatch into a driver-side
+    * buffer is the test-grade one.
+    */
+  private def drainOn[T](chk: String)(events: Dataset[T]): Vector[T] = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[T]()
+    val q = events.writeStream
+      .foreachBatch { (b: Dataset[T], _: Long) => b.collect().foreach(got.add); () }
+      .option("checkpointLocation", chk).outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    import scala.jdk.CollectionConverters._
+    got.asScala.toVector
+  }
+
+  private def feedSource(name: String) =
+    spark.readStream.format("graft.streaming.CdcSourceProvider")
+      .option("feed", name).option("numPartitions", "2")
       .load().as[RawChange]
+
+  test("transformWithState: in-place targeted removal on the EXISTING checkpoint (DSv2 feed)") {
+    val feed = graft.streaming.CdcSource.FeedRegistry.get("erase_tws_feed")
+    def src() = feedSource("erase_tws_feed")
     val chk = java.nio.file.Files.createTempDirectory("erase_tws_chk").toString
-    // memory sink refuses checkpoint RECOVERY (it is not fault-tolerant);
-    // same-checkpoint restarts need a recoverable sink — foreachBatch into
-    // a driver-side buffer is the test-grade one
-    val got = scala.collection.mutable.ArrayBuffer.empty[CdcStream.CdcEvent]
-    def run(events: org.apache.spark.sql.Dataset[CdcStream.CdcEvent]): Seq[CdcStream.CdcEvent] = {
-      got.synchronized(got.clear())
-      val q = events.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[CdcStream.CdcEvent], _: Long) =>
-          val rows = b.collect(); got.synchronized { got ++= rows }; ()
-        }
-        .option("checkpointLocation", chk).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      got.synchronized(got.sortBy(_.event_id).toVector)
-    }
+    def run(events: Dataset[CdcEvent]) = drainOn(chk)(events).sortBy(_.event_id)
     feed.append(wave1: _*)
     withRocks { run(CdcStream.withPrevStateTws(src())) }
     // pre-erasure: the checkpoint durably holds both targets' payloads
@@ -76,7 +98,7 @@ class StateErasureSpec extends SparkSuite {
     feed.append(StateErasure.eraseSentinels(erased, firstId = 100L) ++ Seq(
       RawChange(110L, t(110), 1L, "purchase", """{"k":110}"""),
       RawChange(111L, t(111), 2L, "purchase", """{"k":111}""")): _*)
-    val out2 = withRocks { run(CdcStream.withPrevStateTwsErasing(src(), erased)) }
+    val out2 = withRocks { run(CdcStream.withPrevStateTws(src(), erased)) }
     assert(out2.map(_.event_id) == Seq(110L, 111L),
       s"sentinel rows leaked into the event stream: ${out2.map(_.event_id)}")
     val e110 = out2.find(_.event_id == 110L).get
@@ -94,10 +116,40 @@ class StateErasureSpec extends SparkSuite {
     // restart idempotence: same erasure config on the next bounce must NOT
     // re-clear the legitimately rebuilt payload
     feed.append(RawChange(112L, t(112), 1L, "purchase", """{"k":112}"""))
-    val out3 = withRocks { run(CdcStream.withPrevStateTwsErasing(src(), erased)) }
+    val out3 = withRocks { run(CdcStream.withPrevStateTws(src(), erased)) }
     assert(out3.map(_.event_id) == Seq(112L))
     assert(out3.head.previous == """{"k":110}""",
       s"erasure re-applied on restart: prev=${out3.head.previous}")
+  }
+
+  test("a prev-only tws checkpoint resumes under the unified processor, with and without erasure") {
+    // the same wave-1 checkpoint written in the old layout, resumed once
+    // with an empty erasure set and once with users 1 and 3 erased
+    def resumeOldLayout(tag: String, erasedNow: Map[Long, Long]) = {
+      val feed = graft.streaming.CdcSource.FeedRegistry.get(s"prev_only_$tag")
+      val chk = java.nio.file.Files.createTempDirectory(s"prev_only_$tag").toString
+      feed.append(wave1: _*)
+      withRocks { drainOn(chk)(feedSource(s"prev_only_$tag").groupByKey(_.user_id)
+        .transformWithState(new PrevOnlyProcessor, TimeMode.None(), OutputMode.Append())) }
+      feed.append(StateErasure.eraseSentinels(erasedNow, firstId = 100L) ++ Seq(
+        RawChange(110L, t(110), 1L, "purchase", """{"k":110}"""),
+        RawChange(111L, t(111), 2L, "purchase", """{"k":111}""")): _*)
+      val out = withRocks {
+        drainOn(chk)(CdcStream.withPrevStateTws(feedSource(s"prev_only_$tag"), erasedNow))
+      }
+      (out.sortBy(_.event_id).map(e => e.event_id -> e.previous),
+        StateMigration.readPrevImageStateTws(spark, chk).collect().toMap)
+    }
+    val (plain, plainState) = resumeOldLayout("plain", Map.empty)
+    assert(plain == Seq(110L -> """{"k":6}""", 111L -> """{"k":4}"""),
+      s"chains must continue across the layout change: $plain")
+    assert(plainState ==
+      Map(1L -> """{"k":110}""", 2L -> """{"k":111}""", 3L -> """{"k":5}"""))
+    val (erasing, erasingState) = resumeOldLayout("erasing", erased)
+    assert(erasing == Seq(110L -> null, 111L -> """{"k":4}"""),
+      s"erased user 1 must be first-sight, user 2 chained: $erasing")
+    assert(erasingState == Map(1L -> """{"k":110}""", 2L -> """{"k":111}"""),
+      s"checkpoint still leaks erased payloads: $erasingState")
   }
 
   test("transformWithState: fresh-checkpoint migration+erasure drops replays below the cutoff") {
@@ -122,7 +174,7 @@ class StateErasureSpec extends SparkSuite {
       RawChange(11L, t(11), 2L, "purchase", """{"k":11}"""))
     val out = withRocks {
       val inB = MemoryStream[RawChange]
-      val q2 = CdcStream.withPrevStateTwsErasingFrom(inB.toDS(), erased, stFull)
+      val q2 = CdcStream.withPrevStateTws(inB.toDS(), erased, Some(stFull))
         .writeStream.format("memory").queryName("erase_twsf_q2")
         .outputMode("append").start()
       try {
@@ -149,12 +201,13 @@ class StateErasureSpec extends SparkSuite {
     try { in.addData(wave1: _*); q1.processAllAvailable() } finally q1.stop()
 
     // the offline rewrite: state read minus the erased keys
-    val stE = StateErasure.erasePrevImageState(spark, chkA, erased.keySet)
+    val stE = StateErasure.erasePrevImageState(
+      StateMigration.readPrevImageState(spark, chkA), erased.keySet)
     assert(stE.collect().toMap == Map(2L -> """{"k":4}"""),
       "rewrite must drop exactly the erased keys")
 
     val in2 = MemoryStream[RawChange]
-    val q2 = CdcStream.withPrevStateFrom(in2.toDS(), stE)
+    val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(stE))
       .writeStream.format("memory").queryName("erase_cls_b")
       .outputMode("append").start()
     val out = try {
@@ -180,7 +233,7 @@ class StateErasureSpec extends SparkSuite {
     // classic: offline-rewrite shape (state minus erased keys as initial)
     val stE = Seq((2L, """{"k":4}""")).toDS()
     val inC = MemoryStream[RawChange]
-    val qC = CdcStream.withPrevStateFrom(inC.toDS(), stE)
+    val qC = CdcStream.withPrevState(inC.toDS(), initial = Some(stE))
       .writeStream.format("memory").queryName("erase_par_c")
       .outputMode("append").start()
     val outC = try {
@@ -192,7 +245,7 @@ class StateErasureSpec extends SparkSuite {
     val stFull = Seq((1L, """{"k":6}"""), (2L, """{"k":4}"""), (3L, """{"k":5}""")).toDS()
     val outT = withRocks {
       val inT = MemoryStream[RawChange]
-      val qT = CdcStream.withPrevStateTwsErasingFrom(inT.toDS(), erased, stFull)
+      val qT = CdcStream.withPrevStateTws(inT.toDS(), erased, Some(stFull))
         .writeStream.format("memory").queryName("erase_par_t")
         .outputMode("append").start()
       try {
@@ -277,23 +330,10 @@ class StateErasureSpec extends SparkSuite {
     val w1 = Seq(r("t1", 1L, 1L, 1), r("t1", 2L, 2L, 2),
       r("t2", 3L, 1L, 3), r("t2", 4L, 2L, 4))
     val in = MemoryStream[TableRawChange]
-    // memory sink refuses checkpoint recovery — foreachBatch buffer, as in
-    // the single-table in-place test
-    val got = scala.collection.mutable.ArrayBuffer.empty[TableCdcEvent]
-    def run(events: org.apache.spark.sql.Dataset[TableCdcEvent]): Seq[TableCdcEvent] = {
-      got.synchronized(got.clear())
-      val q = events.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[TableCdcEvent], _: Long) =>
-          val rows = b.collect(); got.synchronized { got ++= rows }; ()
-        }
-        .option("checkpointLocation", chk).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      got.synchronized(got.sortBy(_.event_id).toVector)
-    }
+    def run(events: Dataset[TableCdcEvent]) = drainOn(chk)(events).sortBy(_.event_id)
     withRocks {
       in.addData(w1: _*)
-      run(CdcStream.withPrevStateByTableTwsFrom(in.toDS(),
-        spark.emptyDataset[((String, Long), String)]))
+      run(CdcStream.withPrevStateByTableTws(in.toDS()))
     }
     assert(StateMigration.readPrevImageStateByTableTws(spark, chk).collect().toMap ==
       Map(("t1", 1L) -> """{"k":1}""", ("t1", 2L) -> """{"k":2}""",
@@ -307,7 +347,7 @@ class StateErasureSpec extends SparkSuite {
     val w2 = Seq(r("t1", 10L, 1L, 10), r("t2", 11L, 1L, 11), r("t1", 12L, 2L, 12))
     val out = withRocks {
       in.addData(sent ++ w2: _*)
-      run(CdcStream.withPrevStateByTableTwsErasing(in.toDS(), erasedBT))
+      run(CdcStream.withPrevStateByTableTws(in.toDS(), k => erasedBT.get(k._2)))
     }
     assert(out.map(_.event_id) == Seq(10L, 11L, 12L))
     assert(out.find(_.event_id == 10L).get.previous == null,
@@ -339,12 +379,12 @@ class StateErasureSpec extends SparkSuite {
     val st = StateMigration.readPrevImageStateByRowKey(spark, chk)
     assert(st.collect().toMap ==
       Map("a-1" -> """{"sku":"a-1","qty":2}""", "b-2" -> """{"sku":"b-2","qty":5}"""))
-    val stE = StateErasure.erasePrevImageStateByRowKey(spark, chk, Set("a-1"))
+    val stE = StateErasure.erasePrevImageState(st, Set("a-1"))
     assert(stE.collect().toMap == Map("b-2" -> """{"sku":"b-2","qty":5}"""))
     // resume with the erased layout: a-1's next event is a fresh INSERT
     // (first-sight), b-2 chains as an UPDATE with its previous intact
     val in2 = MemoryStream[GenericChange]
-    val q2 = CdcStream.withPrevStateByRowKeyFrom(in2.toDS(), "sku", stE)
+    val q2 = CdcStream.withPrevStateByRowKey(in2.toDS(), "sku", initial = Some(stE))
       .writeStream.format("memory").queryName("erase_gen_b")
       .outputMode("append").start()
     val out = try {

@@ -89,7 +89,7 @@ class StateMigrationSpec extends SparkSuite {
     feed.append(secondHalf: _*)
     val resumed = withRocks {
       val chkB = java.nio.file.Files.createTempDirectory("mig_chk_b").toString
-      val qb = CdcStream.withPrevStateTwsFrom(src(off), st)
+      val qb = CdcStream.withPrevStateTws(src(off), initial = Some(st))
         .writeStream.format("memory").queryName("mig_out_b")
         .option("checkpointLocation", chkB).outputMode("append").start()
       try qb.processAllAvailable() finally qb.stop()
@@ -115,7 +115,7 @@ class StateMigrationSpec extends SparkSuite {
     assert(st.collect().toMap == expectState, "TWS state rows diverged")
     // resume on the classic API with the migrated initial state
     val in2 = MemoryStream[RawChange]
-    val q2 = CdcStream.withPrevStateFrom(in2.toDS(), st)
+    val q2 = CdcStream.withPrevState(in2.toDS(), initial = Some(st))
       .writeStream.format("memory").queryName("mig_out_d")
       .outputMode("append").start()
     val resumed = try {
@@ -275,7 +275,7 @@ class StateMigrationSpec extends SparkSuite {
     val chkB = java.nio.file.Files.createTempDirectory("rep_chk_b").toString
     val inB = MemoryStream[RawChange]
     StateMigration.withStatePartitions(spark, 32) {
-      val qB = CdcStream.withPrevStateFrom(inB.toDS(), stA)
+      val qB = CdcStream.withPrevState(inB.toDS(), initial = Some(stA))
         .writeStream.format("memory").queryName("rep_out_b")
         .option("checkpointLocation", chkB).outputMode("append").start()
       try { inB.addData(midPoint._1: _*); qB.processAllAvailable() } finally qB.stop()
@@ -288,7 +288,7 @@ class StateMigrationSpec extends SparkSuite {
     val chkC = java.nio.file.Files.createTempDirectory("rep_chk_c").toString
     val inC = MemoryStream[RawChange]
     val outC = StateMigration.withStatePartitions(spark, 4) {
-      val qC = CdcStream.withPrevStateFrom(inC.toDS(), stB)
+      val qC = CdcStream.withPrevState(inC.toDS(), initial = Some(stB))
         .writeStream.format("memory").queryName("rep_out_c")
         .option("checkpointLocation", chkC).outputMode("append").start()
       try {
@@ -377,8 +377,8 @@ class StateMigrationSpec extends SparkSuite {
       TableRawChange("events", r.event_id, r.ts, r.user_id, r.event_type, r.props))
     val resumed = withRocks {
       val in2 = MemoryStream[TableRawChange]
-      val q2 = CdcStream.withPrevStateByTableTwsFrom(in2.toDS(),
-          StateMigration.withTableKey(st, "events"))
+      val q2 = CdcStream.withPrevStateByTableTws(in2.toDS(),
+          initial = Some(StateMigration.withTableKey(st, "events")))
         .writeStream.format("memory").queryName("mig_out_f")
         .outputMode("append").start()
       try {
