@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -517,17 +518,56 @@ object Dedup {
     * so that probe materializes the round and the cached RDD it leaves is
     * what the next round (and both sides of the self-joins) read — without
     * the barrier the plan doubles per round.
+    *
+    * SIZE-DERIVED FINISH: the witness count is exact, so the loop knows
+    * when the remaining edge set fits ONE task (≤ 2^20 rows, the
+    * [[loopParts]] / [[Tables.sizedCoalesce]] rule). From the first witness
+    * that fits — the initial one included — a distributed round only adds
+    * jobs and checkpoints, so the loop stops there and the closure finishes
+    * as union-find over those edges in a single task (`coalesce(1)` +
+    * `mapPartitions`, primitive arrays). The finish is lazy: it runs when
+    * the labels are executed, and building the frame ends at the witness.
+    * Both phases keep the vertex set and component membership invariant, so
+    * union-find over any round's edges yields the labels the fixpoint
+    * would: one row per vertex, comp = component minimum. Above the
+    * threshold the rounds run as before, so the production-scale path is
+    * unchanged.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
     connectedComponentsWithRounds(pairs, maxIter)._1
 
-  /** [[connectedComponents]] plus the number of rounds it took — exposed for
-    * the bounds spec (a 1000-node chain must converge in ~log2(1000) ≈ 10
-    * rounds, the property that distinguishes star alternation from
-    * diameter-bound propagation).
+  /** Pair rows one loop task carries: ~1M rows of two longs, the
+    * [[Tables.sizedCoalesce]] rule.
+    */
+  private val RowsPerTask = 1L << 20
+
+  /** SIZE-DERIVED loop-frame task count: the loop's groupBy/join exchanges
+    * inherit the session's shuffle-partition count, so a few-hundred-edge
+    * graph would schedule cores-wide micro-stages six times per round.
+    * The witness already paid for an exact row count, so derive the task
+    * count from it, floored at 1. `coalesce` is a narrow merge of the
+    * reduce stage (no extra exchange), and it can only REDUCE a stage's
+    * task count — at production scale rows/1M exceeds the session
+    * parallelism and every coalesce in the loop is a no-op, so nothing
+    * here is a local-mode constant. Exactness is unaffected: all loop math
+    * is long/decimal (order-free).
+    */
+  private def loopParts(rows: Long): Int =
+    math.max(1L, math.min(Int.MaxValue.toLong, (rows + RowsPerTask - 1) / RowsPerTask)).toInt
+
+  /** [[connectedComponents]] plus the number of distributed rounds it ran —
+    * exposed for the bounds spec (a 1000-node chain must converge in
+    * ~log2(1000) ≈ 10 rounds, the property that distinguishes star
+    * alternation from diameter-bound propagation).
+    *
+    * @param finishEdges the largest witness edge count the one-task
+    *   union-find finish takes over at; the default is the largest count
+    *   [[loopParts]] gives one task. Tests pass 0 to force the distributed
+    *   loop to its fixpoint.
     */
   private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
+      pairs: DataFrame, maxIter: Int = 25,
+      finishEdges: Long = RowsPerTask): (DataFrame, Int) = {
     // lazy checkpoint of the candidate subtree: the barrier means the
     // symmetrize union reads ONE cached RDD instead of computing the whole
     // LSH candidate generation twice
@@ -544,21 +584,16 @@ object Dedup {
     var prev = witness(edges)
     var converged = prev._1 == 0L // empty candidate graph: nothing to close
     var rounds = 0
-    // SIZE-DERIVED loop-frame task count (r16 verdict #4): the loop's
-    // groupBy/join exchanges inherit the session's shuffle-partition count,
-    // so a few-hundred-edge graph (the bench regime, and the tail of any
-    // per-tenant run) schedules cores-wide micro-stages SIX times per round.
-    // The witness already paid for an exact row count — derive the task
-    // count from it: ~1M pair rows (two longs) per task, floored at 1.
-    // `coalesce` is a narrow merge of the reduce stage (no extra exchange),
-    // and it can only REDUCE a stage's task count — at production scale
-    // rows/1M exceeds the session parallelism and every coalesce below is a
-    // no-op, so nothing here is a local-mode constant. Exactness is
-    // unaffected: all loop math is long/decimal (order-free).
-    def loopParts(rows: Long): Int =
-      math.max(1L, math.min(Int.MaxValue.toLong, (rows + (1L << 20) - 1) / (1L << 20))).toInt
-    if (!converged) edges = edges.coalesce(loopParts(prev._1))
-    while (!converged && rounds < maxIter) {
+    // the finish works on long ids; other id types run the loop throughout
+    val idType = edges.select(col("child").as("id"))
+      .union(edges.select(col("parent").as("id"))).schema.head.dataType
+    val finishable = idType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    def fits = finishable && prev._1 <= finishEdges
+    if (!converged && !fits) edges = edges.coalesce(loopParts(prev._1))
+    while (!converged && !fits && rounds < maxIter) {
       val parts = loopParts(prev._1)
       // ---- large-star ----
       // no distinct needed: each undirected input edge is emitted exactly
@@ -590,10 +625,69 @@ object Dedup {
       edges = next
       rounds += 1
     }
+    if (!converged && fits) return (unionFindFinish(edges, idType), rounds)
     require(converged, s"connected components did not converge in $maxIter rounds")
     val labels = edges.select(col("child").as("doc_id"), col("parent").as("comp"))
       .union(edges.select(col("parent").as("doc_id"), col("parent").as("comp")).distinct())
     (labels, rounds)
+  }
+
+  /** The one-task finish of [[connectedComponentsWithRounds]]: the labels
+    * of the loop's fixpoint, computed by union-find over `edges` in a
+    * single task. Self-loops and null endpoints are dropped first, as the
+    * first large-star drops them, so a vertex whose only edge is a
+    * self-loop gets no label on either path.
+    */
+  private def unionFindFinish(edges: DataFrame, idType: DataType): DataFrame = {
+    // boxed output encoder: nullable columns, as the loop's min/when-derived
+    // label columns are
+    val labelEnc = Encoders.tuple(Encoders.LONG, Encoders.LONG)
+    edges.where(col("child") =!= col("parent"))
+      .select(col("child").cast(LongType), col("parent").cast(LongType))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .coalesce(1)
+      .mapPartitions(it => unionFindLabels(it).map { case (v, c) =>
+        (java.lang.Long.valueOf(v), java.lang.Long.valueOf(c)) })(labelEnc)
+      .select(col("_1").cast(idType).as("doc_id"), col("_2").cast(idType).as("comp"))
+  }
+
+  /** Union-find over one partition's edges: one `(vertex, component
+    * minimum)` per distinct endpoint. Vertices are the sorted distinct
+    * endpoints, so a vertex's index orders like its id; linking the larger
+    * root under the smaller keeps every root its component's minimum, and
+    * path halving keeps the trees shallow. State is three primitive arrays
+    * (endpoints, sorted vertices, int parents) — no boxed map.
+    */
+  private[graft] def unionFindLabels(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var ends = new Array[Long](1024)
+    var n = 0
+    it.foreach { case (a, b) =>
+      if (n + 2 > ends.length) ends = java.util.Arrays.copyOf(ends, ends.length * 2)
+      ends(n) = a; ends(n + 1) = b; n += 2
+    }
+    val verts = java.util.Arrays.copyOf(ends, n)
+    java.util.Arrays.sort(verts)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (m == 0 || verts(m - 1) != verts(i)) { verts(m) = verts(i); m += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, m)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(verts, 0, m, id)
+    var e = 0
+    while (e < n) {
+      val a = find(index(ends(e)))
+      val b = find(index(ends(e + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 2
+    }
+    Iterator.range(0, m).map(v => (verts(v), verts(find(v))))
   }
 
   /** The dedup capstone: MinHash+LSH candidates → connected components →

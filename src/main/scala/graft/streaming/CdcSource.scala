@@ -223,6 +223,26 @@ object CdcSource {
 
   case class IdRangePartition(spec: FeedSpec, from: Long, to: Long) extends InputPartition
 
+  /** Ids one micro-batch reader is sized for: one [[JdbcRowReader]] fetch
+    * (its `setFetchSize`).
+    */
+  private[graft] val IdsPerReader = 1000L
+
+  /** Split the id range `(from, to]` into contiguous reader ranges
+    * `(lo, hi]`: one reader per ~[[IdsPerReader]] ids, at most
+    * `numPartitions`. Each reader opens its own connection, so a trigger
+    * carrying a handful of ids gets one reader while a backlog still fans
+    * out `numPartitions` ways. Requires `to > from`.
+    */
+  private[graft] def idRanges(from: Long, to: Long, numPartitions: Int): Seq[(Long, Long)] = {
+    val span = to - from
+    val n = math.max(1L, math.min(numPartitions.toLong, (span - 1) / IdsPerReader + 1)).toInt
+    val step = span / n
+    (0 until n).map { i =>
+      (from + i * step, if (i == n - 1) to else from + (i + 1) * step)
+    }
+  }
+
   private[streaming] def toInternalRow(r: CdcStream.RawChange): InternalRow =
     InternalRow(
       r.event_id,
@@ -395,13 +415,7 @@ object CdcSource {
       val from =
         if (committed < 0) committed
         else math.max(startAfterId, committed - rescanWindow)
-      // split the id range across readers — parallel backlog catch-up
-      val span = to - from
-      val n = math.min(numPartitions.toLong, span).toInt
-      val step = span / n
-      (0 until n).map { i =>
-        val lo = from + i * step
-        val hi = if (i == n - 1) to else from + (i + 1) * step
+      idRanges(from, to, numPartitions).map { case (lo, hi) =>
         IdRangePartition(spec, lo, hi): InputPartition
       }.toArray
     }

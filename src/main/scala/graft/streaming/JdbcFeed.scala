@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.sql.DriverManager
+import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 import graft.streaming.CdcStream.RawChange
 
 /** JDBC-backed [[CdcSource.ChangeFeed]] — the production shape of the CDC
@@ -81,6 +83,28 @@ final class JdbcFeed(url: String, table: String) extends CdcSource.ChangeFeed {
 }
 
 object JdbcFeed {
+  private val suppressed = new AtomicLong()
+
+  /** Close/rollback failures the JDBC readers suppressed since the JVM
+    * started: a reader's cleanup must not fail a batch that already
+    * delivered its rows, but a rising count means connections are being
+    * left in a bad state.
+    */
+  def suppressedCloseFailures: Long = suppressed.get
+
+  private[streaming] def countSuppressed(): Unit = suppressed.incrementAndGet()
+
+  /** End a reader's transaction, then close its connection. Autocommit is
+    * off on the ranged readers, so even the read opened a transaction, and
+    * Derby refuses to close a connection mid-transaction. A failed
+    * rollback is counted in [[suppressedCloseFailures]] and the close
+    * still runs.
+    */
+  private[graft] def rollbackAndClose(conn: java.sql.Connection): Unit = {
+    try conn.rollback() catch { case NonFatal(_) => countSuppressed() }
+    conn.close()
+  }
+
   private val IdentRe = "^[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)*$".r
   /** ASCII identifier segments joined by single dots (schema qualification);
     * no leading/trailing/doubled dots, no quoting, no unicode.
@@ -303,10 +327,7 @@ final class GenericJdbcRowReader(spec: CdcSource.GenericJdbcSpec,
     org.apache.spark.sql.catalyst.InternalRow(
       rs.getLong(idIdx),
       org.apache.spark.unsafe.types.UTF8String.fromString(RowJson.obj(rs, cols)))
-  override def close(): Unit = {
-    try conn.rollback() catch { case _: Throwable => () }
-    conn.close()
-  }
+  override def close(): Unit = JdbcFeed.rollbackAndClose(conn)
 }
 
 /** Executor-side STREAMING partition reader over the ranged fetch — rows are
@@ -330,7 +351,7 @@ final class JdbcRowReader(spec: CdcSource.JdbcSpec, fromExclusive: Long, toInclu
     val ps = conn.prepareStatement(
       s"SELECT event_id, ts, user_id, event_type, props FROM ${spec.table}" +
         " WHERE event_id > ? AND event_id <= ? ORDER BY event_id")
-    ps.setFetchSize(1000)
+    ps.setFetchSize(CdcSource.IdsPerReader.toInt)
     ps.setLong(1, fromExclusive)
     ps.setLong(2, toInclusive)
     ps.executeQuery()
@@ -340,12 +361,7 @@ final class JdbcRowReader(spec: CdcSource.JdbcSpec, fromExclusive: Long, toInclu
   override def get(): org.apache.spark.sql.catalyst.InternalRow =
     CdcSource.toInternalRow(RawChange(rs.getLong(1), rs.getTimestamp(2),
       rs.getLong(3), rs.getString(4), rs.getString(5)))
-  override def close(): Unit = {
-    // autocommit is off, so even the read opened a transaction — end it
-    // first (Derby refuses to close a connection mid-transaction)
-    try conn.rollback() catch { case _: Throwable => () }
-    conn.close()
-  }
+  override def close(): Unit = JdbcFeed.rollbackAndClose(conn)
 }
 
 /** Continuous-mode twin of [[GenericJdbcRowReader]] — the
@@ -384,7 +400,7 @@ final class GenericJdbcContinuousReader(spec: CdcSource.GenericJdbcSpec,
       // type") — re-prepare once and retry before giving up
       val rs = try ps.executeQuery() catch {
         case _: java.sql.SQLException =>
-          try ps.close() catch { case _: Throwable => () }
+          try ps.close() catch { case NonFatal(_) => JdbcFeed.countSuppressed() }
           ps = prepare()
           ps.setLong(1, emitted)
           ps.executeQuery()

@@ -223,4 +223,38 @@ class CdcSourceSpec extends SparkSuite {
     assert(feed.latestIdCalls.get <= 1L + progs.length + 1L,
       s"${feed.latestIdCalls.get} tail probes for ${progs.length} batches")
   }
+
+  test("planned reader ranges tile (from, to] exactly for any span, numPartitions and rescanWindow") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.rng.Seed
+    val cases = for {
+      committed <- Gen.frequency(1 -> Gen.const(-1L), 9 -> Gen.choose(0L, 1L << 40))
+      span <- Gen.frequency(3 -> Gen.choose(1L, 3000L), 1 -> Gen.choose(1L, 1L << 30))
+      parts <- Gen.choose(1, 64)
+      rescan <- Gen.frequency(1 -> Gen.const(0L), 3 -> Gen.choose(0L, 1L << 20))
+      startAfter <- Gen.choose(-1L, math.max(-1L, committed))
+    } yield (committed, span, parts, rescan, startAfter)
+    val tiles = Prop.forAll(cases) { case (committed, span, parts, rescan, startAfter) =>
+      val to = committed + span
+      val stream = new CdcSource.CdcMicroBatchStream(
+        CdcSource.MemorySpec("unused"), parts, rescan, startAfter)
+      val ranges = stream.planInputPartitions(CdcSource.CdcOffset(committed), CdcSource.CdcOffset(to))
+        .map { case p: CdcSource.IdRangePartition => (p.from, p.to) }.toSeq
+      val from = if (committed < 0) committed else math.max(startAfter, committed - rescan)
+      val ids = to - from
+      ranges.nonEmpty && ranges.head._1 == from && ranges.last._2 == to &&
+        ranges.zip(ranges.tail).forall { case (a, b) => a._2 == b._1 } &&
+        ranges.forall { case (lo, hi) => lo < hi } &&
+        ranges.size == math.max(1L, math.min(parts.toLong, (ids + 999) / 1000))
+    }
+    val r = SCTest.check(SCTest.Parameters.default
+      .withInitialSeed(Seed(0xcdcL)).withMinSuccessfulTests(500), tiles)
+    assert(r.passed, r.status.toString)
+    // a trigger's handful of ids gets one reader; a 20k-id backlog still
+    // fans out four ways; an empty range plans nothing
+    assert(CdcSource.idRanges(100L, 106L, 4) == Seq((100L, 106L)))
+    assert(CdcSource.idRanges(-1L, 20000L, 4).size == 4)
+    val stream = new CdcSource.CdcMicroBatchStream(CdcSource.MemorySpec("unused"), 4)
+    assert(stream.planInputPartitions(CdcSource.CdcOffset(7L), CdcSource.CdcOffset(7L)).isEmpty)
+  }
 }

@@ -51,8 +51,11 @@ class DedupBoundsSpec extends SparkSuite {
     // worst case for label propagation: a pure chain 0-1-2-...-999 has
     // diameter 999, so diameter-bound propagation needs ~1000 rounds. The
     // large-star/small-star alternation must close it in ~log2(1000) ≈ 10.
+    // finishEdges = 0 keeps the one-task finish out, so the distributed
+    // rounds run to their fixpoint
     val chain = (0L until 999L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.connectedComponentsWithRounds(chain, maxIter = 15)
+    val (labels, rounds) =
+      Dedup.connectedComponentsWithRounds(chain, maxIter = 15, finishEdges = 0L)
     assert(rounds <= 12, s"chain should converge in ~log n rounds, took $rounds")
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 1000 && got.forall(_._2 == 0L),

@@ -297,6 +297,28 @@ class JdbcFeedSpec extends SparkSuite {
     } finally daemon.stop()
   }
 
+  test("reader close: a failing rollback is counted, the connection still closes, fatal errors propagate") {
+    // a Connection whose rollback throws `failure` and whose close is recorded
+    def conn(failure: Throwable, closed: java.util.concurrent.atomic.AtomicBoolean) =
+      java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+        Array(classOf[java.sql.Connection]),
+        (_: Any, m: java.lang.reflect.Method, _: Array[AnyRef]) => m.getName match {
+          case "rollback" => throw failure
+          case "close" => closed.set(true); null
+          case other => throw new UnsupportedOperationException(other)
+        }).asInstanceOf[java.sql.Connection]
+    val closed = new java.util.concurrent.atomic.AtomicBoolean()
+    val before = JdbcFeed.suppressedCloseFailures
+    JdbcFeed.rollbackAndClose(conn(new java.sql.SQLException("rollback refused"), closed))
+    assert(closed.get, "the connection must close after a failed rollback")
+    assert(JdbcFeed.suppressedCloseFailures == before + 1, "the failed rollback must be counted")
+    val fatal = intercept[LinkageError] {
+      JdbcFeed.rollbackAndClose(conn(new LinkageError("fatal"), new java.util.concurrent.atomic.AtomicBoolean()))
+    }
+    assert(fatal.getMessage == "fatal")
+    assert(JdbcFeed.suppressedCloseFailures == before + 1, "a fatal error is not suppressed")
+  }
+
   test("generic daemon: a table of ANY shape created mid-stream is captured without restart") {
     import graft.streaming.CdcDaemon
     withDb("genredisc") { url =>
