@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Similarity
 import graft.streaming.AnnServe
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -46,11 +47,11 @@ object AnnServeBench {
     import spark.implicits._
 
     val nVecs = Tables.load(spark, sfDir, "embeddings").count()
-    val layouts: Seq[(String, AnnServe.Layout)] = Seq(
-      "flat" -> AnnServe.Flat,
-      "ivf_trained" -> AnnServe.IvfTrained(),
-      "ivf_residual" -> AnnServe.IvfResidual(),
-      "opq" -> AnnServe.Opq)
+    val layouts: Seq[(String, Similarity.Layout)] = Seq(
+      "flat" -> Similarity.Flat,
+      "ivf_trained" -> Similarity.IvfTrained(),
+      "ivf_residual" -> Similarity.IvfResidual(),
+      "opq" -> Similarity.Opq)
 
     layouts.foreach { case (tag, layout) =>
       val input = MemoryStream[Long]

@@ -160,16 +160,18 @@ object Graft {
   def similarTopK(embeddings: DataFrame, queryId: Long, k: Int = 10): DataFrame =
     Similarity.topKDf(embeddings, queryId, k)
 
-  /** ANN serving from the persisted PQ codes artifact — one batched serve
-    * for Q query ids (one codes scan per batch, per-query top-k as a
-    * map-side-heap partial aggregation, exact-cosine rerank). Build/refresh
-    * the artifact with [[graft.ops.Similarity.ensurePqCodes]] /
-    * [[graft.ops.Similarity.refreshPqCodes]]; IVF-pruned variant:
-    * [[graft.ops.Similarity.pqTopKIvfBatch]].
+  /** ANN top-k — one batched serve for Q query ids over a PQ `layout`
+    * (one codes scan per batch, per-query top-k as a map-side-heap partial
+    * aggregation, exact-cosine rerank); a single query is a batch of one.
+    * Layouts: `Flat` (the persisted sampled codes artifact — build/refresh
+    * it with [[graft.ops.Similarity.ensurePqCodes]] /
+    * [[graft.ops.Similarity.refreshPqCodes]]), `Ivf`, `IvfTrained`,
+    * `IvfResidual` (IVF-pruned artifacts) and `Opq` (inline permuted
+    * encode). See [[graft.ops.Similarity.serve]].
     */
-  def annTopKBatch(spark: SparkSession, sfDir: String, queryIds: Seq[Long],
-                   k: Int = 10): DataFrame =
-    Similarity.pqTopKServedBatch(spark, sfDir, queryIds, k)
+  def annTopK(spark: SparkSession, sfDir: String, queryIds: Seq[Long],
+              k: Int = 10, layout: Similarity.Layout = Similarity.Flat): DataFrame =
+    Similarity.serve(spark, sfDir, layout, queryIds, k)
 
   /** The ONLINE ANN endpoint: a streaming frame of `query_id`s, one batched
     * serve per micro-batch against the codes artifact, results under
@@ -178,18 +180,22 @@ object Graft {
     */
   def annServe(spark: SparkSession, sfDir: String, queries: DataFrame,
                outDir: String, checkpointDir: String, k: Int = 10,
-               layout: graft.streaming.AnnServe.Layout = graft.streaming.AnnServe.Flat)
+               layout: Similarity.Layout = Similarity.Flat)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.streaming.AnnServe.serve(spark, sfDir, queries, outDir, checkpointDir,
       k, layout = layout)
 
-  /** Recall@k scorecard for the ANN serving variants vs brute-force exact
-    * cosine — (variant, query_id, hits, recall), oracle-checked. See
-    * [[graft.ops.Similarity.annRecall]].
+  /** Recall@k scorecard for named serve layouts vs brute-force exact
+    * cosine — (variant, query_id, hits, recall), oracle-checked. The
+    * default scores flat PQ and the three IVF layouts; pass e.g.
+    * `Seq("pq" -> Similarity.Flat, "opq" -> Similarity.Opq)` for the
+    * permutation question alone. See [[graft.ops.Similarity.annRecall]].
     */
   def annRecall(spark: SparkSession, sfDir: String,
-                queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L)): DataFrame =
-    Similarity.annRecall(spark, sfDir, queryIds)
+                queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
+                layouts: Seq[(String, Similarity.Layout)] = Similarity.RecallLayouts)
+      : DataFrame =
+    Similarity.annRecall(spark, sfDir, queryIds, layouts = layouts)
 
   /** The nprobe calibration curve — (nprobe, query_id, hits, recall,
     * scanned) per grid point, both axes integer-exact and oracle-checked:
@@ -289,24 +295,6 @@ object Graft {
   def annSweepServed(spark: SparkSession, outDir: String,
                      keepBatches: Int = 3): DataFrame =
     graft.streaming.AnnServe.sweepServed(spark, outDir, keepBatches)
-
-  /** OPQ serving — the published variance-balancing dimension permutation
-    * plus books trained on permuted rows, batched over Q queries at
-    * identical bits to the flat trained layout. See
-    * [[graft.ops.Similarity.opqTopKBatch]]; the permutation's recall
-    * effect is hash-gated by [[annRecallOpq]], its variance-balance audit
-    * by [[graft.ops.Similarity.opqBalance]].
-    */
-  def annOpqTopKBatch(spark: SparkSession, sfDir: String, queryIds: Seq[Long],
-                      k: Int = 10): DataFrame =
-    Similarity.opqTopKBatch(spark, sfDir, queryIds, k)
-
-  /** Recall scorecard for the permutation question alone: flat trained PQ
-    * vs OPQ at identical bits. See [[graft.ops.Similarity.annRecallOpq]].
-    */
-  def annRecallOpq(spark: SparkSession, sfDir: String,
-                   queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L)): DataFrame =
-    Similarity.annRecallOpq(spark, sfDir, queryIds)
 
   /** Sub-document boilerplate detection: content-defined chunking rollup —
     * (chunk_hash, n_copies, n_docs, chunk_len) for chunk content appearing

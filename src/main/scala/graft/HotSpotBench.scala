@@ -101,7 +101,7 @@ object HotSpotBench {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val hotShare = listSizes.values.max.toDouble / nVec
     val (s1, r1, t1, k1) = measure {
-      Similarity.pqTopKIvfTrainedBatch(spark, dir, Seq(0L, 1L, 2L, 3L)).count()
+      Similarity.serve(spark, dir, Similarity.IvfTrained(), Seq(0L, 1L, 2L, 3L)).count()
     }
 
     // ===== fixture 2: hot LSH bucket (identical vectors) =====

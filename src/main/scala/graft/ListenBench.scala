@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import java.io.{BufferedWriter, OutputStreamWriter}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
@@ -111,7 +112,7 @@ object ListenBench {
             }
             done.addAndGet(got.toLong)
             sock.close()
-          } catch { case _: Throwable => () }
+          } catch { case NonFatal(_) => () }
         })
         t.setDaemon(true); t.start(); t
       }
@@ -162,7 +163,7 @@ object ListenBench {
             }
             done.addAndGet(got.toLong)
             sock.close()
-          } catch { case _: Throwable => () }
+          } catch { case NonFatal(_) => () }
         })
         t.setDaemon(true); t.start(); t
       }
@@ -241,7 +242,7 @@ object ListenBench {
               Thread.sleep(1)
               line = in.readLine()
             }
-          } catch { case _: Throwable => () }
+          } catch { case NonFatal(_) => () }
         })
         reader.setDaemon(true); reader.start()
         val deadline = System.nanoTime() + 5_000_000_000L

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -74,7 +75,7 @@ object PlanAudit {
         s"""{"query":"$name","shuffles":$shuffles,"scans":$scans,"broadcasts":$bcasts,""" +
           s""""cartesian_or_bnlj":$cartesian,"topk_heap":$topK,"partial_agg":$partialAgg}"""
       } catch {
-        case e: Throwable => s"""{"query":"$name","error":"${e.getClass.getSimpleName}"}"""
+        case NonFatal(e) => s"""{"query":"$name","error":"${e.getClass.getSimpleName}"}"""
       }
     }
     rows.foreach(println)

@@ -754,6 +754,15 @@ object SparkEntry {
 
   // ===== query registry =====
 
+  /** The catalog's ANN serves: query 0 alone (a batch of one, `query_id`
+    * dropped) and the four-query batch.
+    */
+  private def annOne(s: SparkSession, d: String, layout: Similarity.Layout): DataFrame =
+    Similarity.serve(s, d, layout, Seq(0L)).drop("query_id")
+
+  private def annBatch(s: SparkSession, d: String, layout: Similarity.Layout): DataFrame =
+    Similarity.serve(s, d, layout, Seq(0L, 1L, 2L, 3L))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CDC / reference-fidelity set
     "cdc_pipeline"      -> (cdcPipeline _),
@@ -872,20 +881,21 @@ object SparkEntry {
     "ops_sim_ivf"     -> ((s: SparkSession, d: String) => Similarity.ivfTopK(s, d)),
     "ops_sim_pq"      -> ((s: SparkSession, d: String) => Similarity.pqTopK(s, d)),
     "ops_sim_pq_trained" -> ((s: SparkSession, d: String) => Similarity.pqTopKTrained(s, d)),
-    "ops_sim_pq_served" -> ((s: SparkSession, d: String) => Similarity.pqTopKServed(s, d)),
-    "ops_sim_pq_batch" -> ((s: SparkSession, d: String) => Similarity.pqTopKServedBatch(s, d)),
-    "ops_sim_ivfpq"   -> ((s: SparkSession, d: String) => Similarity.pqTopKIvf(s, d)),
-    "ops_sim_ivfpq_batch" -> ((s: SparkSession, d: String) => Similarity.pqTopKIvfBatch(s, d)),
+    "ops_sim_pq_served" -> ((s: SparkSession, d: String) => annOne(s, d, Similarity.Flat)),
+    "ops_sim_pq_batch" -> ((s: SparkSession, d: String) => annBatch(s, d, Similarity.Flat)),
+    "ops_sim_ivfpq"   -> ((s: SparkSession, d: String) => annOne(s, d, Similarity.Ivf())),
+    "ops_sim_ivfpq_batch" -> ((s: SparkSession, d: String) => annBatch(s, d, Similarity.Ivf())),
     "ops_sim_recall"  -> ((s: SparkSession, d: String) => Similarity.annRecall(s, d)),
     "ops_ivf_calib"   -> ((s: SparkSession, d: String) => Similarity.ivfCalib(s, d)),
-    "ops_sim_ivfpq_trained" -> ((s: SparkSession, d: String) => Similarity.pqTopKIvfTrained(s, d)),
-    "ops_sim_ivfpq_trained_batch" -> ((s: SparkSession, d: String) => Similarity.pqTopKIvfTrainedBatch(s, d)),
+    "ops_sim_ivfpq_trained" -> ((s: SparkSession, d: String) => annOne(s, d, Similarity.IvfTrained())),
+    "ops_sim_ivfpq_trained_batch" -> ((s: SparkSession, d: String) => annBatch(s, d, Similarity.IvfTrained())),
     "ops_ivf_calib_trained" -> ((s: SparkSession, d: String) => Similarity.ivfCalib(s, d, trained = true)),
-    "ops_sim_ivfpq_res" -> ((s: SparkSession, d: String) => Similarity.pqTopKIvfRes(s, d)),
-    "ops_sim_ivfpq_res_batch" -> ((s: SparkSession, d: String) => Similarity.pqTopKIvfResBatch(s, d)),
+    "ops_sim_ivfpq_res" -> ((s: SparkSession, d: String) => annOne(s, d, Similarity.IvfResidual())),
+    "ops_sim_ivfpq_res_batch" -> ((s: SparkSession, d: String) => annBatch(s, d, Similarity.IvfResidual())),
     "ops_ivf_choose" -> ((s: SparkSession, d: String) => Similarity.ivfChoose(s, d)),
-    "ops_sim_opq"    -> ((s: SparkSession, d: String) => Similarity.opqTopK(s, d)),
-    "ops_sim_recall_opq" -> ((s: SparkSession, d: String) => Similarity.annRecallOpq(s, d)),
+    "ops_sim_opq"    -> ((s: SparkSession, d: String) => annOne(s, d, Similarity.Opq)),
+    "ops_sim_recall_opq" -> ((s: SparkSession, d: String) =>
+      Similarity.annRecall(s, d, layouts = Seq("opq" -> Similarity.Opq, "pq" -> Similarity.Flat))),
     "ops_opq_balance" -> ((s: SparkSession, d: String) => Similarity.opqBalance(s, d)),
     "ops_ann_lsh"     -> ((s: SparkSession, d: String) => Similarity.nearDupPairs(s, d)),
     "ops_embed_cluster" -> (Similarity.embedClusters _),

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -78,7 +79,7 @@ object SpillBench {
       val t0 = System.nanoTime()
       val err =
         try { SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-        catch { case e: Throwable => Some(e.toString.take(300)) }
+        catch { case NonFatal(e) => Some(e.toString.take(300)) }
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(1500) // let straggling listener events land before reading
       def mb(v: Long): Long = v >> 20

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import graft.streaming.{CdcSource, CdcStream}
 import org.apache.spark.sql.SparkSession
 
@@ -138,7 +139,7 @@ object StreamBench {
       // one misconfigured probe must never silence the rest of the bench:
       // record the failure as its own artifact line and keep going
       try latencyProbeRun(label, triggerMs, nEvents, gapMs, writerOpts, pipe)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         println(s"""{"metric":"cdc_capture_latency","config":"$label","error":"${e.getClass.getSimpleName}"}""")
         System.err.println(s"[latencyProbe] $label failed: $e")
       }
@@ -293,7 +294,7 @@ object StreamBench {
         }.sorted
         def pct(p: Double) = lat((p * (lat.size - 1)).round.toInt)
         println(s"""{"metric":"cdc_capture_latency","config":"$label","trigger_ms":-1,"events":${lat.size},"p50_ms":${pct(0.5).round},"p99_ms":${pct(0.99).round},"max_ms":${lat.last.round},"gap_ms":$gapMs}""")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"""{"metric":"cdc_capture_latency","config":"$label","error":"${e.getClass.getSimpleName}"}""")
         System.err.println(s"[latencyProbeContinuous] $label failed: $e")
       }
@@ -318,7 +319,7 @@ object StreamBench {
             val m = idRe.matcher(l)
             if (m.find()) arrivals.put(java.lang.Long.valueOf(m.group(1)), System.nanoTime())
             ()
-          }) catch { case _: Throwable => () })
+          }) catch { case NonFatal(_) => () })
         client.setDaemon(true); client.start()
         val subDeadline = System.nanoTime() + 10L * 1000000000L
         while (server.subscriberCount < 1 && System.nanoTime() < subDeadline)
@@ -371,7 +372,7 @@ object StreamBench {
         }.sorted
         def pct(p: Double) = lat((p * (lat.size - 1)).round.toInt)
         println(s"""{"metric":"cdc_e2e_latency","config":"$label","events":${lat.size},"p50_ms":${pct(0.5).round},"p99_ms":${pct(0.99).round},"max_ms":${lat.last.round},"gap_ms":$gapMs}""")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"""{"metric":"cdc_e2e_latency","config":"$label","error":"${e.getClass.getSimpleName}"}""")
         System.err.println(s"[e2eProbeContinuous] $label failed: $e")
       }

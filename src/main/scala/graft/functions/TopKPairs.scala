@@ -13,7 +13,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * exchange, where a window `row_number <= k` would shuffle every input
   * row to its group's partition first (data-sized — the difference between
   * a Q-row exchange and an n×Q-row exchange in the batched-ANN serve,
-  * [[graft.ops.Similarity.pqTopKServedBatch]]).
+  * [[graft.ops.Similarity.serve]]).
   *
   * Ordering is lexicographic (key ASC, id ASC) — with an integer sort key
   * (the ADC micro sums) and distinct ids the kept set is DETERMINISTIC

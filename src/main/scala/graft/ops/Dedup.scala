@@ -574,14 +574,20 @@ object Dedup {
     var edges = pairs
       .select(col("doc_a").as("child"), col("doc_b").as("parent"))
       .localCheckpoint(false)
+    val initial = edges
     // decimal accumulator: a long sum over ~1e12 edges of ~1e12 ids would
-    // overflow (ANSI mode makes that a job-killing error, not a wrap)
-    def witness(e: DataFrame): (Long, java.math.BigDecimal) = {
+    // overflow (ANSI mode makes that a job-killing error, not a wrap); the
+    // self-loop count rides the same aggregation (only the initial one can
+    // be non-zero: a round's output is child>parent oriented)
+    def witness(e: DataFrame): (Long, java.math.BigDecimal, Long) = {
       val r = e.agg(count(lit(1)),
-        sum(col("child").cast("decimal(38,0)") + col("parent").cast("decimal(38,0)"))).first()
-      (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
+        sum(col("child").cast("decimal(38,0)") + col("parent").cast("decimal(38,0)")),
+        count(when(col("child") === col("parent"), lit(1)))).first()
+      (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1),
+        r.getLong(2))
     }
     var prev = witness(edges)
+    val selfLoops = prev._3
     var converged = prev._1 == 0L // empty candidate graph: nothing to close
     var rounds = 0
     // the finish works on long ids; other id types run the loop throughout
@@ -625,24 +631,35 @@ object Dedup {
       edges = next
       rounds += 1
     }
-    if (!converged && fits) return (unionFindFinish(edges, idType), rounds)
-    require(converged, s"connected components did not converge in $maxIter rounds")
-    val labels = edges.select(col("child").as("doc_id"), col("parent").as("comp"))
-      .union(edges.select(col("parent").as("doc_id"), col("parent").as("comp")).distinct())
-    (labels, rounds)
+    val labels =
+      if (!converged && fits) unionFindFinish(edges, idType)
+      else {
+        require(converged, s"connected components did not converge in $maxIter rounds")
+        edges.select(col("child").as("doc_id"), col("parent").as("comp"))
+          .union(edges.select(col("parent").as("doc_id"), col("parent").as("comp")).distinct())
+      }
+    // the first large-star drops self-loops, so after a round a vertex
+    // whose only edges are self-loops has no label: it is its own component
+    if (selfLoops == 0L || rounds == 0) (labels, rounds)
+    else {
+      val loners = initial.where(col("child") === col("parent"))
+        .select(col("child").as("doc_id")).distinct()
+        .join(labels, Seq("doc_id"), "left_anti")
+      (labels.union(loners.select(col("doc_id"), col("doc_id").as("comp"))), rounds)
+    }
   }
 
   /** The one-task finish of [[connectedComponentsWithRounds]]: the labels
     * of the loop's fixpoint, computed by union-find over `edges` in a
-    * single task. Self-loops and null endpoints are dropped first, as the
-    * first large-star drops them, so a vertex whose only edge is a
-    * self-loop gets no label on either path.
+    * single task. Null endpoints are dropped first, as the first
+    * large-star drops them; a self-loop is a vertex union-find labels
+    * itself.
     */
   private def unionFindFinish(edges: DataFrame, idType: DataType): DataFrame = {
     // boxed output encoder: nullable columns, as the loop's min/when-derived
     // label columns are
     val labelEnc = Encoders.tuple(Encoders.LONG, Encoders.LONG)
-    edges.where(col("child") =!= col("parent"))
+    edges.where(col("child").isNotNull && col("parent").isNotNull)
       .select(col("child").cast(LongType), col("parent").cast(LongType))
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
       .coalesce(1)

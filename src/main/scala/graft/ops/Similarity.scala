@@ -500,7 +500,7 @@ object Similarity {
     * Scale shape: encoding is one narrow map over the corpus with the
     * codebooks riding as ONE broadcast row (at 100 TB you persist `codes`
     * — 5 bytes/vector — and this stage amortizes; [[ensurePqCodes]] +
-    * [[pqTopKServed]] are exactly that deployment); the query side touches
+    * [[serve]] over [[Flat]] are exactly that deployment); the query side touches
     * each candidate for m lookups, no shuffle anywhere until the
     * TakeOrderedAndProject heap for the rerank cut.
     */
@@ -672,7 +672,7 @@ object Similarity {
   /** Build-once IVF-PQ codes ARTIFACT — the persisted form the [[pqTopK]]
     * scaladoc promises at 100 TB: one table of (vec_id, codes[, list]) with
     * codes from the TRAINED books ([[trainedCodes]]) and `list` the IVF
-    * coarse assignment ([[ivfTopK]]'s argmax-cosine over the first `nlist`
+    * coarse assignment ([[ivfTopK]]'s argmax-cosine over the first [[SampledLists]]
     * vectors), written PARTITIONED BY list so an nprobe-pruned serving scan
     * reads only its probed partitions. Same amortization contract as
     * [[graft.sources.Layout.ensureBucketed]]: built once per (source dir)
@@ -682,7 +682,7 @@ object Similarity {
     * handled the same way (the in-memory catalog forgets, the warehouse
     * dir persists — drop stale files before CTAS).
     */
-  /** The three codes layouts: `Sampled` (first-`nlist` coarse quantizer,
+  /** The three codes layouts: `Sampled` (first-[[SampledLists]] coarse quantizer,
     * raw-vector PQ books), `Trained` (published [[IvfModel]] centroids,
     * raw-vector books), `Residual` (published centroids, RESIDUAL books —
     * textbook IVF-PQ). One artifact family, one lifecycle.
@@ -867,25 +867,31 @@ object Similarity {
     CodesSnapshot.read(spark, pruned, spark.table(name).schema)
   }
 
-  def ensurePqCodes(spark: SparkSession, sfDir: String, nlist: Int = 16): String =
-    buildCodesArtifact(spark, codesShortKind(sfDir, CodesKind.Sampled), {
-      val base = loadNormalized(spark, sfDir)
-      val cents = base.filter(col("vec_id") < nlist)
-        .agg(sort_array(collect_list(struct(col("vec_id").as("cid"), col("v").as("cv"))))
-          .as("cents"))
-      // coarse assignment identical to ivfTopK's: argmax cosine over RAW
-      // vectors, ties by cid ascending
-      base.join(broadcast(cents))
-        .withColumn("list", centArgmaxCos(col("v")))
-        .withColumn("codes", trainedCodes(col("vn")))
-    })
+  def ensurePqCodes(spark: SparkSession, sfDir: String): String =
+    buildCodesArtifact(spark, codesShortKind(sfDir, CodesKind.Sampled),
+      sampledEncode(spark, sfDir, loadNormalized(spark, sfDir)))
+
+  /** The sampled layout's encode of normalized `rows`: the coarse
+    * assignment identical to ivfTopK's (argmax cosine over RAW vectors
+    * against the first [[SampledLists]] vectors, ties by cid ascending) and
+    * the trained-book codes.
+    */
+  private def sampledEncode(spark: SparkSession, sfDir: String,
+                            rows: DataFrame): DataFrame = {
+    val cents = loadNormalized(spark, sfDir).filter(col("vec_id") < SampledLists)
+      .agg(sort_array(collect_list(struct(col("vec_id").as("cid"), col("v").as("cv"))))
+        .as("cents"))
+    rows.join(broadcast(cents))
+      .withColumn("list", centArgmaxCos(col("v")))
+      .withColumn("codes", trainedCodes(col("vn")))
+  }
 
   /** Incremental artifact MAINTENANCE for a growing corpus: encode ONLY
     * the vectors not yet in the codes table (left-anti on vec_id) and
     * append them into their list partitions — the steady-state path of a
     * crawl that adds documents daily. The quantizers are stable under
     * append by construction: the trained PQ books are a frozen published
-    * artifact, and the IVF coarse centroids are the `nlist` LOWEST vec_ids
+    * artifact, and the IVF coarse centroids are the [[SampledLists]] LOWEST vec_ids
     * — ids are monotone, so growth never changes them. Existing partition
     * files are untouched (append adds files); at 100 TB the refresh cost
     * is one anti-join against a 5-byte/row table plus the encode of the
@@ -893,18 +899,8 @@ object Similarity {
     * (Re-training the books on a drifted corpus is a MODEL update —
     * [[graft.PqTrain]] + a rebuilt artifact — not a refresh.)
     */
-  def refreshPqCodes(spark: SparkSession, sfDir: String, nlist: Int = 16): Long = {
-    ensurePqCodes(spark, sfDir, nlist)
-    refreshCodesKind(spark, sfDir, CodesKind.Sampled) { fresh =>
-      val base = loadNormalized(spark, sfDir)
-      val cents = base.filter(col("vec_id") < nlist)
-        .agg(sort_array(collect_list(struct(col("vec_id").as("cid"), col("v").as("cv"))))
-          .as("cents"))
-      fresh.join(broadcast(cents))
-        .withColumn("list", centArgmaxCos(col("v")))
-        .withColumn("codes", trainedCodes(col("vn")))
-    }
-  }
+  def refreshPqCodes(spark: SparkSession, sfDir: String): Long =
+    refreshCodesKind(spark, sfDir, CodesKind.Sampled)(sampledEncode(spark, sfDir, _))
 
   /** The shared grow step, snapshot-committed: the delta (left-anti on the
     * CURRENT snapshot's ids) is encoded by `encode` and STAGED as plain
@@ -941,7 +937,7 @@ object Similarity {
     * delta-encode recipe with the published-centroid assignment
     * ([[ivfTrainedRanked]]) in place of the sampled one. Stability under
     * append is even simpler here than in the sampled case (which leans on
-    * monotone ids keeping the first-`nlist` rows fixed): the trained
+    * monotone ids keeping the first-[[SampledLists]] rows fixed): the trained
     * centroids are FROZEN published integers, so growth can never move
     * them — the partitioning is part of the model, and only a model
     * update ([[graft.IvfTrain]] → rebuilt artifact) changes it. Returns
@@ -1203,124 +1199,6 @@ object Similarity {
     affected.values.sum
   }
 
-  /** PQ serving from the PERSISTED codes artifact — [[pqTopKTrained]]'s
-    * exact output (same oracle) with the corpus-wide encode GONE from the
-    * serving plan: ADC reads the 5-byte codes table, the rerank reads raw
-    * vectors for the ≤`rerank` ADC survivors only (candidate ids broadcast
-    * into one hash join), and the only corpus-wide work left is the codes
-    * scan itself. `PqServedSpec` pins both halves: row parity with the
-    * unserved form, and a serving plan free of the encode's argmin
-    * (`sequence(0, ksub-1)` appears nowhere).
-    */
-  def pqTopKServed(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-                   k: Int = 10, rerank: Int = 100): DataFrame = {
-    val codes = codesSnapshotRead(spark, sfDir, CodesKind.Sampled)
-    val base = loadNormalized(spark, sfDir)
-    val q = base.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("vn").as("qvn"))
-    val cand = codes.join(broadcast(q.select(col("qvn"))))
-      .filter(col("vec_id") =!= queryId)
-      .withColumn("adc", trainedAdc(col("qvn"), col("codes")))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"))
-    Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(q.select(col("qv"))))
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** BATCHED PQ serving — Q queries against ONE codes scan, the throughput
-    * shape of a production ANN endpoint (queries arrive in batches; the
-    * corpus is read once per batch, not once per query). The plan the
-    * batch contract demands at 100 TB: codes × a broadcast Q-row frame
-    * (in-row ADC per pair), then per-query top-rerank via
-    * [[graft.functions.TopKPairs]] — a PARTIAL AGGREGATION whose map-side
-    * heaps ship one ≤rerank-row buffer per query across the exchange,
-    * where the window-rank formulation would shuffle all n×Q ADC rows to
-    * Q partitions first. Downstream of the heaps everything is
-    * (Q × rerank)-sized: candidate broadcast into the raw-vector join,
-    * exact cosine, and a final per-query window over ≤ Q×rerank rows.
-    * Output (query_id, vec_id, cos_sim); same determinism discipline as
-    * the single-query forms (integer ADC, (adc, vec_id) ties, rounded
-    * exact-cosine rerank).
-    */
-  def pqTopKServedBatch(spark: SparkSession, sfDir: String,
-                        queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                        k: Int = 10, rerank: Int = 100): DataFrame = {
-    require(queryIds.nonEmpty, "batch serving needs at least one query")
-    val codes = codesSnapshotRead(spark, sfDir, CodesKind.Sampled)
-    val base = loadNormalized(spark, sfDir)
-    val qs = base.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("vn").as("qvn"))
-    val cand = codes.join(broadcast(qs.select(col("query_id"), col("qvn"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", trainedAdc(col("qvn"), col("codes")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKPairs.topK(rerank)(col("adc"), col("vec_id"))
-        .as("cands"))
-      .select(col("query_id"), explode(col("cands")).as("vec_id"))
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    emb.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qs.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"))
-  }
-
-  /** IVF-PQ — the standard two-level ANN layout (Jégou et al. §V: coarse
-    * quantizer prunes, product codes rank): the query ranks the `nlist`
-    * coarse centroids DRIVER-SIDE (nlist rows — planning metadata, the
-    * bounded collect an ANN service performs to route a query), the codes
-    * scan prunes to the `nprobe` probed PARTITIONS of the
-    * [[ensurePqCodes]] artifact (static partition pruning — the plan's
-    * PartitionFilters, not a row filter), ADC ranks within the probed
-    * lists, and exact cosine reranks the top `rerank` as ever. At 100 TB
-    * the serving cost is nprobe/nlist of the codes bytes + `rerank` raw
-    * vectors — independent of corpus growth once list sizes are balanced.
-    * Centroid ranking uses the same fused cosine kernel as the oracle's
-    * `cosineSql` (bit-equal), so the probed set is cross-engine exact.
-    */
-  def pqTopKIvf(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-                k: Int = 10, nlist: Int = 16, nprobe: Int = 4,
-                rerank: Int = 100): DataFrame = {
-    ensurePqCodes(spark, sfDir, nlist)
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val q = emb.filter(col("vec_id") === queryId).select(col("v").as("qv"))
-    val probes: Seq[Long] = emb.filter(col("vec_id") < nlist)
-      .join(broadcast(q))
-      .select(col("vec_id").as("cid"), cosine(col("v"), col("qv")).as("cs"))
-      .collect()
-      .sortBy(r => (-r.getDouble(1), r.getLong(0)))
-      .take(nprobe).map(_.getLong(0)).toSeq
-    val base = loadNormalized(spark, sfDir)
-    val qn = base.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("vn").as("qvn"))
-    val cand = codesSnapshotRead(spark, sfDir, CodesKind.Sampled, Some(probes))
-      .filter(col("list").isin(probes: _*))
-      .join(broadcast(qn.select(col("qvn"))))
-      .filter(col("vec_id") =!= queryId)
-      .withColumn("adc", trainedAdc(col("qvn"), col("codes")))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"))
-    emb.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qn.select(col("qv"))))
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
   /** [[IvfModel]]'s published integer centroids → doubles, one plan
     * literal (nlist × dim = 1024 doubles; micro / 1e6 = the oracle's
     * `micro / 1000000.0`, bit-identical).
@@ -1361,102 +1239,6 @@ object Similarity {
         .withColumn("list",
           element_at(ivfTrainedRanked(col("vn")), 1)("cid").cast("long"))
         .withColumn("codes", trainedCodes(col("vn"))))
-
-  /** IVF-PQ serving on the FULLY-TRAINED stack: published coarse centroids
-    * ([[IvfModel]]) route the query and partition the codes, published PQ
-    * books ([[PqModel]]) quantize within lists — no sampled component
-    * anywhere, the deployment shape after both model updates. Routing is
-    * the centroid ranking evaluated on the ONE query row and collected
-    * (nlist structs — planning metadata); the codes scan prunes to the
-    * `nprobe` probed partitions (static PartitionFilters); ADC and the
-    * exact-cosine rerank are the shared trained kernels. Same determinism
-    * discipline as every PQ form, so the whole path sits behind the hash
-    * gate.
-    */
-  def pqTopKIvfTrained(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-                       k: Int = 10, nprobe: Int = 4,
-                       rerank: Int = 100): DataFrame = {
-    ensurePqCodesTrained(spark, sfDir)
-    val base = loadNormalized(spark, sfDir)
-    val qn = base.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("vn").as("qvn"))
-    // a queryId outside the corpus routes nowhere and returns empty, the
-    // same contract as the sampled sibling (never an index crash)
-    val probes: Seq[Int] = qn.select(ivfTrainedRanked(col("qvn")).as("r"))
-      .collect().headOption
-      .map(_.getSeq[org.apache.spark.sql.Row](0).take(nprobe).map(_.getInt(1)).toSeq)
-      .getOrElse(Seq.empty)
-    val cand = codesSnapshotRead(spark, sfDir, CodesKind.Trained,
-        Some(probes.map(_.toLong)))
-      .filter(col("list").isin(probes: _*))
-      .join(broadcast(qn.select(col("qvn"))))
-      .filter(col("vec_id") =!= queryId)
-      .withColumn("adc", trainedAdc(col("qvn"), col("codes")))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"))
-    Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qn.select(col("qv"))))
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** [[pqTopKIvfTrained]] batched — the trained layout under the
-    * [[pqTopKIvfBatch]] endpoint shape: routing is the published-centroid
-    * ranking evaluated in-plan on the Q-row query frame and collected
-    * (Q × nlist structs — the service's hot routing table, now derived
-    * from [[IvfModel]] instead of sampled rows), the trained codes scan
-    * prunes to the union of probed lists, per-query admission via the
-    * broadcast probe-map literal, `TopKPairs` partial aggregation, exact
-    * cosine rerank. With `nprobe = Nlist` the admission is vacuous and
-    * the serve equals the flat-PQ batch row-for-row (same trained codes,
-    * different partitioning — `IvfTrainedSpec` pins it), so the trained
-    * layout is a pure pruning overlay, never a different answer.
-    */
-  def pqTopKIvfTrainedBatch(spark: SparkSession, sfDir: String,
-                            queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                            k: Int = 10, nprobe: Int = 4,
-                            rerank: Int = 100): DataFrame = {
-    require(queryIds.nonEmpty, "batch serving needs at least one query")
-    ensurePqCodesTrained(spark, sfDir)
-    val base = loadNormalized(spark, sfDir)
-    val qn = base.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("vn").as("qvn"))
-    val probesByQ: Map[Long, Seq[Long]] = qn
-      .select(col("query_id"), ivfTrainedRanked(col("qvn")).as("r"))
-      .collect()
-      .map(row => row.getLong(0) ->
-        row.getSeq[org.apache.spark.sql.Row](1).take(nprobe).map(_.getInt(1).toLong))
-      .toMap
-    val unionLists = probesByQ.values.flatten.toSeq.distinct.sorted
-    val probeMap = map(probesByQ.toSeq.sortBy(_._1).flatMap { case (q, ps) =>
-      Seq(lit(q), typedLit(ps)) }: _*)
-    val cand = codesSnapshotRead(spark, sfDir, CodesKind.Trained, Some(unionLists))
-      .filter(col("list").isin(unionLists: _*)) // static partition pruning
-      .join(broadcast(qn.select(col("query_id"), col("qvn"))))
-      .filter(col("vec_id") =!= col("query_id") &&
-        array_contains(element_at(probeMap, col("query_id")), col("list")))
-      .withColumn("adc", trainedAdc(col("qvn"), col("codes")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKPairs.topK(rerank)(col("adc"), col("vec_id"))
-        .as("cands"))
-      .select(col("query_id"), explode(col("cands")).as("vec_id"))
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    emb.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qn.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"))
-  }
 
   // ===== Residual IVF-PQ (Jégou et al. TPAMI'11 §V — the textbook form:
   // the PQ books quantize the RESIDUAL x − c(list) under the coarse
@@ -1513,154 +1295,224 @@ object Similarity {
           element_at(ivfTrainedRanked(col("vn")), 1)("cid").cast("long"))
         .withColumn("codes", residualCodesFor(col("vn"), col("list"))))
 
-  /** Residual IVF-PQ serving, single query — [[pqTopKIvfTrained]]'s plan
-    * shape (published-centroid routing, partition-pruned codes scan, exact
-    * cosine rerank) over the residual artifact and [[residualAdc]]. Same
-    * bits, same cost, better-conditioned quantization.
+  // ===== ANN serving: one core over five layouts =====
+
+  /** One batched ANN serve over a codes [[Layout]] — the production
+    * endpoint shape (queries arrive in batches; the corpus is read once per
+    * batch, never once per query), and the only serve there is: a single
+    * query is a batch of one. Steps, the same for every layout:
+    *  1. the Q-row query frame (query_id, qv, qvn) from the normalized
+    *     corpus — ids outside the corpus simply have no row, so a batch
+    *     mixing valid and unknown ids answers the valid ones and a batch of
+    *     unknown ids answers nothing (never an index crash);
+    *  2. the layout's scored (query_id, vec_id, adc) pairs — its codes
+    *     source, its router and its ADC column;
+    *  3. self-matches dropped, then the per-query top `rerank` by
+    *     (adc, vec_id) via [[graft.functions.TopKPairs]] — a PARTIAL
+    *     AGGREGATION whose map-side heaps ship one ≤rerank-row buffer per
+    *     query across the exchange, where a window rank would shuffle all
+    *     n×Q ADC rows first;
+    *  4. exact cosine for the ≤ Q×rerank survivors (candidate ids
+    *     broadcast into one raw-vector join), top `k` per query by rounded
+    *     cosine with vec_id breaking ties, in a per-query window over
+    *     ≤ Q×rerank rows.
+    * A batch of one cuts steps 3 and 4 with sorted limits instead (same
+    * keys, same rows) and comes out in rank order; a batch's rows are
+    * unordered. Output (query_id, vec_id, cos_sim). Every quantity is an
+    * integer ADC or a round-6 cosine with vec_id ties, so each layout's
+    * serve sits behind the DuckDB hash gate.
     */
-  def pqTopKIvfRes(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-                   k: Int = 10, nprobe: Int = 4,
-                   rerank: Int = 100): DataFrame = {
-    ensurePqCodesRes(spark, sfDir)
-    val base = loadNormalized(spark, sfDir)
-    val qn = base.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("vn").as("qvn"))
-    val probes: Seq[Int] = qn.select(ivfTrainedRanked(col("qvn")).as("r"))
-      .collect().headOption
-      .map(_.getSeq[org.apache.spark.sql.Row](0).take(nprobe).map(_.getInt(1)).toSeq)
-      .getOrElse(Seq.empty)
-    val cand = codesSnapshotRead(spark, sfDir, CodesKind.Residual,
-        Some(probes.map(_.toLong)))
-      .filter(col("list").isin(probes: _*))
-      .join(broadcast(qn.select(col("qvn"))))
-      .filter(col("vec_id") =!= queryId)
-      .withColumn("adc", residualAdc(col("qvn"), col("list"), col("codes")))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"))
-    Tables.load(spark, sfDir, "embeddings")
+  def serve(spark: SparkSession, sfDir: String, layout: Layout,
+            queryIds: Seq[Long], k: Int = 10, rerank: Int = 100): DataFrame = {
+    require(queryIds.nonEmpty, "a serve needs at least one query")
+    // one query needs no per-query grouping: both cuts are sorted limits
+    // (TakeOrderedAndProject — per-partition heaps merged in one task, no
+    // exchange), which measured 20–30 % faster (median of 10 alternating
+    // pairs) per single-query sf0.01 serve than the heap-and-window plan
+    // (BASELINE.md, ANN serve core)
+    val one = queryIds.distinct.size == 1
+    val qs = queryFrame(spark, sfDir, queryIds)
+    val scored = layout.scored(spark, sfDir, qs)
+      .filter(col("vec_id") =!= col("query_id"))
+    val cand =
+      if (one) scored.orderBy(col("adc"), col("vec_id")).limit(rerank)
+        .select(col("query_id"), col("vec_id"))
+      else scored.groupBy(col("query_id"))
+        .agg(graft.functions.TopKPairs.topK(rerank)(col("adc"), col("vec_id"))
+          .as("cands"))
+        .select(col("query_id"), explode(col("cands")).as("vec_id"))
+    val reranked = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qn.select(col("qv"))))
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+      .join(broadcast(qs.select(col("query_id"), col("qv"))), Seq("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
+    if (one) reranked.orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+    else {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("query_id"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+      reranked.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k)
+        .select(col("query_id"), col("vec_id"), col("cos_sim"))
+    }
   }
 
-  /** [[pqTopKIvfRes]] batched — the [[pqTopKIvfTrainedBatch]] endpoint
-    * shape over the residual artifact: in-plan routing collected once
-    * (Q × nlist structs), union-of-probes manifest pruning, per-query
-    * probe admission, [[graft.functions.TopKPairs]] partial-agg heaps,
-    * exact-cosine rerank.
+  /** The (query_id, qv, qvn) frame of a serve: raw and normalized vectors
+    * of the ids that exist in the corpus.
     */
-  def pqTopKIvfResBatch(spark: SparkSession, sfDir: String,
-                        queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                        k: Int = 10, nprobe: Int = 4,
-                        rerank: Int = 100): DataFrame = {
-    require(queryIds.nonEmpty, "batch serving needs at least one query")
-    ensurePqCodesRes(spark, sfDir)
-    val base = loadNormalized(spark, sfDir)
-    val qn = base.filter(col("vec_id").isin(queryIds: _*))
+  private def queryFrame(spark: SparkSession, sfDir: String,
+                         queryIds: Seq[Long]): DataFrame =
+    loadNormalized(spark, sfDir).filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("vn").as("qvn"))
-    val probesByQ: Map[Long, Seq[Long]] = qn
-      .select(col("query_id"), ivfTrainedRanked(col("qvn")).as("r"))
+
+  /** List count of the sampled coarse quantizer: its centroids are the
+    * first `SampledLists` vectors. The sampled artifact's name does not
+    * carry it, so it is a constant, not a knob — another value would route
+    * over lists the standing artifact was never partitioned into.
+    */
+  private[graft] final val SampledLists = 16
+
+  /** Where a [[serve]] reads candidates and how it scores them — the
+    * deployment knob; the serve loop is not. A layout supplies only its
+    * codes source, its router and its ADC column.
+    */
+  sealed abstract class Layout(
+      /** The persisted codes artifact this layout reads; None for an inline
+        * encode.
+        */
+      private[graft] val codesKind: Option[String]) {
+
+    /** Build (or find) the codes artifact before serving — a serving loop
+      * must never pay the corpus-wide encode inside a request.
+      */
+    private[graft] def ensure(spark: SparkSession, sfDir: String): Unit =
+      codesKind.foreach(ensureCodesKind(spark, sfDir, _))
+
+    /** Scored (query_id, vec_id, adc) pairs for the query frame `qs`. */
+    private[ops] def scored(spark: SparkSession, sfDir: String, qs: DataFrame): DataFrame
+  }
+
+  /** Flat PQ from the persisted sampled artifact — [[pqTopKTrained]]'s
+    * answers with the corpus-wide encode gone from the serving plan: ADC
+    * reads the 5-byte codes table, whole.
+    */
+  case object Flat extends Layout(Some(CodesKind.Sampled)) {
+    private[ops] def scored(spark: SparkSession, sfDir: String, qs: DataFrame): DataFrame =
+      codesSnapshotRead(spark, sfDir, codesKind.get)
+        .join(broadcast(qs.select(col("query_id"), col("qvn"))))
+        .withColumn("adc", trainedAdc(col("qvn"), col("codes")))
+  }
+
+  /** IVF-PQ — the standard two-level ANN layout (Jégou et al. §V: coarse
+    * quantizer prunes, product codes rank). Each query ranks the coarse
+    * lists driver-side ([[route]]: Q × nlist rows of planning metadata, the
+    * routing table an ANN service keeps hot); the codes scan prunes to the
+    * UNION of every query's first `nprobe` lists at the manifest level and
+    * as static PartitionFilters, so at 100 TB a batch reads ≤ Q×nprobe list
+    * partitions of a 5-byte/row table; and a (query, candidate) pair is
+    * admitted only when the candidate's list is among THAT query's probes
+    * (an in-row lookup of the broadcast probe-map literal — IVF semantics
+    * per query, not per batch). With `nprobe` = all lists the admission is
+    * vacuous and the serve equals [[Flat]] row for row.
+    */
+  sealed abstract class IvfLayout(kind: String, lists: Int, probes: Int)
+      extends Layout(Some(kind)) {
+    require(probes >= 1 && probes <= lists, s"nprobe must be in [1, $lists]: $probes")
+
+    /** Each query's full list ranking, best first. */
+    private[ops] def route(spark: SparkSession, sfDir: String,
+                           qs: DataFrame): Map[Long, Seq[Long]]
+
+    private[ops] def adc(qvn: Column, list: Column, codes: Column): Column
+
+    private[ops] def scored(spark: SparkSession, sfDir: String, qs: DataFrame): DataFrame = {
+      val byQuery = route(spark, sfDir, qs).map { case (q, r) => q -> r.take(probes) }
+      val probed = byQuery.values.flatten.toSeq.distinct.sorted
+      codesSnapshotRead(spark, sfDir, codesKind.get, Some(probed))
+        .filter(col("list").isin(probed: _*)) // static partition pruning
+        .join(broadcast(qs.select(col("query_id"), col("qvn"))))
+        .filter(array_contains(element_at(typedLit(byQuery), col("query_id")), col("list")))
+        .withColumn("adc", adc(col("qvn"), col("list"), col("codes")))
+    }
+  }
+
+  /** IVF-PQ over the sampled artifact: raw-cosine routing against the
+    * first [[SampledLists]] vectors (the fused cosine kernel the oracle's
+    * `cosineSql` is bit-equal to, ties by centroid id), trained-book ADC.
+    */
+  final case class Ivf(nprobe: Int = 4) extends IvfLayout(CodesKind.Sampled, SampledLists, nprobe) {
+    private[ops] def route(spark: SparkSession, sfDir: String,
+                           qs: DataFrame): Map[Long, Seq[Long]] =
+      Tables.load(spark, sfDir, "embeddings")
+        .filter(col("vec_id") < SampledLists)
+        .select(col("vec_id").as("cid"), toDouble(col("embedding")).as("cv"))
+        .join(broadcast(qs.select(col("query_id"), col("qv"))))
+        .select(col("query_id"), col("cid"), cosine(col("cv"), col("qv")).as("cs"))
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (q, rs) =>
+          q -> rs.sortBy(r => (-r.getDouble(2), r.getLong(1))).map(_.getLong(1)).toSeq
+        }
+    private[ops] def adc(qvn: Column, list: Column, codes: Column): Column =
+      trainedAdc(qvn, codes)
+  }
+
+  /** IVF-PQ on the FULLY-TRAINED stack: published coarse centroids
+    * ([[IvfModel]]) route the query and partition the codes, published PQ
+    * books ([[PqModel]]) quantize within lists — no sampled component
+    * anywhere, the deployment shape after both model updates.
+    */
+  final case class IvfTrained(nprobe: Int = 4)
+      extends IvfLayout(CodesKind.Trained, IvfModel.Nlist, nprobe) {
+    private[ops] def route(spark: SparkSession, sfDir: String,
+                           qs: DataFrame): Map[Long, Seq[Long]] = trainedRoute(qs)
+    private[ops] def adc(qvn: Column, list: Column, codes: Column): Column =
+      trainedAdc(qvn, codes)
+  }
+
+  /** Residual IVF-PQ — [[IvfTrained]]'s routing and pruning over the
+    * residual artifact with [[residualAdc]]: same bits, same cost,
+    * better-conditioned quantization.
+    */
+  final case class IvfResidual(nprobe: Int = 4)
+      extends IvfLayout(CodesKind.Residual, IvfModel.Nlist, nprobe) {
+    private[ops] def route(spark: SparkSession, sfDir: String,
+                           qs: DataFrame): Map[Long, Seq[Long]] = trainedRoute(qs)
+    private[ops] def adc(qvn: Column, list: Column, codes: Column): Column =
+      residualAdc(qvn, list, codes)
+  }
+
+  /** Published-centroid routing: the [[ivfTrainedRanked]] ranking evaluated
+    * in-plan on the Q-row query frame and collected (Q × nlist structs).
+    */
+  private def trainedRoute(qs: DataFrame): Map[Long, Seq[Long]] =
+    qs.select(col("query_id"), ivfTrainedRanked(col("qvn")).as("r"))
       .collect()
       .map(row => row.getLong(0) ->
-        row.getSeq[org.apache.spark.sql.Row](1).take(nprobe).map(_.getInt(1).toLong))
+        row.getSeq[org.apache.spark.sql.Row](1).map(_.getInt(1).toLong))
       .toMap
-    val unionLists = probesByQ.values.flatten.toSeq.distinct.sorted
-    val probeMap = map(probesByQ.toSeq.sortBy(_._1).flatMap { case (q, ps) =>
-      Seq(lit(q), typedLit(ps)) }: _*)
-    val cand = codesSnapshotRead(spark, sfDir, CodesKind.Residual, Some(unionLists))
-      .filter(col("list").isin(unionLists: _*)) // static partition pruning
-      .join(broadcast(qn.select(col("query_id"), col("qvn"))))
-      .filter(col("vec_id") =!= col("query_id") &&
-        array_contains(element_at(probeMap, col("query_id")), col("list")))
-      .withColumn("adc", residualAdc(col("qvn"), col("list"), col("codes")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKPairs.topK(rerank)(col("adc"), col("vec_id"))
-        .as("cands"))
-      .select(col("query_id"), explode(col("cands")).as("vec_id"))
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    emb.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qn.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"))
-  }
 
-  /** BATCHED IVF-PQ serving — [[pqTopKIvf]]'s pruning composed with
-    * [[pqTopKServedBatch]]'s one-scan batch shape, the full production ANN
-    * endpoint: Q queries route driver-side against the `nlist` coarse
-    * centroids (a Q×nlist bounded collect — planning metadata, exactly the
-    * routing table an ANN service keeps hot), the codes scan prunes to the
-    * UNION of all probed lists (static PartitionFilters — at 100 TB the
-    * batch reads ≤ Q×nprobe list partitions of a 5-byte/row table, however
-    * large the corpus), each (query, candidate) pair is admitted only when
-    * the candidate's list is in THAT query's probes (an in-row lookup of
-    * the broadcast per-query probe map — IVF semantics per query, not
-    * per batch), ADC ranks via the [[graft.functions.TopKPairs]] partial
-    * aggregation (one ≤rerank-row buffer per query crosses the exchange),
-    * and exact cosine reranks. Output (query_id, vec_id, cos_sim), same
-    * determinism discipline as every PQ form.
+  /** OPQ — the published variance-balancing dimension permutation ahead of
+    * the unchanged ADC machinery, at identical bits to [[Flat]]. Served
+    * from an inline permuted encode (a persisted permuted-codes table would
+    * be the same 5 bytes/row, but would add a standing layout to the
+    * erasure/census surface), so there is nothing to ensure. CAVEAT vs the
+    * artifact layouts: the inline encode reads the RAW corpus directory at
+    * plan time, so [[graft.streaming.AnnIngest]]'s snapshot isolation (a
+    * serve sees pre- or post-growth in full) does NOT extend to it — a serve
+    * planned mid-landing can list a subset of a multi-file drop. Under
+    * concurrent ingest, prefer the artifact-backed layouts.
     */
-  def pqTopKIvfBatch(spark: SparkSession, sfDir: String,
-                     queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                     k: Int = 10, nlist: Int = 16, nprobe: Int = 4,
-                     rerank: Int = 100): DataFrame = {
-    require(queryIds.nonEmpty, "batch serving needs at least one query")
-    ensurePqCodes(spark, sfDir, nlist)
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val qs = emb.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    // per-query routing: rank the nlist centroids for every query in ONE
-    // bounded job (Q × nlist rows — the only driver-side collect, same
-    // cosine kernel as the oracle's cosineSql so the probe sets are
-    // cross-engine exact; ties by centroid id ascending)
-    val probesByQ: Map[Long, Seq[Long]] = emb.filter(col("vec_id") < nlist)
-      .join(broadcast(qs))
-      .select(col("query_id"), col("vec_id").as("cid"),
-        cosine(col("v"), col("qv")).as("cs"))
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (q, rs) =>
-        q -> rs.map(r => (r.getLong(1), r.getDouble(2)))
-          .sortBy(t => (-t._2, t._1)).take(nprobe).map(_._1).toSeq
-      }
-    val unionLists = probesByQ.values.flatten.toSeq.distinct.sorted
-    // query_id → its probed lists, as ONE map literal riding the plan
-    val probeMap = map(probesByQ.toSeq.sortBy(_._1).flatMap { case (q, ps) =>
-      Seq(lit(q), typedLit(ps)) }: _*)
-    val base = loadNormalized(spark, sfDir)
-    val qn = base.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("vn").as("qvn"))
-    val cand = codesSnapshotRead(spark, sfDir, CodesKind.Sampled, Some(unionLists))
-      .filter(col("list").isin(unionLists: _*)) // static partition pruning
-      .join(broadcast(qn.select(col("query_id"), col("qvn"))))
-      .filter(col("vec_id") =!= col("query_id") &&
-        array_contains(element_at(probeMap, col("query_id")), col("list")))
-      .withColumn("adc", trainedAdc(col("qvn"), col("codes")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKPairs.topK(rerank)(col("adc"), col("vec_id"))
-        .as("cands"))
-      .select(col("query_id"), explode(col("cands")).as("vec_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    emb.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qn.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"))
+  case object Opq extends Layout(None) {
+    private[ops] def scored(spark: SparkSession, sfDir: String, qs: DataFrame): DataFrame =
+      loadNormalized(spark, sfDir)
+        // a column of its own: the encode reads the permuted vector once
+        // per codeword, and must not re-permute per read
+        .withColumn("pn", opqPermute(col("vn")))
+        .select(col("vec_id"), opqCodes(col("pn")).as("codes"))
+        .join(broadcast(qs.select(col("query_id"), opqPermute(col("qvn")).as("qpn"))))
+        .withColumn("adc", opqAdc(col("qpn"), col("codes")))
   }
 
   /** Brute-force exact cosine top-k ids per query — the ONE definition of
@@ -1686,49 +1538,47 @@ object Similarity {
       .select(col("query_id"), col("vec_id"))
   }
 
-  /** Recall\@k harness — "measure, don't guess" as a first-class
-    * oracle-checked query: for a batch of queries, the flat-PQ serve
-    * ([[pqTopKServedBatch]]) and the IVF-PQ serve ([[pqTopKIvfBatch]]) are
-    * each scored against brute-force exact cosine top-k, producing one
-    * (variant, query_id, hits, recall) row per (variant, query). Every
+  /** Recall\@k scorecard over named layouts — "measure, don't guess" as a
+    * first-class oracle-checked query: each layout's [[serve]] of the query
+    * batch is scored against brute-force exact cosine top-k, one
+    * (variant, query_id, hits, recall) row per (layout, query). Every
     * quantity is deterministic — exact top-k ties break on round-6 cosine
-    * then vec_id, the ANN sides are the hash-green serving queries
-    * verbatim, hits is an integer intersection count — so recall itself
-    * sits behind the DuckDB hash gate, not a spec assertion: a quantizer
-    * or routing regression that silently degrades recall now FAILS
-    * correctness instead of passing with worse answers. The exact side is
-    * O(n·Q) by construction (it is the ground truth, not the serving
-    * path); the grid left-join keeps zero-hit (variant, query) rows
-    * visible instead of vanishing them.
+    * then vec_id, the ANN sides are the hash-green serves verbatim, hits is
+    * an integer intersection count — so recall itself sits behind the
+    * DuckDB hash gate: a quantizer or routing regression that silently
+    * degrades recall FAILS correctness instead of passing with worse
+    * answers. The exact side is O(n·Q) by construction (it is the ground
+    * truth, not the serving path); the grid left-join keeps zero-hit
+    * (variant, query) rows visible instead of vanishing them. The default
+    * four layouts compare flat PQ, sampled-quantizer IVF-PQ and the two
+    * TRAINED layouts at identical bits — `ivfpq_t` (raw-vector books) vs
+    * `ivfpq_res` (residual books) differ ONLY in what the books quantize;
+    * `ops_sim_recall_opq` scores `pq` vs `opq` the same way (only the
+    * dimension-to-subspace dealing differs).
     */
+  /** [[annRecall]]'s default variants: flat PQ and the three IVF layouts. */
+  val RecallLayouts: Seq[(String, Layout)] = Seq("pq" -> Flat, "ivfpq" -> Ivf(),
+    "ivfpq_t" -> IvfTrained(), "ivfpq_res" -> IvfResidual())
+
   def annRecall(spark: SparkSession, sfDir: String,
                 queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                k: Int = 10): DataFrame = {
+                k: Int = 10,
+                layouts: Seq[(String, Layout)] = RecallLayouts): DataFrame = {
     import spark.implicits._
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val qs = emb.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    require(layouts.nonEmpty, "the scorecard needs at least one layout")
+    val qs = Tables.load(spark, sfDir, "embeddings")
+      .filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"))
     val exact = exactTopKIds(spark, sfDir, queryIds, k)
-    // four variants, one scorecard: flat PQ, sampled-quantizer IVF-PQ, and
-    // the two TRAINED layouts at identical bits — `ivfpq_t` (raw-vector
-    // books) vs `ivfpq_res` (residual books) differ ONLY in what the books
-    // quantize, same routing, same m/ksub/rerank: the apples-to-apples
-    // residual-encoding comparison the textbook claims, measured as a
-    // hash-gated integer instead of asserted
-    val ann = pqTopKServedBatch(spark, sfDir, queryIds, k)
-      .select(lit("pq").as("variant"), col("query_id"), col("vec_id"))
-      .unionByName(pqTopKIvfBatch(spark, sfDir, queryIds, k)
-        .select(lit("ivfpq").as("variant"), col("query_id"), col("vec_id")))
-      .unionByName(pqTopKIvfTrainedBatch(spark, sfDir, queryIds, k)
-        .select(lit("ivfpq_t").as("variant"), col("query_id"), col("vec_id")))
-      .unionByName(pqTopKIvfResBatch(spark, sfDir, queryIds, k)
-        .select(lit("ivfpq_res").as("variant"), col("query_id"), col("vec_id")))
+    val ann = layouts.map { case (variant, layout) =>
+        serve(spark, sfDir, layout, queryIds, k)
+          .select(lit(variant).as("variant"), col("query_id"), col("vec_id"))
+      }
+      .reduce(_ unionByName _)
     val hits = ann.join(exact, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("variant"), col("query_id"))
       .agg(count(lit(1)).as("hits"))
-    val grid = Seq("ivfpq", "ivfpq_res", "ivfpq_t", "pq").toDF("variant")
-      .crossJoin(qs.select(col("query_id")))
+    val grid = layouts.map(_._1).toDF("variant").crossJoin(qs)
     grid.join(hits, Seq("variant", "query_id"), "left")
       .select(col("variant"), col("query_id"),
         coalesce(col("hits"), lit(0L)).as("hits"),
@@ -1736,82 +1586,48 @@ object Similarity {
   }
 
   /** The nprobe CALIBRATION curve — how a deployment actually picks the
-    * IVF knob: for each nprobe in `grid`, the batched IVF-PQ serve
-    * ([[pqTopKIvfBatch]] verbatim — the hash-green query, not a
-    * reimplementation) scored per query on BOTH axes of the trade:
-    * recall\@k against brute-force exact cosine, and `scanned` = the codes
-    * rows inside that query's probed lists — the 5-byte bytes-read cost an
-    * ANN service pays, an exact integer from the deterministic list
+    * IVF knob: for each nprobe in `grid`, the IVF [[serve]] (the hash-green
+    * query, not a reimplementation) scored per query on BOTH axes of the
+    * trade: recall\@k against brute-force exact cosine, and `scanned` = the
+    * codes rows inside that query's probed lists — the 5-byte bytes-read
+    * cost an ANN service pays, an exact integer from the deterministic list
     * assignment (so the whole curve sits behind the DuckDB hash gate; at
     * 100 TB you run this ONCE on a sample, read off the cheapest nprobe
-    * meeting the recall target, and freeze it into the endpoint). Each
-    * grid serve routes itself (the serving queries are used VERBATIM, so
-    * each pays its own Q×nlist bounded routing collect — planning
-    * metadata, |grid|+1 small jobs in total with the scanned axis's
-    * ranking); list sizes are one nlist-row aggregate of the codes table
-    * — the calibration adds NO corpus-sized work beyond the |grid| serves
-    * it is measuring. `grid` should end at `nlist`: the
-    * full-probe row is the flat-PQ ceiling (IVF admission vacuous —
-    * `PqServedSpec` pins that serve equal to [[pqTopKServedBatch]]), so
-    * the curve carries its own asymptote. `trained = true` runs the same
-    * curve over the TRAINED layout ([[pqTopKIvfTrainedBatch]], published
-    * centroids routing, trained artifact sizes) — the calibration a
-    * deployment re-runs after publishing its own [[IvfModel]].
+    * meeting the recall target, and freeze it into the endpoint). The
+    * scanned axis prefixes the layout's own [[IvfLayout.route]] ranking —
+    * the routing the serves run, not a copy of it. Each grid serve routes
+    * itself (|grid|+1 small routing collects in total); list sizes are one
+    * nlist-row aggregate of the codes table — the calibration adds NO
+    * corpus-sized work beyond the |grid| serves it is measuring. `grid`
+    * should end at the list count (16): the full-probe row is the flat-PQ
+    * ceiling (IVF admission vacuous), so the curve carries its own
+    * asymptote. `trained = true` runs the same curve over [[IvfTrained]]
+    * (published centroids routing, trained artifact sizes) — the
+    * calibration a deployment re-runs after publishing its own
+    * [[IvfModel]].
     */
   def ivfCalib(spark: SparkSession, sfDir: String,
                queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-               k: Int = 10, nlist: Int = 16,
+               k: Int = 10,
                grid: Seq[Int] = Seq(1, 2, 4, 16),
                rerank: Int = 100,
                trained: Boolean = false): DataFrame = {
     import spark.implicits._
-    require(grid.nonEmpty && grid.forall(np => np >= 1 && np <= nlist),
-      s"grid must be nprobe values in [1, $nlist]: $grid")
-    if (trained) require(nlist == IvfModel.Nlist,
-      s"the trained layout has ${IvfModel.Nlist} lists, not $nlist")
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val qs = emb.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    require(grid.nonEmpty, "the calibration grid needs at least one nprobe")
+    // each layout checks its nprobe against its list count
+    val layouts = grid.map(np => np -> (if (trained) IvfTrained(np) else Ivf(np)))
     val exact = exactTopKIds(spark, sfDir, queryIds, k)
-    val ann = grid.map { np =>
-        val serve =
-          if (trained) pqTopKIvfTrainedBatch(spark, sfDir, queryIds, k, np, rerank)
-          else pqTopKIvfBatch(spark, sfDir, queryIds, k, nlist, np, rerank)
-        serve.select(lit(np).as("nprobe"), col("query_id"), col("vec_id"))
+    val ann = layouts.map { case (np, layout) =>
+        serve(spark, sfDir, layout, queryIds, k, rerank)
+          .select(lit(np).as("nprobe"), col("query_id"), col("vec_id"))
       }
       .reduce(_ unionByName _)
     val hits = ann.join(exact, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("nprobe"), col("query_id"))
       .agg(count(lit(1)).as("hits"))
-    // cost axis: ranked routing per query (one bounded collect), prefixed
-    // per grid point; probed-list sizes from one nlist-row aggregate —
-    // each layout ranked by ITS OWN routing metric (sampled: raw-cosine
-    // desc; trained: published-centroid micro-L2 asc)
-    val ranked: Map[Long, Seq[Long]] =
-      if (trained) {
-        loadNormalized(spark, sfDir)
-          .filter(col("vec_id").isin(queryIds: _*))
-          .select(col("vec_id").as("query_id"), ivfTrainedRanked(col("vn")).as("r"))
-          .collect()
-          .map(row => row.getLong(0) ->
-            row.getSeq[org.apache.spark.sql.Row](1).map(_.getInt(1).toLong).toSeq)
-          .toMap
-      } else {
-        emb.filter(col("vec_id") < nlist)
-          .join(broadcast(qs))
-          .select(col("query_id"), col("vec_id").as("cid"),
-            cosine(col("v"), col("qv")).as("cs"))
-          .collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) =>
-            q -> rs.map(r => (r.getLong(1), r.getDouble(2)))
-              .sortBy(t => (-t._2, t._1)).map(_._1).toSeq
-          }
-      }
-    if (!trained) ensurePqCodes(spark, sfDir, nlist)
-    val sizes: Map[Long, Long] = codesSnapshotRead(spark, sfDir,
-        if (trained) CodesKind.Trained else CodesKind.Sampled)
+    val layout = layouts.head._2
+    val ranked = layout.route(spark, sfDir, queryFrame(spark, sfDir, queryIds))
+    val sizes: Map[Long, Long] = codesSnapshotRead(spark, sfDir, layout.codesKind.get)
       .groupBy(col("list")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val scanned = (for {
@@ -1844,7 +1660,7 @@ object Similarity {
   def ivfChoose(spark: SparkSession, sfDir: String,
                 recallTarget: Double = 0.8,
                 queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                k: Int = 10, nlist: Int = 16,
+                k: Int = 10,
                 grid: Seq[Int] = Seq(1, 2, 4, 16),
                 rerank: Int = 100,
                 trained: Boolean = false): DataFrame = {
@@ -1855,7 +1671,7 @@ object Similarity {
     val need = math.ceil(recallTarget * denom).toLong
     // the curve is the hash-green calibration VERBATIM (the serves are the
     // cost; this aggregation is |grid| rows of planning metadata)
-    val curve = ivfCalib(spark, sfDir, queryIds, k, nlist, grid, rerank, trained)
+    val curve = ivfCalib(spark, sfDir, queryIds, k, grid, rerank, trained)
       .groupBy(col("nprobe"))
       .agg(sum(col("hits")).as("th"), sum(col("scanned")).as("ts"))
       .collect()
@@ -1908,98 +1724,6 @@ object Similarity {
 
   private def opqAdc(qpn: Column, codes: Column): Column =
     bookAdc(opqBooks, OpqModel.M, OpqModel.Sub, qpn, codes)
-
-  /** OPQ top-k, single query — [[pqTopKTrained]]'s shape (inline encode,
-    * ADC rank, exact-cosine rerank) in the permuted space. The rerank uses
-    * the RAW vectors: the permutation only changes what the books
-    * quantize, never the answer geometry.
-    */
-  def opqTopK(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-              k: Int = 10, rerank: Int = 100): DataFrame = {
-    val base = loadNormalized(spark, sfDir)
-      .withColumn("pn", opqPermute(col("vn")))
-    val assigned = base.withColumn("codes", opqCodes(col("pn")))
-    val q = base.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("pn").as("qpn"))
-    assigned.join(broadcast(q))
-      .filter(col("vec_id") =!= queryId)
-      .withColumn("adc", opqAdc(col("qpn"), col("codes")))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** [[opqTopK]] batched — Q queries, one corpus pass, per-query
-    * [[graft.functions.TopKPairs]] heaps (the [[pqTopKServedBatch]] batch
-    * shape with the encode inline: OPQ shares the flat codes artifact's
-    * economics — a persisted permuted-codes table would be the same 5
-    * bytes/row — but is served inline here to keep the standing-layout
-    * set, and therefore the erasure/census surface, unchanged).
-    */
-  def opqTopKBatch(spark: SparkSession, sfDir: String,
-                   queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                   k: Int = 10, rerank: Int = 100): DataFrame = {
-    require(queryIds.nonEmpty, "batch serving needs at least one query")
-    val base = loadNormalized(spark, sfDir)
-      .withColumn("pn", opqPermute(col("vn")))
-    val qs = base.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("pn").as("qpn"))
-    val cand = base.withColumn("codes", opqCodes(col("pn")))
-      .join(broadcast(qs.select(col("query_id"), col("qpn"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", opqAdc(col("qpn"), col("codes")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKPairs.topK(rerank)(col("adc"), col("vec_id"))
-        .as("cands"))
-      .select(col("query_id"), explode(col("cands")).as("vec_id"))
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    emb.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qs.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"))
-  }
-
-  /** Recall scorecard for the permutation question alone: `pq` (flat
-    * trained books, [[pqTopKServedBatch]] verbatim) vs `opq`
-    * ([[opqTopKBatch]]) at IDENTICAL bits — same m/ksub/rerank, same
-    * rerank geometry, only the dimension-to-subspace dealing differs.
-    * Same hash-gate discipline as [[annRecall]] (kept separate so the
-    * long-stable four-variant scorecard's oracle is untouched): a
-    * permutation regression is a correctness failure, not a silent
-    * quality drift. On the near-isotropic main fixture the two are
-    * expected to measure close (no variance concentration to fix);
-    * `OpqSpec` pins the WIN on the fixture that has the disease.
-    */
-  def annRecallOpq(spark: SparkSession, sfDir: String,
-                   queryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L),
-                   k: Int = 10): DataFrame = {
-    import spark.implicits._
-    val qs = Tables.load(spark, sfDir, "embeddings")
-      .filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"))
-    val exact = exactTopKIds(spark, sfDir, queryIds, k)
-    val ann = pqTopKServedBatch(spark, sfDir, queryIds, k)
-      .select(lit("pq").as("variant"), col("query_id"), col("vec_id"))
-      .unionByName(opqTopKBatch(spark, sfDir, queryIds, k)
-        .select(lit("opq").as("variant"), col("query_id"), col("vec_id")))
-    val hits = ann.join(exact, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy(col("variant"), col("query_id"))
-      .agg(count(lit(1)).as("hits"))
-    val grid = Seq("opq", "pq").toDF("variant").crossJoin(qs)
-    grid.join(hits, Seq("variant", "query_id"), "left")
-      .select(col("variant"), col("query_id"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        round(coalesce(col("hits"), lit(0L)) / lit(k.toDouble), 2).as("recall"))
-  }
 
   /** The variance-balance AUDIT behind the permutation — per subspace, the
     * exact integer variance mass (Σ_d n·Σm² − (Σm)² over milli-quantized

@@ -800,7 +800,7 @@ private[graft] object TextOracles {
     // the same integer micros by 1000000.0, so the codewords are
     // bit-identical without any float crossing engines
     "ops_sim_pq_trained" -> pqTrainedSql,
-    // twin of [[graft.ops.Similarity.opqTopK]] — the trained-PQ CTE chain
+    // twin of [[graft.ops.Similarity.serve]] over `Opq`, query 0 — the trained-PQ CTE chain
     // in the PERMUTED space: pn = the published OPQ dimension reorder of
     // vn (a list_transform over the inlined 1-indexed perm — the oracle's
     // copy of Spark's element_at projection), books = the published OPQ
@@ -834,7 +834,7 @@ private[graft] object TextOracles {
          |FROM cand c JOIN e ON e.vec_id = c.vec_id, q
          |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.annRecallOpq]] — exact top-k per
+    // twin of [[graft.ops.Similarity.annRecall]] over `pq`/`opq` — exact top-k per
     // query, the flat trained-PQ top-k and the OPQ top-k (both CTE chains
     // verbatim at identical bits), integer intersection counts, and the
     // grid left join keeping zero-hit rows visible. The permutation's
@@ -943,13 +943,13 @@ private[graft] object TextOracles {
          |SELECT CAST(ai.g AS BIGINT) AS subspace, var_identity, var_opq
          |FROM ai JOIN ao ON ai.g = ao.g""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.pqTopKServed]] — the persisted-codes
+    // twin of [[graft.ops.Similarity.serve]] over `Flat`, query 0 — the persisted-codes
     // serving form. The ARTIFACT is a Spark-side layout choice (the codes
     // table holds exactly the trained encode of every vector), so the
     // oracle is the trained query verbatim: serving from codes must never
     // change answers, only plans.
     "ops_sim_pq_served" -> pqTrainedSql,
-    // twin of [[graft.ops.Similarity.pqTopKServedBatch]] — Q queries, one
+    // twin of [[graft.ops.Similarity.serve]] over `Flat`, queries 0-3 — Q queries, one
     // corpus pass: the trained-PQ CTEs with a query SET, per-query ADC
     // rank windows, shared exact-cosine rerank. The Spark side's map-side
     // top-k heaps keep exactly the window's (adc, vec_id)-ascending set,
@@ -988,7 +988,7 @@ private[graft] object TextOracles {
          |  JOIN q ON q.query_id = c.query_id)
          |WHERE rk <= 10""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.pqTopKIvf]] — IVF coarse pruning
+    // twin of [[graft.ops.Similarity.serve]] over `Ivf`, query 0 — IVF coarse pruning
     // (ops_sim_ivf's assignment + probes, raw-vector cosine) composed with
     // the trained-PQ ADC (ops_sim_pq_trained's CTEs) restricted to the
     // probed lists, then the shared exact-cosine rerank.
@@ -1030,7 +1030,7 @@ private[graft] object TextOracles {
          |FROM cand c2 JOIN e ON e.vec_id = c2.vec_id, q
          |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.pqTopKIvfBatch]] — per-query probe
+    // twin of [[graft.ops.Similarity.serve]] over `Ivf`, queries 0-3 — per-query probe
     // windows (ops_sim_ivfpq's probes CTE with a query SET) composed with
     // the batched trained-ADC CTEs, the pair admission requiring the
     // candidate's list in THAT query's probes, then the shared per-query
@@ -1236,7 +1236,7 @@ private[graft] object TextOracles {
          |FROM grid g LEFT JOIN hits h
          |  ON h.variant = g.variant AND h.query_id = g.query_id""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.pqTopKIvfTrained]] — the fully-trained
+    // twin of [[graft.ops.Similarity.serve]] over `IvfTrained`, query 0 — the fully-trained
     // stack: the PUBLISHED coarse centroids (icb VALUES) assign lists and
     // route the query by (micro-L2, ccid) — the same integer discipline as
     // the PQ encode, so partitioning and probing are cross-engine exact —
@@ -1282,7 +1282,7 @@ private[graft] object TextOracles {
          |FROM cand c2 JOIN e ON e.vec_id = c2.vec_id, q
          |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.pqTopKIvfTrainedBatch]] — the trained
+    // twin of [[graft.ops.Similarity.serve]] over `IvfTrained`, queries 0-3 — the trained
     // layout under the batch shape: published-centroid assignment and
     // per-query probe windows (micro-L2 asc), batched trained-ADC chain
     // with per-query list admission, shared per-query rerank windows.
@@ -1336,7 +1336,7 @@ private[graft] object TextOracles {
          |  JOIN q ON q.query_id = c2.query_id)
          |WHERE rk <= $k""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.pqTopKIvfRes]] — textbook residual
+    // twin of [[graft.ops.Similarity.serve]] over `IvfResidual`, query 0 — textbook residual
     // IVF-PQ: published-centroid assignment and routing (the trained
     // chain verbatim), then the RESIDUAL encode — every vector's r = vn −
     // c(list) quantized by the published residual books (rbv VALUES) —
@@ -1392,7 +1392,7 @@ private[graft] object TextOracles {
          |FROM cand c3 JOIN e ON e.vec_id = c3.vec_id, q
          |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin
     },
-    // twin of [[graft.ops.Similarity.pqTopKIvfResBatch]] — the residual
+    // twin of [[graft.ops.Similarity.serve]] over `IvfResidual`, queries 0-3 — the residual
     // chain under the batch shape: per-query probe windows, per-(query,
     // list) residual distance tables, per-query list admission, shared
     // per-query rerank windows.

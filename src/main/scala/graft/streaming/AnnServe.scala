@@ -7,11 +7,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Stream-driven ANN serving — the online half of the persisted-codes PQ
   * deployment ([[graft.ops.Similarity.ensurePqCodes]] /
-  * [[graft.ops.Similarity.pqTopKServedBatch]]): queries arrive as an
-  * unbounded stream of ids, each micro-batch becomes ONE batched serve
-  * against the codes artifact (corpus read once per micro-batch, never per
-  * query — the same Q-row-exchange plan the batch contract pinned), and
-  * results land keyed by micro-batch.
+  * [[graft.ops.Similarity.serve]]): queries arrive as an unbounded stream
+  * of ids, each micro-batch becomes ONE [[graft.ops.Similarity.serve]] over
+  * the chosen [[graft.ops.Similarity.Layout]] (corpus read once per
+  * micro-batch, never per query — the same Q-row-exchange plan the batch
+  * contract pinned), and results land keyed by micro-batch.
   *
   * Why foreachBatch and not a stream-static join: the serve is a multi-stage
   * plan (codes×queries ADC → per-query top-k AGGREGATION → candidate join →
@@ -30,80 +30,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object AnnServe {
 
-  /** Which batched serve the endpoint runs per micro-batch — the layout is
-    * a deployment knob, the loop is not: `Flat` scans the whole codes
-    * table ([[graft.ops.Similarity.pqTopKServedBatch]]); `IvfTrained`
-    * routes against the published [[graft.ops.IvfModel]] centroids and
-    * reads only the probed partitions of the trained artifact
-    * ([[graft.ops.Similarity.pqTopKIvfTrainedBatch]]) — what the endpoint
-    * graduates to at corpus sizes where even the 5-byte full scan is the
-    * bottleneck.
-    */
-  sealed trait Layout {
-    private[graft] def ensure(spark: SparkSession, sfDir: String): Unit
-    private[graft] def serve(spark: SparkSession, sfDir: String,
-                             ids: Seq[Long], k: Int, rerank: Int): DataFrame
-  }
-  case object Flat extends Layout {
-    private[graft] def ensure(spark: SparkSession, sfDir: String): Unit =
-      { Similarity.ensurePqCodes(spark, sfDir); () }
-    private[graft] def serve(spark: SparkSession, sfDir: String,
-                             ids: Seq[Long], k: Int, rerank: Int): DataFrame =
-      Similarity.pqTopKServedBatch(spark, sfDir, ids, k, rerank)
-  }
-  final case class IvfTrained(nprobe: Int = 4) extends Layout {
-    private[graft] def ensure(spark: SparkSession, sfDir: String): Unit =
-      { Similarity.ensurePqCodesTrained(spark, sfDir); () }
-    private[graft] def serve(spark: SparkSession, sfDir: String,
-                             ids: Seq[Long], k: Int, rerank: Int): DataFrame =
-      Similarity.pqTopKIvfTrainedBatch(spark, sfDir, ids, k, nprobe, rerank)
-  }
-  /** The residual-books layout ([[graft.ops.Similarity.pqTopKIvfResBatch]])
-    * — same routing and pruning as [[IvfTrained]], better-conditioned
-    * quantization at identical bits; what the endpoint graduates to after
-    * publishing a [[graft.ops.PqResModel]].
-    */
-  final case class IvfResidual(nprobe: Int = 4) extends Layout {
-    private[graft] def ensure(spark: SparkSession, sfDir: String): Unit =
-      { Similarity.ensurePqCodesRes(spark, sfDir); () }
-    private[graft] def serve(spark: SparkSession, sfDir: String,
-                             ids: Seq[Long], k: Int, rerank: Int): DataFrame =
-      Similarity.pqTopKIvfResBatch(spark, sfDir, ids, k, nprobe, rerank)
-  }
-  /** The OPQ layout ([[graft.ops.Similarity.opqTopKBatch]]) — the published
-    * variance-balancing dimension permutation ahead of the unchanged ADC
-    * machinery, at identical bits to [[Flat]]; served inline (no persisted
-    * permuted-codes table), so there is nothing to ensure pre-stream.
-    * CAVEAT vs the artifact layouts: the inline encode reads the RAW
-    * corpus directory at plan time, so [[AnnIngest]]'s snapshot-isolation
-    * guarantee (a serve sees pre- or post-growth in full) does NOT extend
-    * to this layout — a serve planned mid-landing can list a subset of a
-    * multi-file drop. Under concurrent ingest, prefer the artifact-backed
-    * layouts, whose reads bind to a committed manifest.
-    */
-  case object Opq extends Layout {
-    private[graft] def ensure(spark: SparkSession, sfDir: String): Unit = ()
-    private[graft] def serve(spark: SparkSession, sfDir: String,
-                             ids: Seq[Long], k: Int, rerank: Int): DataFrame =
-      Similarity.opqTopKBatch(spark, sfDir, ids, k, rerank)
-  }
-
-  /** Start the serving loop. `queries` is a streaming DataFrame bearing a
-    * `query_id` long column (ids into the corpus — production would carry a
-    * raw vector instead; the id form keeps the loop on the hash-green
-    * serving queries). Results: `outDir/batch_id=<n>/` parquet with
-    * (query_id, vec_id, cos_sim) — top-k neighbors per query.
-    */
-  /** The consumer's view of the served results: the LATEST answer per
-    * query — a query re-asked in a later batch supersedes its older
-    * answers (the serving corpus may have grown between batches). One
-    * read of the batch-partitioned dir (partition discovery gives
-    * `batch_id`), one per-query window over it; at scale the dir is
-    * bounded by [[sweepServed]]'s retention, so this is a view over the
-    * retained tail, not an unbounded history scan. Returns
-    * (query_id, batch_id, vec_id, cos_sim) — the full top-k of the
-    * winning batch.
-    */
   /** The served batch dirs under `outDir`, sorted by batch id — empty when
     * the dir doesn't exist yet or no non-empty micro-batch has landed (a
     * periodic consumer/sweeper may fire before the stream's first write;
@@ -127,6 +53,16 @@ object AnnServe {
       StructField("vec_id", LongType), StructField("cos_sim", DoubleType))))
   }
 
+  /** The consumer's view of the served results: the LATEST answer per
+    * query — a query re-asked in a later batch supersedes its older
+    * answers (the serving corpus may have grown between batches). One
+    * read of the batch-partitioned dir (partition discovery gives
+    * `batch_id`), one per-query window over it; at scale the dir is
+    * bounded by [[sweepServed]]'s retention, so this is a view over the
+    * retained tail, not an unbounded history scan. Returns
+    * (query_id, batch_id, vec_id, cos_sim) — the full top-k of the
+    * winning batch.
+    */
   def latest(spark: SparkSession, outDir: String): DataFrame = {
     if (servedBatchDirs(spark, outDir).isEmpty) return emptyLatest(spark)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
@@ -173,10 +109,17 @@ object AnnServe {
     dropped.toDF("batch_id", "files", "bytes")
   }
 
+  /** Start the serving loop. `queries` is a streaming DataFrame bearing a
+    * `query_id` long column (ids into the corpus — production would carry a
+    * raw vector instead; the id form keeps the loop on the hash-green
+    * serving queries). Results: `outDir/batch_id=<n>/` parquet with
+    * (query_id, vec_id, cos_sim) — top-k neighbors per query under
+    * `layout` (see [[graft.ops.Similarity.Layout]]).
+    */
   def serve(spark: SparkSession, sfDir: String, queries: DataFrame,
             outDir: String, checkpointDir: String,
             k: Int = 10, rerank: Int = 100,
-            layout: Layout = Flat): StreamingQuery = {
+            layout: Similarity.Layout = Similarity.Flat): StreamingQuery = {
     // the artifact is built (or found) BEFORE the stream starts — a serving
     // loop must never pay the corpus-wide encode inside a micro-batch
     layout.ensure(spark, sfDir)
@@ -186,7 +129,7 @@ object AnnServe {
         val ids = batch.select(col("query_id")).distinct()
           .collect().map(_.getLong(0)).toSeq.sorted
         if (ids.nonEmpty) {
-          layout.serve(spark, sfDir, ids, k, rerank)
+          Similarity.serve(spark, sfDir, layout, ids, k, rerank)
             .write.mode("overwrite")
             .parquet(s"$outDir/batch_id=$batchId")
         }

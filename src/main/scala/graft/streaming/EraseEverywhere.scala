@@ -1,6 +1,7 @@
 package graft.streaming
 
 import scala.language.implicitConversions
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -584,7 +585,8 @@ object EraseEverywhere {
         conn.commit()
       } catch {
         case e: Throwable =>
-          try conn.rollback() catch { case _: java.sql.SQLException => () }
+          // a failed rollback must not hide the ORIGINAL failure
+          try conn.rollback() catch { case NonFatal(r) => e.addSuppressed(r) }
           throw e
       } finally conn.close()
     }

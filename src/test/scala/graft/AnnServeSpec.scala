@@ -43,8 +43,8 @@ class AnnServeSpec extends SparkSuite {
       // answers: per query, the set of (neighbor, score) equals the
       // single-query serve (the oracle-gated plan)
       for (qid <- Seq(0L, 1L, 2L, 3L)) {
-        val expect = Similarity.pqTopKServed(spark, sf, queryId = qid)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+        val expect = serveRows(Similarity.serve(spark, sf, Similarity.Flat, Seq(qid)))
+          .map(t => (t._2, t._3)).toSet
         val served = got.filter(_._2 == qid).map(t => (t._3, t._4)).toSet
         assert(served == expect, s"stream-served answers for query $qid diverged")
       }
@@ -54,15 +54,9 @@ class AnnServeSpec extends SparkSuite {
   test("the trained-IVF and residual layouts plug into the same loop: answers == their batch serves") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val cases: Seq[(String, AnnServe.Layout,
-        (org.apache.spark.sql.SparkSession, String, Seq[Long]) => org.apache.spark.sql.DataFrame)] = Seq(
-      ("t", AnnServe.IvfTrained(),
-        (s, d, q) => Similarity.pqTopKIvfTrainedBatch(s, d, q)),
-      ("r", AnnServe.IvfResidual(),
-        (s, d, q) => Similarity.pqTopKIvfResBatch(s, d, q)),
-      ("o", AnnServe.Opq,
-        (s, d, q) => Similarity.opqTopKBatch(s, d, q)))
-    cases.foreach { case (tag, layout, batchServe) =>
+    val cases: Seq[(String, Similarity.Layout)] = Seq(
+      "t" -> Similarity.IvfTrained(), "r" -> Similarity.IvfResidual(), "o" -> Similarity.Opq)
+    cases.foreach { case (tag, layout) =>
       val input = MemoryStream[Long]
       val out = Files.createTempDirectory(s"ann_serve_${tag}_out").toString
       val ckpt = Files.createTempDirectory(s"ann_serve_${tag}_ckpt").toString
@@ -75,8 +69,7 @@ class AnnServeSpec extends SparkSuite {
         val got = spark.read.parquet(out)
           .select(col("query_id"), col("vec_id"), col("cos_sim"))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        val expect = batchServe(spark, sf, Seq(0L, 2L))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        val expect = serveRows(Similarity.serve(spark, sf, layout, Seq(0L, 2L))).toSet
         assert(got == expect,
           s"$tag-layout stream serve diverged from the batch serve:\n$got\nvs\n$expect")
       } finally q.stop()

@@ -42,13 +42,12 @@ class CcFinishSpec extends SparkSuite {
     } yield es ++ copies.map(_.swap) ++ copies
   }
 
-  /** What every closure must emit: min-id label per vertex of a
-    * non-self-loop edge (a self-loop alone labels nothing — the loop's
-    * first large-star drops it).
+  /** What every closure must emit: one min-id label per vertex appearing
+    * in any pair (a vertex whose only edges are self-loops is its own
+    * component).
     */
   private def truth(es: Edges): Seq[(Long, Long)] = {
-    val adj = es.filter { case (a, b) => a != b }
-      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+    val adj = es.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     adj.keys.toSeq.map { v =>
       var seen = Set(v); var frontier = Set(v)
@@ -64,7 +63,7 @@ class CcFinishSpec extends SparkSuite {
 
   test("union-find kernel == a reachability closure on any edge list") {
     val kernel = Prop.forAll(graphs(maxChain = 40)) { es =>
-      val got = Dedup.unionFindLabels(es.filter { case (a, b) => a != b }.iterator).toSeq.sorted
+      val got = Dedup.unionFindLabels(es.iterator).toSeq.sorted
       got == truth(es)
     }
     check(kernel, 300)
@@ -84,10 +83,7 @@ class CcFinishSpec extends SparkSuite {
         if (t >= n) assert(rounds == 0, "an edge set that fits must not run a round")
         rows(labels)
       }
-      // propagation also labels self-loop-only vertices; compare on the
-      // vertex set the star loop defines
-      val keep = want.map(_._1).toSet
-      val prop = rows(Dedup.connectedComponentsByPropagation(pairs)).filter(r => keep(r._1))
+      val prop = rows(Dedup.connectedComponentsByPropagation(pairs))
       (rows(looped) +: prop +: finishes).forall(_ == want)
     }
     check(closures, 3)
@@ -97,6 +93,7 @@ class CcFinishSpec extends SparkSuite {
     val shapes: Seq[Edges] = Seq(
       Seq.empty,
       Seq(3L -> 3L, 5L -> 5L),
+      Seq(3L -> 3L, 5L -> 5L, 5L -> 5L, 6L -> 9L, 9L -> 9L),
       Seq(1L -> 2L, 2L -> 1L, 1L -> 2L, 2L -> 2L, 7L -> 8L),
       (1L to 50L).map(i => (i * 3, 0L)))
     shapes.foreach { es =>

@@ -47,16 +47,17 @@ class GraftFacadeSpec extends SparkSuite {
     assert(vac.values.forall(_.isEmpty), s"unexpected reclaim on a clean fixture: $vac")
   }
 
-  test("annOpqTopKBatch / annRecallOpq facades match the operators") {
+  test("annTopK / annRecall facades match the operators") {
     val qids = Seq(0L, 1L)
-    val viaFacade = Graft.annOpqTopKBatch(spark, sf, qids)
+    val viaFacade = Graft.annTopK(spark, sf, qids, layout = Similarity.Opq)
       .collect().map(_.toSeq).toSet
-    val direct = Similarity.opqTopKBatch(spark, sf, qids)
+    val direct = Similarity.serve(spark, sf, Similarity.Opq, qids)
       .collect().map(_.toSeq).toSet
     assert(viaFacade == direct && viaFacade.nonEmpty)
-    val recFacade = Graft.annRecallOpq(spark, sf, qids)
+    val layouts = Seq("opq" -> Similarity.Opq, "pq" -> Similarity.Flat)
+    val recFacade = Graft.annRecall(spark, sf, qids, layouts)
       .collect().map(_.toSeq).toSet
-    val recDirect = Similarity.annRecallOpq(spark, sf, qids)
+    val recDirect = Similarity.annRecall(spark, sf, qids, layouts = layouts)
       .collect().map(_.toSeq).toSet
     assert(recFacade == recDirect && recFacade.size == 2 * qids.size)
   }

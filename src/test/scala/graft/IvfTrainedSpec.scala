@@ -56,7 +56,7 @@ class IvfTrainedSpec extends SparkSuite {
     // fixture-measured: Lloyd flattens the sampled layout's largest list
     assert(ts.max <= ss.max,
       s"trained layout more skewed than sampled: max ${ts.max} vs ${ss.max}")
-    val df = Similarity.pqTopKIvfTrained(spark, sf)
+    val df = Similarity.serve(spark, sf, Similarity.IvfTrained(), Seq(0L)).drop("query_id")
     val plan = df.queryExecution.executedPlan.toString
     val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n")
     assert(pf.contains("list"),
@@ -102,8 +102,9 @@ class IvfTrainedSpec extends SparkSuite {
       .sorted.take(4).map(_._2.toLong).toSet
     val members = spark.table(tname)
       .filter(col("list").isin(probes.toSeq: _*)).count()
-    val got = Similarity.pqTopKIvfTrained(spark, sf, 0L, 10, 4, rerank = members.toInt)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val got = serveRows(Similarity.serve(spark, sf, Similarity.IvfTrained(4), Seq(0L),
+        rerank = members.toInt))
+      .map(r => (r._2, r._3))
     def cos(a: Array[Double], b: Array[Double]): Double = {
       var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
@@ -121,19 +122,12 @@ class IvfTrainedSpec extends SparkSuite {
 
   test("trained batch == single-query trained serve per query; full probe == flat PQ") {
     val qids = Seq(0L, 1L, 2L, 3L)
-    val batch = Similarity.pqTopKIvfTrainedBatch(spark, sf, qids)
-      .collect().groupBy(_.getLong(0)).view
-      .mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
-    qids.foreach { qid =>
-      val single = Similarity.pqTopKIvfTrained(spark, sf, qid)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(batch(qid) == single, s"batch diverged from single serve for query $qid")
-    }
+    assertPerQueryIsolation(Similarity.IvfTrained(), qids)
     // nprobe = Nlist: admission vacuous, the trained layout is a pure
     // pruning overlay — same trained codes, so the serve IS flat PQ
-    val full = Similarity.pqTopKIvfTrainedBatch(spark, sf, qids,
-      nprobe = IvfModel.Nlist).collect().map(_.toSeq).toSet
-    val flat = Similarity.pqTopKServedBatch(spark, sf, qids)
+    val full = Similarity.serve(spark, sf, Similarity.IvfTrained(IvfModel.Nlist), qids)
+      .collect().map(_.toSeq).toSet
+    val flat = Similarity.serve(spark, sf, Similarity.Flat, qids)
       .collect().map(_.toSeq).toSet
     assert(full == flat, "full-probe trained IVF diverged from the flat-PQ serve")
   }

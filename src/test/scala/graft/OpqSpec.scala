@@ -68,16 +68,7 @@ class OpqSpec extends SparkSuite {
   }
 
   test("opq batch == single per query") {
-    val qids = Seq(0L, 1L, 2L, 3L)
-    val batch = Similarity.opqTopKBatch(spark, sf, qids)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    qids.foreach { q =>
-      val single = Similarity.opqTopK(spark, sf, queryId = q)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(batch(q) == single,
-        s"batched OPQ serve for query $q diverged from the single-query serve")
-    }
+    assertPerQueryIsolation(Similarity.Opq, Seq(0L, 1L, 2L, 3L))
   }
 
   // ===== the anisotropic-corpus experiment: the permutation WINS at

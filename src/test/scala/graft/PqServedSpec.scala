@@ -3,18 +3,25 @@ package graft
 import graft.ops.{PqModel, Similarity}
 
 /** The persisted-codes PQ serving path ([[Similarity.ensurePqCodes]] /
-  * [[Similarity.pqTopKServed]] / [[Similarity.pqTopKIvf]]): layout choices
-  * must never change answers, and the serving PLANS must actually be the
-  * amortized shape the artifact exists for — no corpus-wide encode, and
-  * (for IVF-PQ) a partition-pruned codes scan.
+  * [[Similarity.serve]] over [[Similarity.Flat]] and [[Similarity.Ivf]]):
+  * layout choices must never change answers, and the serving PLANS must
+  * actually be the amortized shape the artifact exists for — no
+  * corpus-wide encode, and (for IVF-PQ) a partition-pruned codes scan.
   */
 class PqServedSpec extends SparkSuite {
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("pqTopKServed returns exactly pqTopKTrained's rows") {
-    val served = Similarity.pqTopKServed(spark, sf).collect().toSeq
+  /** A single-query serve's (vec_id, cos_sim) rows as it returns them: a
+    * batch of one comes out in rank order (cos_sim desc, vec_id), the
+    * order the unserved forms return.
+    */
+  private def rankOrdered(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.drop("query_id").collect().toSeq
+
+  test("the flat serve returns exactly pqTopKTrained's rows") {
+    val served = rankOrdered(Similarity.serve(spark, sf, Similarity.Flat, Seq(0L)))
     val trained = Similarity.pqTopKTrained(spark, sf).collect().toSeq
     assert(served == trained,
       s"serving from the codes artifact changed answers:\n$served\nvs\n$trained")
@@ -22,7 +29,7 @@ class PqServedSpec extends SparkSuite {
 
   test("serving plan reads the codes artifact and contains no encode") {
     val name = Similarity.ensurePqCodes(spark, sf)
-    val plan = planOf(Similarity.pqTopKServed(spark, sf))
+    val plan = planOf(Similarity.serve(spark, sf, Similarity.Flat, Seq(0L)))
     assert(plan.contains(name.split('.').last),
       s"serving plan does not scan the persisted codes table:\n${plan.take(4000)}")
     // the encode's surviving plan signature is the per-row ARGMIN over the
@@ -41,7 +48,7 @@ class PqServedSpec extends SparkSuite {
 
   test("IVF-PQ prunes the codes scan to the probed partitions") {
     Similarity.ensurePqCodes(spark, sf)
-    val plan = planOf(Similarity.pqTopKIvf(spark, sf))
+    val plan = planOf(Similarity.serve(spark, sf, Similarity.Ivf(), Seq(0L)))
     // static partition pruning: the codes scan must carry a PartitionFilters
     // entry binding `list` to the nprobe probed ids (a post-scan row filter
     // would read every list's bytes — the opposite of the IVF contract)
@@ -82,46 +89,25 @@ class PqServedSpec extends SparkSuite {
     // rerank >= probed membership makes the ADC cut a no-op, so the output
     // must EQUAL exact cosine over the probed lists — the candidate-set
     // contract tested independently of ADC quality
-    val got = Similarity.pqTopKIvf(spark, sf, rerank = total.toInt).collect().toSeq
+    val got = rankOrdered(Similarity.serve(spark, sf, Similarity.Ivf(), Seq(0L),
+      rerank = total.toInt))
     assert(got == exact, s"IVF-PQ diverged from exact-over-probed-lists:\n$got\nvs\n$exact")
   }
 
   test("batched serving: per-query rows equal the single-query serve; heap replaces the window") {
-    import org.apache.spark.sql.functions._
     val qids = Seq(0L, 1L, 2L, 3L)
-    val batch = Similarity.pqTopKServedBatch(spark, sf, qids)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
-    qids.foreach { q =>
-      val single = Similarity.pqTopKServed(spark, sf, queryId = q)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      // batch rows carry no intra-query order guarantee (window filter,
-      // not a sorted limit) — the SET of (neighbor, score) is the contract
-      assert(batch(q).toSet == single,
-        s"batched serve for query $q diverged from the single-query serve")
-    }
+    assertPerQueryIsolation(Similarity.Flat, qids)
     // the batch plan must NOT shuffle the n×Q ADC rows: the only exchange
     // below the candidate join is the Q-row partial-agg heap output
-    val plan = Similarity.pqTopKServedBatch(spark, sf, qids)
-      .queryExecution.executedPlan.toString
+    val plan = planOf(Similarity.serve(spark, sf, Similarity.Flat, qids))
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"),
       s"per-query top-k is not running as an aggregation (map-side heaps):\n${plan.take(2000)}")
   }
 
   test("batched IVF-PQ: per-query rows equal the single-query IVF serve; scan stays pruned") {
-    import org.apache.spark.sql.functions._
     val qids = Seq(0L, 1L, 2L, 3L)
-    val batch = Similarity.pqTopKIvfBatch(spark, sf, qids)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    qids.foreach { q =>
-      val single = Similarity.pqTopKIvf(spark, sf, queryId = q)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(batch(q) == single,
-        s"batched IVF-PQ for query $q diverged from the single-query serve")
-    }
-    val plan = Similarity.pqTopKIvfBatch(spark, sf, qids)
-      .queryExecution.executedPlan.toString
+    assertPerQueryIsolation(Similarity.Ivf(), qids)
+    val plan = planOf(Similarity.serve(spark, sf, Similarity.Ivf(), qids))
     // the batch must keep BOTH amortizations: partition-pruned codes scan
     // (union of all probes) and no corpus-wide encode
     val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n")
@@ -131,6 +117,24 @@ class PqServedSpec extends SparkSuite {
       "batched IVF-PQ serving plan re-encodes the corpus")
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"),
       "per-query top-k is not running as an aggregation (map-side heaps)")
+  }
+
+  test("every layout: unknown ids get no rows beside a valid one; an all-unknown batch is empty") {
+    // ids outside the corpus have no query row — the serve answers the
+    // valid ids alone, and an all-unknown batch (empty routing table, an
+    // empty probe-map literal, no probed list) still plans and runs
+    val layouts = Seq(Similarity.Flat, Similarity.Ivf(), Similarity.IvfTrained(),
+      Similarity.IvfResidual(), Similarity.Opq)
+    val unknown = Seq(-1L, 1000000000L)
+    layouts.foreach { layout =>
+      val valid = serveRows(Similarity.serve(spark, sf, layout, Seq(0L))).toSet
+      val mixed = serveRows(Similarity.serve(spark, sf, layout, 0L +: unknown)).toSet
+      assert(valid.size == 10 && mixed == valid,
+        s"$layout: a mixed batch answered differently than its valid id alone")
+      val none = Similarity.serve(spark, sf, layout, unknown)
+      assert(none.columns.toSeq == Seq("query_id", "vec_id", "cos_sim"))
+      assert(none.collect().isEmpty, s"$layout: an all-unknown batch returned rows")
+    }
   }
 
   test("annRecall: full grid, exact-integer hits, trained-books recall floor holds") {
@@ -204,9 +208,9 @@ class PqServedSpec extends SparkSuite {
     // nprobe = nlist makes the IVF admission vacuous: that serve IS flat PQ,
     // so the calibration curve carries its own ceiling
     val qids = Seq(0L, 1L, 2L, 3L)
-    val full = Similarity.pqTopKIvfBatch(spark, sf, qids, 10, 16, 16, 100)
+    val full = Similarity.serve(spark, sf, Similarity.Ivf(16), qids)
       .collect().map(_.toSeq).toSet
-    val flat = Similarity.pqTopKServedBatch(spark, sf, qids, 10)
+    val flat = Similarity.serve(spark, sf, Similarity.Flat, qids)
       .collect().map(_.toSeq).toSet
     assert(full == flat, "full-probe IVF-PQ diverged from the flat-PQ serve")
   }
@@ -291,7 +295,7 @@ class PqServedSpec extends SparkSuite {
       "refresh rewrote existing partition files")
     // incremental == from-scratch: the refreshed artifact serves the grown
     // corpus exactly as the encode-inline query computes it
-    val served = Similarity.pqTopKServed(spark, dir).collect().toSeq
+    val served = rankOrdered(Similarity.serve(spark, dir, Similarity.Flat, Seq(0L)))
     val trained = Similarity.pqTopKTrained(spark, dir).collect().toSeq
     assert(served == trained,
       s"refreshed artifact diverged from from-scratch encode:\n$served\nvs\n$trained")

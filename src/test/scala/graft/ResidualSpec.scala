@@ -29,7 +29,7 @@ class ResidualSpec extends SparkSuite {
   }
 
   test("residual serve: artifact scan with pruned lists, no corpus encode, batch == single") {
-    val plan = Similarity.pqTopKIvfRes(spark, sf)
+    val plan = Similarity.serve(spark, sf, Similarity.IvfResidual(), Seq(0L))
       .queryExecution.executedPlan.toString
     val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n")
     assert(pf.contains("list"),
@@ -37,16 +37,7 @@ class ResidualSpec extends SparkSuite {
     assert(!plan.contains(s"sequence(0, ${PqResModel.Ksub - 1}"),
       "residual serving plan re-encodes the corpus")
 
-    val qids = Seq(0L, 1L, 2L, 3L)
-    val batch = Similarity.pqTopKIvfResBatch(spark, sf, qids)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    qids.foreach { q =>
-      val single = Similarity.pqTopKIvfRes(spark, sf, queryId = q)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(batch(q) == single,
-        s"batched residual serve for query $q diverged from the single-query serve")
-    }
+    assertPerQueryIsolation(Similarity.IvfResidual(), Seq(0L, 1L, 2L, 3L))
   }
 
   test("ivfChoose: picks the cheapest eligible nprobe; an unreachable target fails loudly") {

@@ -35,6 +35,24 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
+  /** An ANN serve's rows as (query_id, vec_id, cos_sim). */
+  def serveRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+
+  /** Per-query isolation of [[graft.ops.Similarity.serve]]: the batched
+    * serve of `qids` restricted to each q equals the serve of q alone (a
+    * full top-10). Serve rows carry no order guarantee — the SET is the
+    * contract.
+    */
+  def assertPerQueryIsolation(layout: graft.ops.Similarity.Layout, qids: Seq[Long]): Unit = {
+    val batch = serveRows(graft.ops.Similarity.serve(spark, sf, layout, qids)).groupBy(_._1)
+    qids.foreach { q =>
+      val single = serveRows(graft.ops.Similarity.serve(spark, sf, layout, Seq(q)))
+      assert(single.size == 10 && batch(q).toSet == single.toSet,
+        s"$layout: the batched serve for query $q diverged from its batch of one")
+    }
+  }
+
   /** Wait until the query's FIRST source has committed through `target`
     * (a MemoryStream LongOffset — one increment per addData call).
     * `processAllAvailable` cannot be used on a transformWithState query in
