@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.Similarity
 import graft.streaming.AnnServe
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -33,16 +32,7 @@ object AnnServeBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batches = args.lift(1).map(_.toInt).getOrElse(30)
     val q = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
@@ -71,10 +61,9 @@ object AnnServeBench {
         val cold = oneBatch(0)
         (1 to 3).foreach(oneBatch) // warm-up, discarded
         val samples = (4 until 4 + batches).map(oneBatch).sorted
-        println(s"""{"metric":"ann_serve_latency","layout":"$tag","sf":"$sfDir",""" +
-          s""""q":$q,"batches":$batches,"cold_ms":$cold,""" +
-          s""""p50_ms":${pct(samples, 0.50)},"p90_ms":${pct(samples, 0.90)},""" +
-          s""""max_ms":${samples.last}}""")
+        Harness.emit("ann_serve_latency", "layout" -> tag, "sf" -> sfDir, "q" -> q,
+          "batches" -> batches, "cold_ms" -> cold, "p50_ms" -> pct(samples, 0.50),
+          "p90_ms" -> pct(samples, 0.90), "max_ms" -> samples.last)
       } finally query.stop()
     }
     spark.stop()

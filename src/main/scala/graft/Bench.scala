@@ -1,26 +1,10 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.SeqMap
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // size the codegen cache for the workload: the default 100 entries
-      // thrash under a 183-query pass-major sweep (every query codegen-cold
-      // every pass — the query-major harness got back-to-back cache hits),
-      // which taxed short queries ~0.2-0.5 s/pass of re-compile+re-JIT that
-      // says nothing about the plans being measured
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-    // conf A/B hook for session-conf audits (shared parser, loud on a
-    // malformed entry): see Graft.confOverrides
-    val spark = Graft.confOverrides(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // warm up executor/codegen machinery so the first timed query doesn't
     // absorb one-time session init (~6 s); the region read goes through
     // Tables like every query's does
@@ -70,20 +54,13 @@ object Bench {
     // ms-grain rounding keeps the artifact line short enough that the
     // driver's 2000-char stdout tail reaches past dozens of per-rep arrays
     // into the scalar summary; sub-ms digits are noise at these runtimes
-    def f3(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    def f3(v: Double): Any =
+      if (v < 0) -1 else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     val sorted = results.toSeq.sortBy(_._1)
-    val qs = sorted.map { case (k, (v, _)) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
     // per-rep raw times alongside the min: a contended run (one rep far
-    // slower than the other) is now identifiable from the artifact alone —
-    // two rounds running the driver's headline contained a >7× contention
-    // spike that only an out-of-band clean rerun could refute. The top-level
-    // contract (metric/value/unit/queries/sf) is unchanged; "times" is a
-    // sibling key that existing consumers ignore.
-    val ts = sorted.map { case (k, (_, times)) =>
-      s"\"" + k + "\":" + times.map(f3).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    // slower than the other) is identifiable from the artifact alone. The
+    // top-level contract (metric/value/unit/queries/sf) is unchanged;
+    // "times" is a sibling key that existing consumers ignore.
     val total = results.values.map(_._1).filter(_ >= 0).sum
     // key order is deliberate: "queries" first, per-rep "times" second, the
     // scalar summary (metric/value/unit/sf) LAST — the driver archives only
@@ -91,8 +68,10 @@ object Bench {
     // value AND the last stretch of per-rep arrays (keys sorted, so WHICH
     // queries land in the tail is stable across rounds). JSON object key
     // order is semantically free, so consumers are unmoved.
-    val line =
-      s"""{"queries":$qs,"times":$ts,"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir"}"""
+    val line = Harness.line(
+      "queries" -> SeqMap.from(sorted.map { case (k, (v, _)) => k -> f3(v) }),
+      "times" -> SeqMap.from(sorted.map { case (k, (_, times)) => k -> times.map(f3) }),
+      "metric" -> "total", "value" -> f3(total), "unit" -> "sec", "sf" -> sfDir)
     println(line)
     // a FILTERED run (query-name args — the iterate-on-one-query mode) must
     // not clobber the committed full-inventory artifact: it lands in /tmp
@@ -109,7 +88,9 @@ object Bench {
     // artifact file verbatim); consumers that captured complete stdout are
     // unmoved, consumers that keep a tail now get a parseable record.
     val nOk = results.values.count(_._1 >= 0)
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","n":${results.size},"n_ok":$nOk,"cpus":$cpus,"reps":$reps,"out":"$outPath"}""")
+    Harness.emit("total", "value" -> f3(total), "unit" -> "sec", "sf" -> sfDir,
+      "n" -> results.size, "n_ok" -> nOk, "cpus" -> Harness.cpus, "reps" -> reps,
+      "out" -> outPath)
     // the full untruncated line also lands next to the build (cwd, override
     // via SPARK_GRAFT_BENCH_OUT), so per-rep evidence for EVERY query (not
     // just the tail) is readable after the driver's stdout truncation —

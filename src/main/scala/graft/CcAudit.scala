@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Scale-corpus CC verification — the engine-side answer to the x100
@@ -21,15 +20,7 @@ import org.apache.spark.sql.functions.col
 object CcAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_scale/x100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val t0 = System.nanoTime()
     // one decode pass: the pair graph feeds the closure AND every audit
@@ -40,9 +31,8 @@ object CcAudit {
     val audit = graft.ops.Dedup.auditComponents(pairs, cc)
     val idem = graft.ops.Dedup.ccIdempotenceDiff(cc)
     val sec = (System.nanoTime() - t0) / 1e9
-    val fields = audit.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    println(s"""{"metric":"cc_audit","dir":"$dir","edges":${pairs.count()},$fields,"idempotence_diff":$idem,"sec":$sec}""")
+    Harness.emit("cc_audit", Seq[(String, Any)]("dir" -> dir, "edges" -> pairs.count()) ++
+      audit.toSeq.sortBy(_._1) ++ Seq("idempotence_diff" -> idem, "sec" -> sec): _*)
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Multimodal, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Engine-side scale parity for the CC-closure query family — the five
@@ -31,16 +31,7 @@ import org.apache.spark.sql.functions._
 object CcParity {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_scale/x10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
@@ -98,7 +89,9 @@ object CcParity {
       val ok = p == t
       if (!ok) fails += 1
       val sec = (System.nanoTime() - t0) / 1e9
-      println(s"""{"metric":"cc_parity","query":"$name","dir":"$dir","rows":${p._1},"fp":"${p._2}","twin_rows":${t._1},"twin_fp":"${t._2}","match":$ok,"sec":$sec}""")
+      Harness.emit("cc_parity", "query" -> name, "dir" -> dir, "rows" -> p._1,
+        "fp" -> p._2.toString, "twin_rows" -> t._1, "twin_fp" -> t._2.toString,
+        "match" -> ok, "sec" -> sec)
     }
     spark.stop()
     if (fails > 0) sys.exit(1)

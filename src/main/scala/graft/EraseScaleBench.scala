@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{CdcSource, CdcStream, StateErasure, StateMigration}
-import org.apache.spark.sql.SparkSession
 
 /** GDPR erasure of DURABLE STREAMING STATE at scale — the r11 operator's
   * cost curve: build a transformWithState prev-image checkpoint holding
@@ -33,17 +32,9 @@ object EraseScaleBench {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
     val nErased = args.lift(1).map(_.toInt).getOrElse(10000)
     val waves = args.lift(2).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val users = math.max(1L, n / 2)
@@ -52,7 +43,7 @@ object EraseScaleBench {
     def src(startAfter: Long = -1L) = {
       val r = spark.readStream.format("graft.streaming.CdcSourceProvider")
         .option("synthetic", feedName).option("syntheticUsers", users.toString)
-        .option("numPartitions", cpus)
+        .option("numPartitions", Harness.cpus.toString)
       (if (startAfter >= 0) r.option("startAfterId", startAfter.toString) else r)
         .load().as[CdcStream.RawChange]
     }
@@ -68,7 +59,7 @@ object EraseScaleBench {
       val sec = (System.nanoTime() - t0) / 1e9
       q.stop()
       val rows = StateMigration.readPrevImageStateTws(spark, chk).count()
-      println(s"""{"metric":"erase_scale_stage","events":$n,"state_rows":$rows,"sec":$sec}""")
+      Harness.emit("erase_scale_stage", "events" -> n, "state_rows" -> rows, "sec" -> sec)
       require(rows == users, s"staging built $rows of $users keys")
     }
 
@@ -81,7 +72,7 @@ object EraseScaleBench {
       feed.advanceTo(n + nErased - 1); q.processAllAvailable()
       val sec = (System.nanoTime() - t0) / 1e9
       q.stop()
-      println(s"""{"metric":"erase_scale_control_wave","events":$nErased,"sec":$sec}""")
+      Harness.emit("erase_scale_control_wave", "events" -> nErased, "sec" -> sec)
     }
 
     // ===== shape 1: in-place on the existing checkpoint =====
@@ -104,7 +95,7 @@ object EraseScaleBench {
       val got = StateMigration.readPrevImageStateTws(spark, chk)
         .filter(r => sample.contains(r._1)).collect().toMap
       require(got == sample, s"in-place erasure left stale payloads: ${got.size} checked")
-      println(s"""{"metric":"erase_scale_inplace","state_rows":$users,"erased":${erased.size},"sec":$sec}""")
+      Harness.emit("erase_scale_inplace", "state_rows" -> users, "erased" -> erased.size, "sec" -> sec)
     }
 
     // ===== shape 2: offline rewrite to a fresh checkpoint =====
@@ -132,7 +123,8 @@ object EraseScaleBench {
       val after = StateMigration.readPrevImageStateTws(spark, dir).count()
       val want = users - erased2.size
       require(after == want, s"offline rewrite left $after rows, want $want")
-      println(s"""{"metric":"erase_scale_offline","state_rows_before":$users,"erased":${erased2.size},"state_rows_after":$after,"sec":$sec}""")
+      Harness.emit("erase_scale_offline", "state_rows_before" -> users, "erased" -> erased2.size,
+        "state_rows_after" -> after, "sec" -> sec)
       dir
     }
 
@@ -158,7 +150,7 @@ object EraseScaleBench {
         concat(lit("""{"k": """), col("id") % 997, lit("}")).as("props"))
         .transform(df => { graft.sources.Layout.writeEventArchive(df, adir); df })
       val stageSec = (System.nanoTime() - tStage) / 1e9
-      println(s"""{"metric":"erase_everywhere_archive_stage","rows":$n,"sec":$stageSec}""")
+      Harness.emit("erase_everywhere_archive_stage", "rows" -> n, "sec" -> stageSec)
 
       // a fresh 10k backlog: offset by 1 from shape 2's keys so every one
       // is still present in chkB; exclude the commit-driver row's user so
@@ -185,7 +177,9 @@ object EraseScaleBench {
       val found = report.map(r => r.getString(0) -> r.getLong(1)).toMap
       require(found("archive") > 0 && found("tws") > 0,
         s"backlog must be present before the call: $found")
-      println(s"""{"metric":"erase_everywhere_total","archive_rows":$n,"state_rows":${users - nErased},"erased":${backlog.size},"archive_found":${found("archive")},"state_found":${found("tws")},"sec":$sec}""")
+      Harness.emit("erase_everywhere_total", "archive_rows" -> n, "state_rows" -> (users - nErased),
+        "erased" -> backlog.size, "archive_found" -> found("archive"),
+        "state_found" -> found("tws"), "sec" -> sec)
 
       // ===== shape 4: the receipt ledger at LIFETIME scale =====
       // receipts are all-time compliance evidence (never dropped), so a
@@ -212,7 +206,8 @@ object EraseScaleBench {
         .write.mode("append")
         .parquet(new org.apache.hadoop.fs.Path(adir, "_erasure_receipts").toString)
       val secBig = recall()
-      println(s"""{"metric":"erase_everywhere_recall_ledger","receipts_small":${backlog.size},"sec_small":$secSmall,"receipts_big":${nReceipts + backlog.size},"sec_big":$secBig}""")
+      Harness.emit("erase_everywhere_recall_ledger", "receipts_small" -> backlog.size,
+        "sec_small" -> secSmall, "receipts_big" -> (nReceipts + backlog.size), "sec_big" -> secBig)
     }
     spark.stop()
   }

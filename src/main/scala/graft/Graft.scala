@@ -21,21 +21,6 @@ import org.apache.spark.sql.functions.{col, xxhash64}
   */
 object Graft {
 
-  /** SPARK_GRAFT_CONF overrides (comma-separated key=value, split on the
-    * FIRST '=' so values may contain '='; commas inside values are not
-    * expressible) layered onto a session builder — the bench tools' A/B
-    * hook for session-conf audits. Builder-level so static confs
-    * (codegen cache, state provider) can be varied too.
-    */
-  private[graft] def confOverrides(builder: SparkSession.Builder): SparkSession.Builder =
-    sys.env.get("SPARK_GRAFT_CONF").map(_.split(',').filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-      .foldLeft(builder) { (b, kv) =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry is not key=value: '$kv'")
-        b.config(kv.take(i), kv.drop(i + 1))
-      }
-
   /** A SparkSession builder preconfigured for this engine: native SQL
     * functions registered, ANSI semantics (the oracle contract assumes it),
     * and a codegen cache sized for a many-query workload — Spark's default
@@ -47,7 +32,7 @@ object Graft {
     * [[graft.streaming.LocalCheckpointFileManager]], which spares `file:`
     * checkpoints a forked `chmod`/`readlink` per file.
     * `spark.sql.shuffle.partitions` is left to the caller/cluster defaults —
-    * size it to your core count (the harness uses 32 on local[32]).
+    * size it to your core count ([[Harness.session]] uses one per core).
     */
   def sessionBuilder(): SparkSession.Builder =
     SparkSession.builder()

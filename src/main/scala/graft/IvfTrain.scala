@@ -25,7 +25,7 @@ object IvfTrain {
     val out = args.lift(1).getOrElse("/tmp/IvfModel.scala")
     val (nlist, iters) = (16, 5)
 
-    val spark = PqTrain.trainerSession("ivf-train")
+    val spark = Harness.session()
     val vecs = PqTrain.normalizedCorpus(spark, sfDir)
     val micros = PqTrain.train(vecs, m = 1, ksub = nlist, iters = iters)(0)
 
@@ -49,7 +49,7 @@ object IvfTrain {
          |""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"""{"metric":"ivf_train","nlist":$nlist,"iters":$iters,"out":"$out"}""")
+    Harness.emit("ivf_train", "nlist" -> nlist, "iters" -> iters, "out" -> out)
     spark.stop()
   }
 }

@@ -31,6 +31,10 @@ object ListenBench {
     val event = """{"schema":"public","table":"events","op":"UPDATE","id":"7",""" +
       """"payload":{"k":2,"pad":"xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx"},"changes":{"k":1}}"""
 
+    def fanOut(metric: String, sec: Double): Unit =
+      Harness.emit(metric, "events" -> n, "subscribers" -> nSubs, "sec" -> sec,
+        "events_per_sec" -> (n / sec).toLong, "delivered_per_sec" -> (n.toLong * nSubs / sec).toLong)
+
     def withHub(body: ListenServer => Unit): Unit = {
       val server = new ListenServer(queueCapacity = n + 16)
       try body(server) finally server.close()
@@ -63,7 +67,7 @@ object ListenBench {
       subs.foreach(_.join(60000))
       val sec = (System.nanoTime() - t0) / 1e9
       require(server.droppedCount == 0, s"dropped ${server.droppedCount} — resize the probe queue")
-      println(s"""{"metric":"listen_throughput_inproc","events":$n,"subscribers":$nSubs,"sec":$sec,"events_per_sec":${(n / sec).toLong},"delivered_per_sec":${(n.toLong * nSubs / sec).toLong}}""")
+      fanOut("listen_throughput_inproc", sec)
     }
 
     // socket ingest (the executor-partition path)
@@ -80,7 +84,7 @@ object ListenBench {
       val sec = (System.nanoTime() - t0) / 1e9
       sock.close()
       require(server.droppedCount == 0, s"dropped ${server.droppedCount} — resize the probe queue")
-      println(s"""{"metric":"listen_throughput_socket","events":$n,"subscribers":$nSubs,"sec":$sec,"events_per_sec":${(n / sec).toLong},"delivered_per_sec":${(n.toLong * nSubs / sec).toLong}}""")
+      fanOut("listen_throughput_socket", sec)
     }
 
     // binary subscriber: the proto path pays one Jackson parse + one
@@ -129,7 +133,7 @@ object ListenBench {
       // then skips it) — the delivered total is the honest gate
       require(done.get == n.toLong * nSubs,
         s"delivered ${done.get} of ${n.toLong * nSubs} — a reader died mid-run")
-      println(s"""{"metric":"listen_throughput_proto","events":$n,"subscribers":$nSubs,"sec":$sec,"events_per_sec":${(n / sec).toLong},"delivered_per_sec":${(n.toLong * nSubs / sec).toLong}}""")
+      fanOut("listen_throughput_proto", sec)
     }
 
     // encode-once hoist: the SAME binary fan-out with the frame
@@ -180,18 +184,13 @@ object ListenBench {
       // then skips it) — the delivered total is the honest gate
       require(done.get == n.toLong * nSubs,
         s"delivered ${done.get} of ${n.toLong * nSubs} — a reader died mid-run")
-      println(s"""{"metric":"listen_throughput_proto_hoisted","events":$n,"subscribers":$nSubs,"sec":$sec,"events_per_sec":${(n / sec).toLong},"delivered_per_sec":${(n.toLong * nSubs / sec).toLong}}""")
+      fanOut("listen_throughput_proto_hoisted", sec)
     }
 
     // resume path: a reconnecting subscriber drains an N-event archive gap
     // (Layout tail replay) — the cost of catching up vs tailing live
     {
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]").appName("listen-bench-resume")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Harness.session()
       import spark.implicits._
       val nGap = math.min(n, 100000)
       val dir = java.nio.file.Files.createTempDirectory("listen_resume_bench").toString
@@ -209,7 +208,8 @@ object ListenBench {
           _ => got.incrementAndGet(), maxEvents = nGap)
         val sec = (System.nanoTime() - t0) / 1e9
         require(got.get == nGap, s"resume replay delivered ${got.get}/$nGap")
-        println(s"""{"metric":"listen_resume_replay","events":$nGap,"sec":$sec,"events_per_sec":${(nGap / sec).toLong}}""")
+        Harness.emit("listen_resume_replay", "events" -> nGap, "sec" -> sec,
+          "events_per_sec" -> (nGap / sec).toLong)
       } finally { server.close(); spark.stop() }
     }
 
@@ -259,7 +259,9 @@ object ListenBench {
           val g = got.get
           if (g == prev) stable += 1 else { stable = 0; prev = g }
         }
-        println(s"""{"metric":"listen_slow_consumer","policy":"$policy","events":$nSlow,"delivered":${got.get},"dropped":${server.droppedCount},"tail_lag":${nSlow - 1 - last.get}}""")
+        Harness.emit("listen_slow_consumer", "policy" -> policy, "events" -> nSlow,
+          "delivered" -> got.get, "dropped" -> server.droppedCount,
+          "tail_lag" -> (nSlow - 1 - last.get))
       } finally server.close()
     }
   }

@@ -101,7 +101,7 @@ object OpqTrain {
     val dim = graft.ops.Similarity.Dim
     val sub = dim / m
 
-    val spark = PqTrain.trainerSession("opq-train")
+    val spark = Harness.session()
     val vecs = PqTrain.normalizedCorpus(spark, sfDir)
     val (perm, micros) = derive(vecs, m, ksub, iters)
     val permSrc = perm.mkString(
@@ -131,7 +131,7 @@ object OpqTrain {
          |""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"""{"metric":"opq_train","subspaces":$m,"ksub":$ksub,"iters":$iters,"out":"$out"}""")
+    Harness.emit("opq_train", "subspaces" -> m, "ksub" -> ksub, "iters" -> iters, "out" -> out)
     spark.stop()
   }
 }

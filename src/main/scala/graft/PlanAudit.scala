@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -53,14 +52,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         val nodes = collectAll(fn(spark, sfDir).queryExecution.executedPlan)
@@ -72,10 +64,11 @@ object PlanAudit {
           n.isInstanceOf[CartesianProductExec] || n.isInstanceOf[BroadcastNestedLoopJoinExec])
         val topK = names.contains("TakeOrderedAndProject")
         val partialAgg = nodes.exists(_.toString.contains("partial_"))
-        s"""{"query":"$name","shuffles":$shuffles,"scans":$scans,"broadcasts":$bcasts,""" +
-          s""""cartesian_or_bnlj":$cartesian,"topk_heap":$topK,"partial_agg":$partialAgg}"""
+        Harness.line("query" -> name, "shuffles" -> shuffles, "scans" -> scans,
+          "broadcasts" -> bcasts, "cartesian_or_bnlj" -> cartesian, "topk_heap" -> topK,
+          "partial_agg" -> partialAgg)
       } catch {
-        case NonFatal(e) => s"""{"query":"$name","error":"${e.getClass.getSimpleName}"}"""
+        case NonFatal(e) => Harness.line("query" -> name, "error" -> e.getClass.getSimpleName)
       }
     }
     rows.foreach(println)

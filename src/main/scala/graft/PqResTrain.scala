@@ -65,7 +65,7 @@ object PqResTrain {
     val (m, ksub, iters) = (8, 32, 5)
     val sub = graft.ops.Similarity.Dim / m
 
-    val spark = PqTrain.trainerSession("pq-res-train")
+    val spark = Harness.session()
     val res = residuals(PqTrain.normalizedCorpus(spark, sfDir))
     val micros = PqTrain.train(res, m, ksub, iters)
     val body = micros.map(book =>
@@ -93,7 +93,7 @@ object PqResTrain {
          |""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"""{"metric":"pq_res_train","subspaces":$m,"ksub":$ksub,"iters":$iters,"out":"$out"}""")
+    Harness.emit("pq_res_train", "subspaces" -> m, "ksub" -> ksub, "iters" -> iters, "out" -> out)
     spark.stop()
   }
 }

@@ -162,16 +162,6 @@ object PqTrain {
         v.map(_ / n)
       }
 
-  private[graft] def trainerSession(app: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName(app)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/PqModel.scala")
@@ -179,7 +169,7 @@ object PqTrain {
     val dim = graft.ops.Similarity.Dim
     val sub = dim / m
 
-    val spark = trainerSession("pq-train")
+    val spark = Harness.session()
     val vecs = normalizedCorpus(spark, sfDir)
     val micros = train(vecs, m, ksub, iters)
     val body = micros.map(book =>
@@ -205,7 +195,7 @@ object PqTrain {
          |""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"""{"metric":"pq_train","subspaces":$m,"ksub":$ksub,"iters":$iters,"out":"$out"}""")
+    Harness.emit("pq_train", "subspaces" -> m, "ksub" -> ksub, "iters" -> iters, "out" -> out)
     spark.stop()
   }
 }

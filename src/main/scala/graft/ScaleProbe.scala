@@ -61,17 +61,7 @@ object ScaleProbe {
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,10")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-query session: size the codegen cache for the inventory (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     // optional args = query-name filter over the FULL registry (the same
@@ -109,7 +99,7 @@ object ScaleProbe {
       if (families("docs") && !committed(dir, "events")) {
         val t0 = System.nanoTime()
         generate(spark, baseDir, dir, f)
-        println(s"""{"metric":"scale_gen","factor":$f,"sec":${(System.nanoTime() - t0) / 1e9}}""")
+        Harness.emit("scale_gen", "factor" -> f, "sec" -> (System.nanoTime() - t0) / 1e9)
       }
       if (families("docs") && !committed(dir, "embeddings")) {
         // SPARK_GRAFT_SCALE_VECTORS=grow swaps the pass-through for the f×
@@ -124,7 +114,7 @@ object ScaleProbe {
       if (families("tpch") && !committed(dir, "lineitem")) {
         val t0 = System.nanoTime()
         generateTpch(spark, baseDir, dir, f)
-        println(s"""{"metric":"scale_gen_tpch","factor":$f,"sec":${(System.nanoTime() - t0) / 1e9}}""")
+        Harness.emit("scale_gen_tpch", "factor" -> f, "sec" -> (System.nanoTime() - t0) / 1e9)
       }
     }
     factors.foreach { f =>
@@ -136,7 +126,7 @@ object ScaleProbe {
           fn(spark, dir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }.min
-        println(s"""{"metric":"scale_probe","factor":$f,"query":"$name","sec":$secs}""")
+        Harness.emit("scale_probe", "factor" -> f, "query" -> name, "sec" -> secs)
       }
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{CdcSource, CdcStream}
-import org.apache.spark.sql.SparkSession
 
 /** Streaming state at scale: drives N synthetic events (generator-backed
   * source, zero materialized backlog — [[CdcSource.SyntheticSpec]]) through
@@ -21,14 +20,7 @@ object StateScaleBench {
     val sizes = args.headOption.getOrElse("500000,1000000,2000000,4000000")
       .split(",").map(_.trim.toLong).toSeq
     val waves = args.lift(1).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     val providers = Seq(
@@ -49,7 +41,7 @@ object StateScaleBench {
       val feed = CdcSource.SyntheticRegistry.get(feedName, users)
       val raw = spark.readStream.format("graft.streaming.CdcSourceProvider")
         .option("synthetic", feedName).option("syntheticUsers", users.toString)
-        .option("numPartitions", cpus).load()
+        .option("numPartitions", Harness.cpus.toString).load()
       val q = CdcStream.withPrevState(raw.as[CdcStream.RawChange])
         .writeStream.format("noop").outputMode("append").start()
       val t0 = System.nanoTime()
@@ -76,8 +68,11 @@ object StateScaleBench {
           // env knob as Bench.scala); per-rep times printed alongside
           val runs = (1 to reps).map(r => run(provName, n, r))
           val best = runs.minBy(_._1)
-          val times = runs.map(_._1).mkString("[", ",", "]")
-          println(s"""{"metric":"state_scale","provider":"$provName","events":$n,"users":${math.max(1L, n / 2)},"waves":$waves,"sec":${best._1},"times":$times,"events_per_sec":${(n / best._1).toLong},"state_rows":${best._2},"state_mem_bytes":${best._3}}""")
+          val times = runs.map(_._1)
+          Harness.emit("state_scale", "provider" -> provName, "events" -> n,
+            "users" -> math.max(1L, n / 2), "waves" -> waves, "sec" -> best._1,
+            "times" -> times, "events_per_sec" -> (n / best._1).toLong,
+            "state_rows" -> best._2, "state_mem_bytes" -> best._3)
         }
       } finally saved match {
         case Some(v) => spark.conf.set(confKey, v)
@@ -143,8 +138,11 @@ object StateScaleBench {
         for (n <- dedupSizes) {
           val runs = (1 to reps).map(_ => runDedup(n))
           val best = runs.minBy(_._1)
-          val times = runs.map(_._1).mkString("[", ",", "]")
-          println(s"""{"metric":"dedup_state_scale","provider":"$provName","docs":$n,"waves":$waves,"sec":${best._1},"times":$times,"docs_per_sec":${(n / best._1).toLong},"state_rows":${best._2},"state_mem_bytes":${best._3}}""")
+          val times = runs.map(_._1)
+          Harness.emit("dedup_state_scale", "provider" -> provName, "docs" -> n,
+            "waves" -> waves, "sec" -> best._1, "times" -> times,
+            "docs_per_sec" -> (n / best._1).toLong, "state_rows" -> best._2,
+            "state_mem_bytes" -> best._3)
         }
       } finally saved match {
         case Some(v) => spark.conf.set(confKey, v)
@@ -224,9 +222,13 @@ object StateScaleBench {
         for (n <- mediaSizes) {
           val runs = (1 to reps).map(_ => runMedia(n))
           val best = runs.minBy(_._1)
-          val times = runs.map(_._1).mkString("[", ",", "]")
+          val times = runs.map(_._1)
           val entries = n * nBands
-          println(s"""{"metric":"media_state_scale","provider":"$provName","classes":$n,"waves":$waves,"sec":${best._1},"times":$times,"docs_per_sec":${(n / best._1).toLong},"state_rows":${best._2},"state_mem_bytes":${best._3},"exemplar_entries":$entries,"bytes_per_entry":${if (best._3 > 0) best._3 / entries else -1}}""")
+          Harness.emit("media_state_scale", "provider" -> provName, "classes" -> n,
+            "waves" -> waves, "sec" -> best._1, "times" -> times,
+            "docs_per_sec" -> (n / best._1).toLong, "state_rows" -> best._2,
+            "state_mem_bytes" -> best._3, "exemplar_entries" -> entries,
+            "bytes_per_entry" -> (if (best._3 > 0) best._3 / entries else -1L))
         }
         // the transformWithState MapState layout on the SAME corpus — the
         // per-entry-vs-bucket-blob comparison (state_rows here counts map
@@ -238,9 +240,13 @@ object StateScaleBench {
         for (n <- mediaSizes) {
           val runs = (1 to reps).map(_ => runMediaTws(n))
           val best = runs.minBy(_._1)
-          val times = runs.map(_._1).mkString("[", ",", "]")
+          val times = runs.map(_._1)
           val entries = n * nBands
-          println(s"""{"metric":"media_state_scale_tws","provider":"$provName","classes":$n,"waves":$waves,"sec":${best._1},"times":$times,"docs_per_sec":${(n / best._1).toLong},"state_rows":${best._2},"state_mem_bytes":${best._3},"exemplar_entries":$entries,"bytes_per_entry":${if (best._3 > 0) best._3 / entries else -1}}""")
+          Harness.emit("media_state_scale_tws", "provider" -> provName, "classes" -> n,
+            "waves" -> waves, "sec" -> best._1, "times" -> times,
+            "docs_per_sec" -> (n / best._1).toLong, "state_rows" -> best._2,
+            "state_mem_bytes" -> best._3, "exemplar_entries" -> entries,
+            "bytes_per_entry" -> (if (best._3 > 0) best._3 / entries else -1L))
         }
         }
       } finally saved match {
@@ -296,8 +302,11 @@ object StateScaleBench {
         for (n <- semSizes) {
           val runs = (1 to reps).map(_ => runSem(n))
           val best = runs.minBy(_._1)
-          val times = runs.map(_._1).mkString("[", ",", "]")
-          println(s"""{"metric":"sem_state_scale","provider":"$provName","vecs":$n,"clusters":${math.max(1L, n / 2)},"dim":$semDim,"waves":$waves,"sec":${best._1},"times":$times,"vecs_per_sec":${(n / best._1).toLong},"state_rows":${best._2},"state_mem_bytes":${best._3}}""")
+          val times = runs.map(_._1)
+          Harness.emit("sem_state_scale", "provider" -> provName, "vecs" -> n,
+            "clusters" -> math.max(1L, n / 2), "dim" -> semDim, "waves" -> waves,
+            "sec" -> best._1, "times" -> times, "vecs_per_sec" -> (n / best._1).toLong,
+            "state_rows" -> best._2, "state_mem_bytes" -> best._3)
         }
       } finally saved match {
         case Some(v) => spark.conf.set(confKey, v)

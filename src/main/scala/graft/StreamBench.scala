@@ -1,38 +1,33 @@
 package graft
 
-import scala.util.control.NonFatal
 import graft.streaming.{CdcSource, CdcStream}
-import org.apache.spark.sql.SparkSession
 
-/** Streaming-pipeline throughput probe: drives the `events` table through the
-  * custom micro-batch CDC source + the stateful prev-image pipeline
-  * (`CdcStream.withPrevState`, merge-patch included) and reports events/sec —
-  * the measurable counterpart to the reference's (unpublished) throughput,
-  * whose design ceiling is a single event-loop goroutine fed by Postgres
-  * NOTIFY (reference `server.go:258-281`; SURVEY §6).
+/** Operator-throughput probe for the streaming pipelines: drives the
+  * `events` table through the custom micro-batch CDC source + the stateful
+  * prev-image pipeline (`CdcStream.withPrevState`, merge-patch included;
+  * its RocksDB, 4x-partition, transformWithState and Derby JDBC variants),
+  * then the online operators (near-dup, media, schema drift, window
+  * profile, novelty, semantic dedup), and reports rows/sec per pipeline.
+  * Commit → subscriber latency is perfbench `cdc_tail`'s to measure.
   *
-  * Usage: runMain graft.StreamBench [sfDir]  → one JSON line.
+  * Usage: runMain graft.StreamBench [sfDir]  → one JSON line per pipeline.
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    // conf A/B hook for session-conf audits (shared parser, loud on a
-    // malformed entry): see Graft.confOverrides
-    val spark = Graft.confOverrides(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     // stage the log into the in-memory feed (bench fixture, not the operator)
     val rows = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "props")
       .as[CdcStream.RawChange].collect()
+
+    // one line per pipeline: rows through it, warm seconds, rows per second
+    def throughput(metric: String, unit: String, n: Long, warmSec: Double,
+                   extra: (String, Any)*): Unit =
+      Harness.emit(metric, Seq[(String, Any)](unit -> n) ++ extra ++ Seq(
+        "warm_sec" -> warmSec, s"${unit}_per_sec" -> (n / warmSec).toLong, "sf" -> sfDir): _*)
 
     def drain(feedName: String, conf: Map[String, String] = Map.empty,
               pipe: org.apache.spark.sql.Dataset[CdcStream.RawChange] =>
@@ -43,7 +38,7 @@ object StreamBench {
       try {
         CdcSource.FeedRegistry.get(feedName).append(rows: _*)
         val raw = spark.readStream.format("graft.streaming.CdcSourceProvider")
-          .option("feed", feedName).option("numPartitions", cpus).load()
+          .option("feed", feedName).option("numPartitions", Harness.cpus.toString).load()
         val events = pipe(raw.as[CdcStream.RawChange])
         val q = events.writeStream.format("noop").outputMode("append").start()
         val t0 = System.nanoTime()
@@ -59,7 +54,7 @@ object StreamBench {
 
     val coldSec = drain("bench_cold") // includes stream init + codegen warmup
     val warmSec = drain("bench_warm")
-    println(s"""{"metric":"cdc_stream_throughput","events":${rows.length},"cold_sec":$coldSec,"warm_sec":$warmSec,"events_per_sec":${(rows.length / warmSec).toLong},"sf":"$sfDir"}""")
+    throughput("cdc_stream_throughput", "events", rows.length, warmSec, "cold_sec" -> coldSec)
 
     // state-store knob probes (r2 found the keyed state shuffle, not the
     // source, caps throughput): RocksDB provider vs the default HDFS-backed
@@ -68,10 +63,10 @@ object StreamBench {
     val rocksSec = drain("bench_rocks", Map(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    println(s"""{"metric":"cdc_stream_throughput_rocksdb","events":${rows.length},"warm_sec":$rocksSec,"events_per_sec":${(rows.length / rocksSec).toLong},"sf":"$sfDir"}""")
+    throughput("cdc_stream_throughput_rocksdb", "events", rows.length, rocksSec)
     val partsSec = drain("bench_parts4x", Map(
-      "spark.sql.shuffle.partitions" -> (cpus.toInt * 4).toString))
-    println(s"""{"metric":"cdc_stream_throughput_parts4x","events":${rows.length},"warm_sec":$partsSec,"events_per_sec":${(rows.length / partsSec).toLong},"sf":"$sfDir"}""")
+      "spark.sql.shuffle.partitions" -> (Harness.cpus * 4).toString))
+    throughput("cdc_stream_throughput_parts4x", "events", rows.length, partsSec)
     // the Spark 4 transformWithState port (parity-pinned in CdcStreamSpec),
     // measured against the classic path; requires the RocksDB provider, so
     // its fair comparison line is cdc_stream_throughput_rocksdb above
@@ -79,7 +74,7 @@ object StreamBench {
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
       ds => CdcStream.withPrevStateTws(ds))
-    println(s"""{"metric":"cdc_stream_throughput_tws","events":${rows.length},"warm_sec":$twsSec,"events_per_sec":${(rows.length / twsSec).toLong},"sf":"$sfDir"}""")
+    throughput("cdc_stream_throughput_tws", "events", rows.length, twsSec)
     // the same processor with a REALISTIC erasure set (a GDPR backlog of
     // 100 entities): the steady-state cost over an empty set must be a Map
     // probe per key per batch — measured, its fair comparison line is
@@ -89,7 +84,7 @@ object StreamBench {
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
       ds => CdcStream.withPrevStateTws(ds, erasedProbe))
-    println(s"""{"metric":"cdc_stream_throughput_tws_erasing","events":${rows.length},"warm_sec":$twsEraseSec,"events_per_sec":${(rows.length / twsEraseSec).toLong},"sf":"$sfDir"}""")
+    throughput("cdc_stream_throughput_tws_erasing", "events", rows.length, twsEraseSec)
 
     // second line: the same drain through the PRODUCTION path — Derby-backed
     // JDBC feed, streaming partition readers (JdbcRowReader), id-range
@@ -109,274 +104,14 @@ object StreamBench {
     } finally conn.close()
     val rawJdbc = spark.readStream.format("graft.streaming.CdcSourceProvider")
       .option("jdbcUrl", url).option("jdbcTable", "events")
-      .option("numPartitions", cpus).load()
+      .option("numPartitions", Harness.cpus.toString).load()
     val qj = CdcStream.withPrevState(rawJdbc.as[CdcStream.RawChange])
       .writeStream.format("noop").outputMode("append").start()
     val tj = System.nanoTime()
     qj.processAllAvailable()
     val jdbcSec = (System.nanoTime() - tj) / 1e9
     qj.stop()
-    println(s"""{"metric":"cdc_stream_throughput_jdbc","events":${rows.length},"warm_sec":$jdbcSec,"events_per_sec":${(rows.length / jdbcSec).toLong},"sf":"$sfDir"}""")
-
-    // ===== capture-latency probe =====
-    // The reference's one structural edge over a polling source is push
-    // NOTIFY delivery (server.go:98-109): pg_notify hands the event to the
-    // listener goroutine in milliseconds. A micro-batch pull source's floor
-    // is its poll cadence: with no trigger, Spark replans the next batch
-    // ~spark.sql.streaming.pollingDelay (10 ms) after an empty one, so the
-    // floor is planning + execution overhead; with ProcessingTime(T) it is
-    // ~T/2 mean + batch cost. Measured here end-to-end THROUGH the stateful
-    // prev-image pipeline against the live Derby JDBC feed: single-row
-    // commits spaced gapMs apart, commit timestamp → foreachBatch arrival.
-    def latencyProbe(label: String, triggerMs: Int, nEvents: Int, gapMs: Long,
-                     conf: Map[String, String] = Map.empty,
-                     writerOpts: Map[String, String] = Map.empty,
-                     pipe: org.apache.spark.sql.Dataset[CdcStream.RawChange] =>
-                       org.apache.spark.sql.DataFrame =
-                       CdcStream.withPrevState(_).toDF()): Unit = {
-      val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      // one misconfigured probe must never silence the rest of the bench:
-      // record the failure as its own artifact line and keep going
-      try latencyProbeRun(label, triggerMs, nEvents, gapMs, writerOpts, pipe)
-      catch { case NonFatal(e) =>
-        println(s"""{"metric":"cdc_capture_latency","config":"$label","error":"${e.getClass.getSimpleName}"}""")
-        System.err.println(s"[latencyProbe] $label failed: $e")
-      }
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-    def latencyProbeRun(label: String, triggerMs: Int, nEvents: Int, gapMs: Long,
-                        writerOpts: Map[String, String],
-                        pipe: org.apache.spark.sql.Dataset[CdcStream.RawChange] =>
-                          org.apache.spark.sql.DataFrame): Unit = {
-      val arrivals = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-      val raw2 = spark.readStream.format("graft.streaming.CdcSourceProvider")
-        .option("jdbcUrl", url).option("jdbcTable", "events")
-        // single-row batches: 32 id-range splits per poll would be overhead
-        .option("numPartitions", "4").load()
-      val writer = pipe(raw2.as[CdcStream.RawChange])
-        .writeStream.outputMode("append").options(writerOpts)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          val ids = df.select("event_id").as[Long].collect()
-          val t = System.nanoTime()
-          ids.foreach(id => arrivals.put(id, t))
-          ()
-        }
-      val q2 = (if (triggerMs > 0)
-        writer.trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(s"$triggerMs milliseconds"))
-      else writer).start()
-      q2.processAllAvailable() // drain the table backlog before timing
-      val conn2 = java.sql.DriverManager.getConnection(url)
-      val commits = new scala.collection.mutable.HashMap[Long, Long]()
-      try {
-        val rs = conn2.createStatement().executeQuery("SELECT MAX(event_id) FROM events")
-        rs.next(); val maxId = rs.getLong(1)
-        val ps2 = conn2.prepareStatement("INSERT INTO events VALUES (?, ?, ?, ?, ?)")
-        (1 to nEvents).foreach { i =>
-          val id = maxId + i
-          ps2.setLong(1, id)
-          ps2.setTimestamp(2, new java.sql.Timestamp(System.currentTimeMillis()))
-          ps2.setLong(3, id % 97); ps2.setString(4, "purchase")
-          ps2.setString(5, s"""{"k": ${i % 997}}""")
-          ps2.execute() // autocommit: visible to the next poll immediately
-          commits(id) = System.nanoTime()
-          Thread.sleep(gapMs)
-        }
-        val deadline = System.nanoTime() + 60L * 1000000000L
-        while (commits.keys.exists(id => !arrivals.containsKey(id)) &&
-               System.nanoTime() < deadline)
-          Thread.sleep(20)
-      } finally conn2.close()
-      q2.stop()
-      val lat = commits.toSeq.collect {
-        case (id, t0) if arrivals.containsKey(id) =>
-          (arrivals.get(id) - t0) / 1e6
-      }.sorted
-      def pct(p: Double) = lat((p * (lat.size - 1)).round.toInt)
-      println(s"""{"metric":"cdc_capture_latency","config":"$label","trigger_ms":$triggerMs,"events":${lat.size},"p50_ms":${pct(0.5).round},"p99_ms":${pct(0.99).round},"max_ms":${lat.last.round},"gap_ms":$gapMs}""")
-    }
-    // default config: the throughput-tuned 32 state partitions make every
-    // micro-batch pay ~32 state-store commits — batch duration, not poll
-    // cadence, is the latency floor
-    latencyProbe("default32", triggerMs = 0, nEvents = 120, gapMs = 30)
-    // low-latency config: a single state partition per subscriber (the
-    // reference's subscriber is single-threaded anyway, server.go:291) cuts
-    // the per-batch floor to task-launch + one state commit
-    latencyProbe("tuned1", triggerMs = 0, nEvents = 120, gapMs = 30,
-      conf = Map("spark.sql.shuffle.partitions" -> "1"))
-    latencyProbe("tuned1_t500", triggerMs = 500, nEvents = 40, gapMs = 120,
-      conf = Map("spark.sql.shuffle.partitions" -> "1"))
-    // stateless fan-out-only subscriber (no prev-image state): one narrow
-    // projection per batch — no shuffle, no state commit — measuring how
-    // much of the stateful floor is the state machinery itself
-    latencyProbe("stateless1", triggerMs = 0, nEvents = 120, gapMs = 30,
-      conf = Map("spark.sql.shuffle.partitions" -> "1"),
-      pipe = ds => CdcStream.statelessEvents(ds))
-    // ... plus async progress tracking (legal only WITHOUT stateful ops):
-    // offset-log fsync leaves the batch critical path; delivery weakens to
-    // at-least-once — still stronger than the reference push path's
-    // at-most-once
-    // foreachBatch is not on the async-tracking allow-list (noop/Kafka/
-    // memory are) — the probe's collect-side IS idempotent, so the
-    // documented override flag is the honest way to measure the floor
-    // interval 0 = offset-log writes still leave the critical path but are
-    // issued per batch; the DEFAULT 1000 ms interval GATES batch cadence
-    // (measured p50 1.4 s — worse than synchronous) because an un-logged
-    // batch can't be followed until the interval elapses
-    latencyProbe("stateless1_async", triggerMs = 0, nEvents = 120, gapMs = 30,
-      conf = Map("spark.sql.shuffle.partitions" -> "1"),
-      writerOpts = Map("asyncProgressTrackingEnabled" -> "true",
-        "asyncProgressTrackingCheckpointIntervalMs" -> "0",
-        "_asyncProgressTrackingOverrideSinkSupportCheck" -> "true"),
-      pipe = ds => CdcStream.statelessEvents(ds))
-
-    // ===== continuous-processing floor (Trigger.Continuous) =====
-    // The stateless subscriber again, but through the source's continuous
-    // reader: ONE long-lived task tail-polling the Derby log, epoch
-    // bookkeeping off the record path — the engine's structural counterpart
-    // of the reference's push loop. Expected to collapse the floor from the
-    // micro-batch quantum (~0.1 s) to poll + pipeline cost (ms-class).
-    def latencyProbeContinuous(label: String, nEvents: Int, gapMs: Long,
-                               pollMs: Int, epochInterval: String,
-                               partitions: Int = 1): Unit =
-      try {
-        val arrivals = ContinuousArrivals.map(label)
-        val raw = spark.readStream.format("graft.streaming.CdcSourceProvider")
-          .option("jdbcUrl", url).option("jdbcTable", "events")
-          .option("continuousPartitions", partitions.toString)
-          .option("continuousPollMs", pollMs.toString).load()
-        val q = CdcStream.statelessEvents(raw.as[CdcStream.RawChange])
-          .writeStream.outputMode("append")
-          .foreach(new ContinuousArrivalWriter(label))
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("cont_probe").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.Continuous(epochInterval))
-          .start()
-        val conn2 = java.sql.DriverManager.getConnection(url)
-        val commits = new scala.collection.mutable.HashMap[Long, Long]()
-        try {
-          val rs = conn2.createStatement().executeQuery("SELECT MAX(event_id) FROM events")
-          rs.next(); val maxId = rs.getLong(1)
-          val ps2 = conn2.prepareStatement("INSERT INTO events VALUES (?, ?, ?, ?, ?)")
-          def insert(id: Long): Unit = {
-            ps2.setLong(1, id)
-            ps2.setTimestamp(2, new java.sql.Timestamp(System.currentTimeMillis()))
-            ps2.setLong(3, id % 97); ps2.setString(4, "purchase")
-            ps2.setString(5, s"""{"k": ${id % 997}}""")
-            ps2.execute() // autocommit: visible to the next poll immediately
-          }
-          // sentinel row: wait until the reader has streamed the whole table
-          // backlog and is tail-polling — only then is timing meaningful
-          // (processAllAvailable has no meaning under a continuous trigger)
-          insert(maxId + 1)
-          val warmup = System.nanoTime() + 120L * 1000000000L
-          while (!arrivals.containsKey(maxId + 1) && System.nanoTime() < warmup)
-            Thread.sleep(20)
-          require(arrivals.containsKey(maxId + 1), "backlog drain timed out")
-          (2 to nEvents + 1).foreach { i =>
-            val id = maxId + i
-            insert(id)
-            commits(id) = System.nanoTime()
-            Thread.sleep(gapMs)
-          }
-          val deadline = System.nanoTime() + 60L * 1000000000L
-          while (commits.keys.exists(id => !arrivals.containsKey(id)) &&
-                 System.nanoTime() < deadline)
-            Thread.sleep(20)
-        } finally conn2.close()
-        q.stop()
-        val lat = commits.toSeq.collect {
-          case (id, t0) if arrivals.containsKey(id) =>
-            (arrivals.get(id) - t0) / 1e6
-        }.sorted
-        def pct(p: Double) = lat((p * (lat.size - 1)).round.toInt)
-        println(s"""{"metric":"cdc_capture_latency","config":"$label","trigger_ms":-1,"events":${lat.size},"p50_ms":${pct(0.5).round},"p99_ms":${pct(0.99).round},"max_ms":${lat.last.round},"gap_ms":$gapMs}""")
-      } catch { case NonFatal(e) =>
-        println(s"""{"metric":"cdc_capture_latency","config":"$label","error":"${e.getClass.getSimpleName}"}""")
-        System.err.println(s"[latencyProbeContinuous] $label failed: $e")
-      }
-    latencyProbeContinuous("continuous_poll2", nEvents = 120, gapMs = 30,
-      pollMs = 2, epochInterval = "1 second")
-    // mod-4 readers: the scale-out shape must not tax the latency floor
-    // (four independent pollers, no coordination on the record path)
-    latencyProbeContinuous("continuous4_poll2", nEvents = 120, gapMs = 30,
-      pollMs = 2, epochInterval = "1 second", partitions = 4)
-
-    // ... and the WHOLE reference architecture at continuous grain:
-    // commit → tail-poll capture → jsonpb envelope → per-record-flush
-    // executor ingest socket → hub fan-out → subscribed pqs client.
-    // Measures commit→client-socket — the number a pqstream user feels.
-    def e2eProbeContinuous(label: String, nEvents: Int, gapMs: Long): Unit =
-      try {
-        val server = new graft.streaming.ListenServer()
-        val arrivals = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-        val idRe = java.util.regex.Pattern.compile("\"id\":\"(\\d+)\"")
-        val client = new Thread(() =>
-          try graft.streaming.PqsClient.run("127.0.0.1", server.boundPort, ".*", { l =>
-            val m = idRe.matcher(l)
-            if (m.find()) arrivals.put(java.lang.Long.valueOf(m.group(1)), System.nanoTime())
-            ()
-          }) catch { case NonFatal(_) => () })
-        client.setDaemon(true); client.start()
-        val subDeadline = System.nanoTime() + 10L * 1000000000L
-        while (server.subscriberCount < 1 && System.nanoTime() < subDeadline)
-          Thread.sleep(10)
-        val raw = spark.readStream.format("graft.streaming.CdcSourceProvider")
-          .option("jdbcUrl", url).option("jdbcTable", "events")
-          .option("continuousPollMs", "2").load()
-        val events = CdcStream.statelessEvents(raw.as[CdcStream.RawChange])
-          .select(org.apache.spark.sql.functions.lit("events").as("table"),
-            org.apache.spark.sql.functions.col("event"))
-        val q = events.writeStream.outputMode("append")
-          .foreach(graft.streaming.ListenSink.continuousWriter("127.0.0.1", server.boundPort))
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("cont_e2e").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.Continuous("5 seconds"))
-          .start()
-        val conn2 = java.sql.DriverManager.getConnection(url)
-        val commits = new scala.collection.mutable.HashMap[Long, Long]()
-        try {
-          val rs = conn2.createStatement().executeQuery("SELECT MAX(event_id) FROM events")
-          rs.next(); val maxId = rs.getLong(1)
-          val ps2 = conn2.prepareStatement("INSERT INTO events VALUES (?, ?, ?, ?, ?)")
-          def insert(id: Long): Unit = {
-            ps2.setLong(1, id)
-            ps2.setTimestamp(2, new java.sql.Timestamp(System.currentTimeMillis()))
-            ps2.setLong(3, id % 97); ps2.setString(4, "purchase")
-            ps2.setString(5, s"""{"k": ${id % 997}}""")
-            ps2.execute()
-          }
-          insert(maxId + 1) // sentinel: backlog drained through hub AND client
-          val warmup = System.nanoTime() + 120L * 1000000000L
-          while (!arrivals.containsKey(maxId + 1) && System.nanoTime() < warmup)
-            Thread.sleep(20)
-          require(arrivals.containsKey(maxId + 1), "backlog drain timed out")
-          (2 to nEvents + 1).foreach { i =>
-            val id = maxId + i
-            insert(id)
-            commits(id) = System.nanoTime()
-            Thread.sleep(gapMs)
-          }
-          val deadline = System.nanoTime() + 60L * 1000000000L
-          while (commits.keys.exists(id => !arrivals.containsKey(id)) &&
-                 System.nanoTime() < deadline)
-            Thread.sleep(20)
-        } finally conn2.close()
-        q.stop(); server.close()
-        val lat = commits.toSeq.collect {
-          case (id, t0) if arrivals.containsKey(id) =>
-            (arrivals.get(id) - t0) / 1e6
-        }.sorted
-        def pct(p: Double) = lat((p * (lat.size - 1)).round.toInt)
-        println(s"""{"metric":"cdc_e2e_latency","config":"$label","events":${lat.size},"p50_ms":${pct(0.5).round},"p99_ms":${pct(0.99).round},"max_ms":${lat.last.round},"gap_ms":$gapMs}""")
-      } catch { case NonFatal(e) =>
-        println(s"""{"metric":"cdc_e2e_latency","config":"$label","error":"${e.getClass.getSimpleName}"}""")
-        System.err.println(s"[e2eProbeContinuous] $label failed: $e")
-      }
-    e2eProbeContinuous("continuous_listen_e2e", nEvents = 120, gapMs = 30)
+    throughput("cdc_stream_throughput_jdbc", "events", rows.length, jdbcSec)
 
     // ===== online near-dup dedup throughput =====
     // The document corpus replicated with disjoint ids (copies share TEXT,
@@ -407,7 +142,7 @@ object StreamBench {
       }
       run() // cold: codegen + state-store setup
       val warmSec = run()
-      println(s"""{"metric":"dedup_stream_throughput","docs":${docs.size},"warm_sec":$warmSec,"docs_per_sec":${(docs.size / warmSec).toLong},"sf":"$sfDir"}""")
+      throughput("dedup_stream_throughput", "docs", docs.size, warmSec)
       // the composed candidate→verify stage (exemplar hash-set state +
       // in-handler exact Jaccard) against the candidates-only line above:
       // the price of edges leaving the stream already verified
@@ -430,7 +165,7 @@ object StreamBench {
       }
       runVerified()
       val warmVSec = runVerified()
-      println(s"""{"metric":"dedup_stream_verified_throughput","docs":${docs.size},"warm_sec":$warmVSec,"docs_per_sec":${(docs.size / warmVSec).toLong},"sf":"$sfDir"}""")
+      throughput("dedup_stream_verified_throughput", "docs", docs.size, warmVSec)
     }
 
     // ===== online MEDIA near-dup throughput (the r8 modality) =====
@@ -462,7 +197,7 @@ object StreamBench {
       }
       runMedia()
       val warmMSec = runMedia()
-      println(s"""{"metric":"media_dedup_stream_throughput","docs":${media.size},"warm_sec":$warmMSec,"docs_per_sec":${(media.size / warmMSec).toLong},"sf":"$sfDir"}""")
+      throughput("media_dedup_stream_throughput", "docs", media.size, warmMSec)
     }
 
     // ===== DEGENERATE single-bucket media corpus =====
@@ -504,7 +239,7 @@ object StreamBench {
       }
       runDegenerate()
       val warmDSec = runDegenerate()
-      println(s"""{"metric":"media_dedup_degenerate_throughput","docs":${fps.size},"classes":$classes,"warm_sec":$warmDSec,"docs_per_sec":${(fps.size / warmDSec).toLong},"sf":"$sfDir"}""")
+      throughput("media_dedup_degenerate_throughput", "docs", fps.size, warmDSec, "classes" -> classes)
       // the transformWithState MapState layout on the SAME exact-dup-heavy
       // corpus (RocksDB required): this is the layout's WIN case — an
       // exact dup reads one map key instead of deserializing the loaded
@@ -533,7 +268,7 @@ object StreamBench {
         }
         runDegenerateTws()
         val warmT = runDegenerateTws()
-        println(s"""{"metric":"media_dedup_degenerate_tws_throughput","docs":${fps.size},"classes":$classes,"warm_sec":$warmT,"docs_per_sec":${(fps.size / warmT).toLong},"sf":"$sfDir"}""")
+        throughput("media_dedup_degenerate_tws_throughput", "docs", fps.size, warmT, "classes" -> classes)
       } finally priorProv match {
         case Some(v) => spark.conf.set(RocksKey, v)
         case None    => spark.conf.unset(RocksKey)
@@ -569,7 +304,7 @@ object StreamBench {
       }
       runDrift()
       val warmDr = runDrift()
-      println(s"""{"metric":"schema_drift_throughput","events":${drift.length},"warm_sec":$warmDr,"events_per_sec":${(drift.length / warmDr).toLong},"sf":"$sfDir"}""")
+      throughput("schema_drift_throughput", "events", drift.length, warmDr)
       // TYPE-drift variant: same state machinery but the per-doc Variant
       // walk (parse_json + lateral variant_explode + schema_of_variant)
       // replaces the key explode — the cost of typing every value inline
@@ -592,7 +327,7 @@ object StreamBench {
       }
       runTypeDrift()
       val warmTd = runTypeDrift()
-      println(s"""{"metric":"type_drift_throughput","events":${drift.length},"warm_sec":$warmTd,"events_per_sec":${(drift.length / warmTd).toLong},"sf":"$sfDir"}""")
+      throughput("type_drift_throughput", "events", drift.length, warmTd)
     }
 
     // ===== windowed sketch profile throughput (r9) =====
@@ -625,7 +360,7 @@ object StreamBench {
       }
       runProfile()
       val warmPr = runProfile()
-      println(s"""{"metric":"window_profile_throughput","events":${evs.length},"warm_sec":$warmPr,"events_per_sec":${(evs.length / warmPr).toLong},"sf":"$sfDir"}""")
+      throughput("window_profile_throughput", "events", evs.length, warmPr)
     }
 
     // ===== kmv novelty monitor throughput (r10) =====
@@ -659,7 +394,7 @@ object StreamBench {
       }
       runNovelty()
       val warmNv = runNovelty()
-      println(s"""{"metric":"novelty_monitor_throughput","docs":${replayed.length},"warm_sec":$warmNv,"docs_per_sec":${(replayed.length / warmNv).toLong},"sf":"$sfDir"}""")
+      throughput("novelty_monitor_throughput", "docs", replayed.length, warmNv)
     }
 
     // Bloom novelty gate: the full corpus replayed 5x through the
@@ -692,7 +427,7 @@ object StreamBench {
       }
       runGate()
       val warmBn = runGate()
-      println(s"""{"metric":"bloom_novelty_throughput","docs":${replayed.length},"warm_sec":$warmBn,"docs_per_sec":${(replayed.length / warmBn).toLong},"sf":"$sfDir"}""")
+      throughput("bloom_novelty_throughput", "docs", replayed.length, warmBn)
     }
 
     // Semantic-dedup exemplar state: raw vectors vs PQ codes. Same corpus
@@ -746,7 +481,12 @@ object StreamBench {
         runSem(pq = false) // codegen/session warmup
         val (rawSec, rawBytes) = runSem(pq = false)
         val (pqSec, pqBytes) = runSem(pq = true)
-        println(s"""{"metric":"semdedup_pq_state","vectors":${rows.length},"raw_warm_sec":$rawSec,"raw_state_bytes":$rawBytes,"pq_warm_sec":$pqSec,"pq_state_bytes":$pqBytes,"state_ratio":${if (pqBytes > 0) f"${rawBytes.toDouble / pqBytes}%.1f" else "-1"},"sf":"$sfDir"}""")
+        Harness.emit("semdedup_pq_state", "vectors" -> rows.length, "raw_warm_sec" -> rawSec,
+          "raw_state_bytes" -> rawBytes, "pq_warm_sec" -> pqSec, "pq_state_bytes" -> pqBytes,
+          "state_ratio" -> (if (pqBytes > 0)
+            BigDecimal(rawBytes.toDouble / pqBytes).setScale(1, BigDecimal.RoundingMode.HALF_UP)
+          else -1),
+          "sf" -> sfDir)
       } finally priorProv match {
         case Some(v) => spark.conf.set(RocksKey, v)
         case None    => spark.conf.unset(RocksKey)
@@ -754,30 +494,4 @@ object StreamBench {
     }
     spark.stop()
   }
-}
-
-/** JVM-wide arrival registry for the continuous-mode latency probe: a
-  * `ForeachWriter` is serialized to the (local-mode) task, so arrival
-  * nanotimes land here keyed by probe label, read back driver-side.
-  */
-object ContinuousArrivals {
-  private val all = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]]()
-  def map(label: String): java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long] =
-    all.computeIfAbsent(label,
-      _ => new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]())
-}
-
-/** Named top-level class so serialization never drags an enclosing scope.
-  * Stamps arrival time the instant the record reaches the sink — the
-  * continuous-mode analog of the foreachBatch collect in the micro-batch
-  * probe (per-record here; continuous mode has no batches).
-  */
-final class ContinuousArrivalWriter(label: String)
-    extends org.apache.spark.sql.ForeachWriter[org.apache.spark.sql.Row] {
-  override def open(partitionId: Long, epochId: Long): Boolean = true
-  override def process(row: org.apache.spark.sql.Row): Unit = {
-    ContinuousArrivals.map(label).put(row.getLong(0), System.nanoTime()); ()
-  }
-  override def close(errorOrNull: Throwable): Unit = ()
 }

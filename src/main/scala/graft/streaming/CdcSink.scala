@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.DriverManager
+import scala.util.control.NonFatal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -75,7 +76,7 @@ object CdcSink {
             case e: Throwable =>
               // rollback on a broken connection throws its own exception —
               // suppress it so the ORIGINAL failure stays diagnosable
-              try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+              try conn.rollback() catch { case NonFatal(r) => e.addSuppressed(r) }
               throw e
           } finally conn.close()
         }

@@ -201,9 +201,9 @@ object CdcStream {
     * tracking (`spark.sql.streaming.asyncProgressTrackingEnabled`), taking
     * the offset-log fsync off the batch critical path — delivery weakens
     * to at-least-once, which is still STRONGER than the reference push
-    * path's at-most-once. `StreamBench.latencyProbe("stateless*")`
-    * measures this floor; BASELINE.md records it against the stateful
-    * pipeline's.
+    * path's at-most-once. perfbench `cdc_tail`'s continuous tail runs
+    * this path; BASELINE.md (round 7) records its micro-batch floor
+    * against the stateful pipeline's.
     */
   def statelessEvents(ds: Dataset[RawChange],
                       redactions: Redactions.FieldRedactions = Map.empty,

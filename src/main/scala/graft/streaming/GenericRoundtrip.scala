@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,7 +66,7 @@ object GenericRoundtrip {
               c.commit()
             } catch {
               case e: Throwable =>
-                try c.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+                try c.rollback() catch { case NonFatal(r) => e.addSuppressed(r) }
                 throw e
             } finally c.close()
           }

@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all Spark-backed suites, built on
-  * [[Graft.sessionBuilder]] so every spec runs the session defaults users get.
+/** One shared local session for all Spark-backed suites: the session every
+  * main runs ([[Harness.session]] on [[Graft.sessionBuilder]]), on 4 cores.
   */
 object TestSpark {
-  lazy val spark: SparkSession = Graft.sessionBuilder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(cpus = 4)
 
   /** Run `body` with codegen forced (no interpreter fallback), restoring the
     * PRIOR conf values afterwards — the session is shared JVM-wide, so
