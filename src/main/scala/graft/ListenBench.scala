@@ -87,10 +87,10 @@ object ListenBench {
       fanOut("listen_throughput_socket", sec)
     }
 
-    // binary subscriber: the proto path pays one Jackson parse + one
-    // ProtoWire encode per DELIVERED event at the subscriber edge —
-    // measure that cost next to the JSON line path above
-    withHub { server =>
+    // binary fan-out: nSubs readers of varint-delimited proto frames;
+    // `publishOne` sends one event, and the line times n of them through
+    // to every reader's drain
+    def protoFanOut(metric: String)(publishOne: ListenServer => Unit): Unit = withHub { server =>
       val done = new AtomicLong(0)
       val readers = (1 to nSubs).map { _ =>
         val t = new Thread(() => {
@@ -125,7 +125,7 @@ object ListenBench {
         Thread.sleep(5)
       val t0 = System.nanoTime()
       var i = 0
-      while (i < n) { server.publish("events", event); i += 1 }
+      while (i < n) { publishOne(server); i += 1 }
       readers.foreach(_.join(120000))
       val sec = (System.nanoTime() - t0) / 1e9
       require(server.droppedCount == 0, s"dropped ${server.droppedCount} — resize the probe queue")
@@ -133,59 +133,20 @@ object ListenBench {
       // then skips it) — the delivered total is the honest gate
       require(done.get == n.toLong * nSubs,
         s"delivered ${done.get} of ${n.toLong * nSubs} — a reader died mid-run")
-      fanOut("listen_throughput_proto", sec)
+      fanOut(metric, sec)
     }
+
+    // the proto path pays one Jackson parse + one ProtoWire encode per
+    // DELIVERED event at the subscriber edge — measure that cost next to
+    // the JSON line path above
+    protoFanOut("listen_throughput_proto")(_.publish("events", event))
 
     // encode-once hoist: the SAME binary fan-out with the frame
     // pre-encoded (the pipeline-column shape, ProtoWire.eventFrames) —
     // per-subscriber cost drops to base64-decode + socket write, so the
     // line should sit within ~1.5× of the JSON path at equal fan-out
-    withHub { server =>
-      val frame = graft.streaming.ProtoWire.framedEventBase64(event)
-      val done = new AtomicLong(0)
-      val readers = (1 to nSubs).map { _ =>
-        val t = new Thread(() => {
-          try {
-            val sock = new Socket("127.0.0.1", server.boundPort)
-            val w = new BufferedWriter(new OutputStreamWriter(sock.getOutputStream, UTF_8))
-            w.write("""{"tableRegexp":".*","format":"proto"}""" + "\n"); w.flush()
-            val in = new java.io.BufferedInputStream(sock.getInputStream, 1 << 16)
-            var got = 0
-            var open = true
-            while (open && got < n) {
-              var shift = 0; var len = 0; var more = true
-              while (more) {
-                val x = in.read()
-                if (x < 0) { open = false; more = false }
-                else {
-                  len |= (x & 0x7F) << shift
-                  if ((x & 0x80) == 0) more = false else shift += 7
-                }
-              }
-              if (open && in.readNBytes(len).length == len) got += 1
-              else open = false
-            }
-            done.addAndGet(got.toLong)
-            sock.close()
-          } catch { case NonFatal(_) => () }
-        })
-        t.setDaemon(true); t.start(); t
-      }
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (server.subscriberCount < nSubs && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < n) { server.publish("events", event, frame); i += 1 }
-      readers.foreach(_.join(120000))
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(server.droppedCount == 0, s"dropped ${server.droppedCount} — resize the probe queue")
-      // droppedCount can't see a reader that died and UNREGISTERED (publish
-      // then skips it) — the delivered total is the honest gate
-      require(done.get == n.toLong * nSubs,
-        s"delivered ${done.get} of ${n.toLong * nSubs} — a reader died mid-run")
-      fanOut("listen_throughput_proto_hoisted", sec)
-    }
+    val frame = graft.streaming.ProtoWire.framedEventBase64(event)
+    protoFanOut("listen_throughput_proto_hoisted")(_.publish("events", event, frame))
 
     // resume path: a reconnecting subscriber drains an N-event archive gap
     // (Layout tail replay) — the cost of catching up vs tailing live

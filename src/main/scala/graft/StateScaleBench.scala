@@ -187,30 +187,6 @@ object StateScaleBench {
       q.stop()
       out
     }
-    def runMediaTws(n: Long): (Double, Long, Long) = {
-      implicit val sqlCtx = spark.sqlContext
-      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-        graft.streaming.DedupStream.FpRow]
-      val q = graft.streaming.DedupStream.fpVerifiedPairsTws(
-          graft.streaming.DedupStream.fpBandRows(input.toDS(),
-            graft.streaming.DedupStream.ImageBanding))
-        .writeStream.format("noop").outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("media_state_scale_tws").toString)
-        .start()
-      val t0 = System.nanoTime()
-      (1 to waves).foreach { w =>
-        val lo = n / waves * (w - 1); val hi = n / waves * w
-        input.addData((lo until hi).map(id =>
-          graft.streaming.DedupStream.FpRow(id, fp56(id))): _*)
-        q.processAllAvailable()
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      val out = (sec, st.map(_.numRowsTotal).sum, st.map(_.memoryUsedBytes).sum)
-      q.stop()
-      out
-    }
     val mediaSizes = sys.env.getOrElse("SPARK_GRAFT_MEDIA_SIZES", "250000,500000,1000000")
       .split(",").map(_.trim.toLong).toSeq
     val nBands = graft.streaming.DedupStream.ImageBanding.numBands
@@ -229,25 +205,6 @@ object StateScaleBench {
             "docs_per_sec" -> (n / best._1).toLong, "state_rows" -> best._2,
             "state_mem_bytes" -> best._3, "exemplar_entries" -> entries,
             "bytes_per_entry" -> (if (best._3 > 0) best._3 / entries else -1L))
-        }
-        // the transformWithState MapState layout on the SAME corpus — the
-        // per-entry-vs-bucket-blob comparison (state_rows here counts map
-        // ENTRIES, not buckets: the layouts genuinely differ). RocksDB
-        // ONLY: TWS state variables are column families, which the
-        // HDFS-backed heap provider does not support
-        if (provName == "rocksdb") {
-        runMediaTws(20000L)
-        for (n <- mediaSizes) {
-          val runs = (1 to reps).map(_ => runMediaTws(n))
-          val best = runs.minBy(_._1)
-          val times = runs.map(_._1)
-          val entries = n * nBands
-          Harness.emit("media_state_scale_tws", "provider" -> provName, "classes" -> n,
-            "waves" -> waves, "sec" -> best._1, "times" -> times,
-            "docs_per_sec" -> (n / best._1).toLong, "state_rows" -> best._2,
-            "state_mem_bytes" -> best._3, "exemplar_entries" -> entries,
-            "bytes_per_entry" -> (if (best._3 > 0) best._3 / entries else -1L))
-        }
         }
       } finally saved match {
         case Some(v) => spark.conf.set(confKey, v)

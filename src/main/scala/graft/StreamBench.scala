@@ -113,59 +113,49 @@ object StreamBench {
     qj.stop()
     throughput("cdc_stream_throughput_jdbc", "events", rows.length, jdbcSec)
 
+    // one MemoryStream line: `pipeline` over a fresh stream and checkpoint,
+    // `rows` added up front and only processAllAvailable timed; the first
+    // run pays codegen and state-store setup, the second is reported
+    def warm[T: org.apache.spark.sql.Encoder](name: String, unit: String, rows: Seq[T],
+                                              extra: (String, Any)*)(
+        pipeline: org.apache.spark.sql.Dataset[T] => org.apache.spark.sql.Dataset[_]): Unit = {
+      def run(): Double = {
+        implicit val sqlCtx = spark.sqlContext
+        val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
+        val q = pipeline(input.toDS()).writeStream.format("noop").outputMode("append")
+          .option("checkpointLocation",
+            java.nio.file.Files.createTempDirectory(name).toString)
+          .start()
+        input.addData(rows)
+        val t0 = System.nanoTime()
+        q.processAllAvailable()
+        val sec = (System.nanoTime() - t0) / 1e9
+        q.stop()
+        sec
+      }
+      run()
+      throughput(name, unit, rows.size, run(), extra: _*)
+    }
+
     // ===== online near-dup dedup throughput =====
     // The document corpus replicated with disjoint ids (copies share TEXT,
     // so near-dup candidate volume is realistic — every copy collides with
     // the original's buckets) driven through the in-row banding + bucket
-    // state pipeline; warm run reported (cold pays codegen).
+    // state pipeline.
     {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import graft.streaming.DedupStream
       val docRows = Tables.load(spark, sfDir, "documents")
         .select($"doc_id", $"text").as[(Long, String)].collect()
       val copies = 4
       val docs = (0 until copies).flatMap(c =>
-        docRows.map { case (id, t) => graft.streaming.DedupStream.Doc(id + c * 10000000L, t) })
-      def run(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[graft.streaming.DedupStream.Doc]
-        val q = graft.Graft.dedupStream(input.toDS().toDF())
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("dedup_stream_bench").toString)
-          .start()
-        input.addData(docs: _*)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      run() // cold: codegen + state-store setup
-      val warmSec = run()
-      throughput("dedup_stream_throughput", "docs", docs.size, warmSec)
+        docRows.map { case (id, t) => DedupStream.Doc(id + c * 10000000L, t) })
+      warm("dedup_stream_throughput", "docs", docs)(ds => Graft.dedupStream(ds.toDF()))
       // the composed candidate→verify stage (exemplar hash-set state +
       // in-handler exact Jaccard) against the candidates-only line above:
       // the price of edges leaving the stream already verified
-      def runVerified(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[graft.streaming.DedupStream.Doc]
-        val q = graft.streaming.DedupStream.verifiedCandidates(
-            graft.streaming.DedupStream.bandRowsWithSets(input.toDS().toDF())
-              .as[graft.streaming.DedupStream.BandRowV])
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("dedup_stream_verified").toString)
-          .start()
-        input.addData(docs: _*)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runVerified()
-      val warmVSec = runVerified()
-      throughput("dedup_stream_verified_throughput", "docs", docs.size, warmVSec)
+      warm("dedup_stream_verified_throughput", "docs", docs)(ds =>
+        DedupStream.verifiedCandidates(
+          DedupStream.bandRowsWithSets(ds.toDF()).as[DedupStream.BandRowV]))
     }
 
     // ===== online MEDIA near-dup throughput (the r8 modality) =====
@@ -175,29 +165,11 @@ object StreamBench {
     // class-grain bucket state; the per-row PNG decode is INCLUDED — the
     // honest cost of fingerprinting the crawl as it lands.
     {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val pngRows = graft.ops.Multimodal.pngTable(spark, sfDir).collect()
       val copies = 4
       val media = (0 until copies).flatMap(c => pngRows.map(r =>
         graft.ops.Multimodal.MediaRow(r.doc_id + c * 10000000L, r.media, r.media_type)))
-      def runMedia(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[graft.ops.Multimodal.MediaRow]
-        val q = graft.Graft.mediaDedupStream(input.toDS())
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("media_dedup_bench").toString)
-          .start()
-        input.addData(media: _*)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runMedia()
-      val warmMSec = runMedia()
-      throughput("media_dedup_stream_throughput", "docs", media.size, warmMSec)
+      warm("media_dedup_stream_throughput", "docs", media)(Graft.mediaDedupStream(_))
     }
 
     // ===== DEGENERATE single-bucket media corpus =====
@@ -209,7 +181,6 @@ object StreamBench {
     // exactly this shape. Codec bypassed deliberately: the datapoint
     // isolates the state handler, not the decode.
     {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import graft.streaming.DedupStream
       val classes = 3000
       val copies = 32
@@ -221,58 +192,8 @@ object StreamBench {
         (0 until copies).map(k =>
           DedupStream.FpRow(i.toLong + k.toLong * 10000000L, fp))
       }
-      def runDegenerate(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[DedupStream.FpRow]
-        val q = DedupStream.fpVerifiedPairs(
-            DedupStream.fpBandRows(input.toDS(), DedupStream.ImageBanding))
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("media_dedup_degen").toString)
-          .start()
-        input.addData(fps: _*)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runDegenerate()
-      val warmDSec = runDegenerate()
-      throughput("media_dedup_degenerate_throughput", "docs", fps.size, warmDSec, "classes" -> classes)
-      // the transformWithState MapState layout on the SAME exact-dup-heavy
-      // corpus (RocksDB required): this is the layout's WIN case — an
-      // exact dup reads one map key instead of deserializing the loaded
-      // bucket blob (StateScaleBench carries its LOSS case: all-novel
-      // corpora pay entry-by-entry iteration for the Hamming sweep)
-      val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-      val priorProv = spark.conf.getOption(RocksKey)
-      spark.conf.set(RocksKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        def runDegenerateTws(): Double = {
-          implicit val sqlCtx = spark.sqlContext
-          val input = MemoryStream[DedupStream.FpRow]
-          val q = DedupStream.fpVerifiedPairsTws(
-              DedupStream.fpBandRows(input.toDS(), DedupStream.ImageBanding))
-            .writeStream.format("noop").outputMode("append")
-            .option("checkpointLocation",
-              java.nio.file.Files.createTempDirectory("media_degen_tws").toString)
-            .start()
-          input.addData(fps: _*)
-          val t0 = System.nanoTime()
-          q.processAllAvailable()
-          val sec = (System.nanoTime() - t0) / 1e9
-          q.stop()
-          sec
-        }
-        runDegenerateTws()
-        val warmT = runDegenerateTws()
-        throughput("media_dedup_degenerate_tws_throughput", "docs", fps.size, warmT, "classes" -> classes)
-      } finally priorProv match {
-        case Some(v) => spark.conf.set(RocksKey, v)
-        case None    => spark.conf.unset(RocksKey)
-      }
+      warm("media_dedup_degenerate_throughput", "docs", fps, "classes" -> classes)(ds =>
+        DedupStream.fpVerifiedPairs(DedupStream.fpBandRows(ds, DedupStream.ImageBanding)))
     }
 
     // ===== schema-drift alert throughput (r9) =====
@@ -281,53 +202,17 @@ object StreamBench {
     // rows (payload vocabulary), so this measures the explode + keyed
     // shuffle cost class of running drift detection permanently inline.
     {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import graft.streaming.SchemaDrift
       val drift = Tables.load(spark, sfDir, "events")
         .selectExpr("event_type as group", "event_id", "props as doc")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-      def runDrift(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[(String, Long, String)]
-        val q = graft.streaming.SchemaDrift.alerts(
-            graft.streaming.SchemaDrift.keyRows(
-              input.toDS().toDF("group", "event_id", "doc")))
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("drift_bench").toString)
-          .start()
-        input.addData(drift.toIndexedSeq)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runDrift()
-      val warmDr = runDrift()
-      throughput("schema_drift_throughput", "events", drift.length, warmDr)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toIndexedSeq
+      warm("schema_drift_throughput", "events", drift)(ds =>
+        SchemaDrift.alerts(SchemaDrift.keyRows(ds.toDF("group", "event_id", "doc"))))
       // TYPE-drift variant: same state machinery but the per-doc Variant
       // walk (parse_json + lateral variant_explode + schema_of_variant)
       // replaces the key explode — the cost of typing every value inline
-      def runTypeDrift(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[(String, Long, String)]
-        val q = graft.streaming.SchemaDrift.alerts(
-            graft.streaming.SchemaDrift.typeRows(
-              input.toDS().toDF("group", "event_id", "doc")))
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("tdrift_bench").toString)
-          .start()
-        input.addData(drift.toIndexedSeq)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runTypeDrift()
-      val warmTd = runTypeDrift()
-      throughput("type_drift_throughput", "events", drift.length, warmTd)
+      warm("type_drift_throughput", "events", drift)(ds =>
+        SchemaDrift.alerts(SchemaDrift.typeRows(ds.toDF("group", "event_id", "doc"))))
     }
 
     // ===== windowed sketch profile throughput (r9) =====
@@ -335,32 +220,15 @@ object StreamBench {
     // class of permanently profiling the data inline (constant-size state
     // per window).
     {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val evs = Tables.load(spark, sfDir, "events")
         .select("event_id", "ts", "user_id", "event_type", "props")
-        .as[CdcStream.RawChange].collect()
-      def runProfile(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[CdcStream.RawChange]
-        val q = graft.streaming.WindowSketches.windowedProfile(
-            input.toDS().toDF().withColumn(
-              "v", org.apache.spark.sql.functions.col("user_id").cast("double")),
-            tsCol = "ts", idCol = "user_id", valCol = "v",
-            windowDur = "1 hour", watermark = "0 seconds")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("profile_bench").toString)
-          .start()
-        input.addData(evs.toIndexedSeq)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runProfile()
-      val warmPr = runProfile()
-      throughput("window_profile_throughput", "events", evs.length, warmPr)
+        .as[CdcStream.RawChange].collect().toIndexedSeq
+      warm("window_profile_throughput", "events", evs)(ds =>
+        graft.streaming.WindowSketches.windowedProfile(
+          ds.toDF().withColumn(
+            "v", org.apache.spark.sql.functions.col("user_id").cast("double")),
+          tsCol = "ts", idCol = "user_id", valCol = "v",
+          windowDur = "1 hour", watermark = "0 seconds"))
     }
 
     // ===== kmv novelty monitor throughput (r10) =====
@@ -369,7 +237,6 @@ object StreamBench {
     // (state = k longs per group, FOREVER; replayed 5x so later reps hit
     // the saturated-sketch O(1) reject fast path like a long-lived stream).
     {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val hs = Tables.load(spark, sfDir, "documents")
         .select(org.apache.spark.sql.functions.col("source").as("group"),
           org.apache.spark.sql.functions.xxhash64(
@@ -377,24 +244,8 @@ object StreamBench {
         .as[graft.streaming.WindowSketches.HashRow].collect()
       val replayed = (0 until 5).flatMap(rep =>
         hs.map(r => r.copy(h = r.h + rep % 2))) // a re-sent/novel mix
-      def runNovelty(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[graft.streaming.WindowSketches.HashRow]
-        val q = graft.streaming.WindowSketches.kmvNovelty(input.toDS())
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("novelty_bench").toString)
-          .start()
-        input.addData(replayed)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runNovelty()
-      val warmNv = runNovelty()
-      throughput("novelty_monitor_throughput", "docs", replayed.length, warmNv)
+      warm("novelty_monitor_throughput", "docs", replayed)(
+        graft.streaming.WindowSketches.kmvNovelty(_))
     }
 
     // Bloom novelty gate: the full corpus replayed 5x through the
@@ -402,7 +253,6 @@ object StreamBench {
     // maybe_seen — the steady-state mix of a long-lived crawl); state =
     // 2^shardBits fixed filters regardless of reps
     {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val base = graft.streaming.BloomNovelty
         .keyed(Tables.load(spark, sfDir, "documents"), shardBits = 5)
         .collect()
@@ -410,33 +260,18 @@ object StreamBench {
         base.map(r => r.copy(doc_id = r.doc_id + rep * 10000000L)))
         .sortBy(_.doc_id)
       val p = graft.functions.Bloom.forExpected(base.length.toLong.max(1024L) >> 5, 0.01)
-      def runGate(): Double = {
-        implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[graft.streaming.BloomNovelty.Keyed]
-        val q = graft.streaming.BloomNovelty.tagged(input.toDS(), p)
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("bloom_novelty_bench").toString)
-          .start()
-        input.addData(replayed)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        sec
-      }
-      runGate()
-      val warmBn = runGate()
-      throughput("bloom_novelty_throughput", "docs", replayed.length, warmBn)
+      warm("bloom_novelty_throughput", "docs", replayed)(
+        graft.streaming.BloomNovelty.tagged(_, p))
     }
 
     // Semantic-dedup exemplar state: raw vectors vs PQ codes. Same corpus
-    // replay through judgedTws (ListState entry = cap x dim doubles worth
-    // of vector per exemplar) and judgedPqTws (entry = 8 codeword ids +
-    // an error radius; exact cosine decides only for ADC-screen
-    // survivors, paying a point fetch). Judgments are parity-pinned in
+    // replay through judged (per exemplar: its cap x dim doubles worth of
+    // vector) and judgedPq (per exemplar: 8 codeword ids + an error
+    // radius; exact cosine decides only for ADC-screen survivors, paying a
+    // point fetch), both on RocksDB. Judgments are parity-pinned in
     // SemDedupStreamSpec; what this measures is the DEPLOYMENT trade:
-    // state bytes on disk and warm throughput.
+    // state bytes on disk and warm throughput. Its own block, not `warm`:
+    // it times addData too and reads the state directory.
     {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions._
@@ -467,8 +302,8 @@ object StreamBench {
           val chk = java.nio.file.Files.createTempDirectory(
             s"sem_state_${if (pq) "pq" else "raw"}").toString
           val judged =
-            if (pq) graft.streaming.SemDedupStream.judgedPqTws(assigned, fetch)
-            else graft.streaming.SemDedupStream.judgedTws(assigned)
+            if (pq) graft.streaming.SemDedupStream.judgedPq(assigned, fetch)
+            else graft.streaming.SemDedupStream.judged(assigned)
           val q = judged.writeStream.format("noop").outputMode("append")
             .option("checkpointLocation", chk).start()
           val t0 = System.nanoTime()

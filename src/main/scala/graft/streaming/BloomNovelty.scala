@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.{Bloom, BloomKernel}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 /** ONLINE novelty classification with CONSTANT state — the streaming face
   * of [[graft.ops.BloomMembership.bloomNovel]]'s routing contract, and the
@@ -50,8 +50,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * batch fold ([[batchTagged]]) — `BloomNoveltySpec` pins both, with and
   * without rotation. Duplicate content in one batch tags the second copy
   * `maybe_seen`, exactly as if the copies had arrived in different batches.
-  * Both stateful APIs run the SAME [[foldShard]] — the classify-then-
-  * insert-then-rotate recurrence exists exactly once.
+  * The stream and the batch twin run the SAME [[foldShard]] — the
+  * classify-then-insert-then-rotate recurrence exists exactly once.
   *
   * Erasure posture, by construction: state holds ONLY irreversible 64-bit
   * content hashes — no payload, no user ids, nothing attributable — so the
@@ -103,11 +103,11 @@ object BloomNovelty {
       col("doc_id")).as[Keyed]
   }
 
-  /** THE recurrence — shared verbatim by the classic handler, the
-    * transformWithState handler, and the batch twin, so the three paths
-    * cannot drift: sort (doc_id, h), classify against the OR of all
-    * retained generations, insert new-to-active keys into the active
-    * filter, rotate when the active filter reaches its sized capacity.
+  /** THE recurrence — shared verbatim by the stateful handler and the
+    * batch twin, so the two paths cannot drift: sort (doc_id, h), classify
+    * against the OR of all retained generations, insert new-to-active keys
+    * into the active filter, rotate when the active filter reaches its
+    * sized capacity.
     */
   private[graft] def foldShard(st: GateState, rows: Seq[Keyed],
                                p: Bloom.Params,
@@ -143,16 +143,20 @@ object BloomNovelty {
   /** The stateful gate: per shard, classify-then-insert against the
     * shard's Bloom generations. `p` sizes ONE shard's filter (expected
     * keys per shard, not total — with rotation, [[Bloom.forRotation]]'s
-    * per-generation params).
+    * per-generation params). `initial` seeds MIGRATED gate state — the
+    * StateMigration discipline applied to the gate: relocating (or
+    * upgrading) the novelty store keeps its filters, so previously-seen
+    * content still tags maybe_seen after the move. The r14→r15 layout
+    * change (bare bit array → [[GateState]]) migrates through
+    * [[StateMigration.migrateNoveltyState]].
     */
   def tagged(keyed: Dataset[Keyed], p: Bloom.Params,
-             rot: Rotation = Rotation.none): Dataset[Tagged] = {
+             rot: Rotation = Rotation.none,
+             initial: Option[Dataset[(Int, GateState)]] = None): Dataset[Tagged] = {
     import keyed.sparkSession.implicits._
-    keyed.groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout()) {
-        (_: Int, rows: Iterator[Keyed], state: GroupState[GateState]) =>
-          onShard(rows, state, p, rot)
-      }
+    KeyedState.classic(keyed.groupByKey(_.shard), None, initial)(
+      (_: Int, rows: Iterator[Keyed], state: GroupState[GateState]) =>
+        onShard(rows, state, p, rot))
   }
 
   private[graft] def onShard(rows: Iterator[Keyed],
@@ -163,74 +167,6 @@ object BloomNovelty {
     val (next, out) = foldShard(st, rows.toSeq, p, rot)
     state.update(next)
     out.iterator
-  }
-
-  /** [[tagged]] on transformWithState — completing the dual-API matrix the
-    * dedup and prev-image stores keep. Parity with the classic path is
-    * structural: both call [[foldShard]]. Accepts migrated initial state
-    * through the `WithInitialState` hook ([[taggedTwsFrom]]).
-    */
-  class ShardProcessor(p: Bloom.Params, rot: Rotation = Rotation.none)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Int, Keyed, Tagged, GateState] {
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var gate: ValueState[GateState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      gate = getHandle.getValueState[GateState]("gate",
-        org.apache.spark.sql.Encoders.product[GateState], TTLConfig.NONE)
-    override def handleInitialState(key: Int, initial: GateState,
-                                    timerValues: TimerValues): Unit =
-      gate.update(initial)
-    override def handleInputRows(key: Int, rows: Iterator[Keyed],
-                                 timerValues: TimerValues): Iterator[Tagged] = {
-      val st = if (gate.exists()) gate.get() else freshState(p)
-      val (next, out) = foldShard(st, rows.toSeq, p, rot)
-      gate.update(next)
-      out.iterator
-    }
-  }
-
-  /** The gate on the modern stateful API. */
-  def taggedTws(keyed: Dataset[Keyed], p: Bloom.Params,
-                rot: Rotation = Rotation.none): Dataset[Tagged] = {
-    import keyed.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    keyed.groupByKey(_.shard)
-      .transformWithState(new ShardProcessor(p, rot), TimeMode.None(), OutputMode.Append())
-  }
-
-  /** [[tagged]] seeded with MIGRATED gate state — the StateMigration
-    * discipline applied to the gate: relocating (or upgrading) the
-    * novelty store keeps its filters, so previously-seen content still
-    * tags maybe_seen after the move. The r14→r15 layout change (bare bit
-    * array → [[GateState]]) migrates through
-    * [[StateMigration.migrateNoveltyState]].
-    */
-  def taggedFrom(keyed: Dataset[Keyed], p: Bloom.Params,
-                 initial: Dataset[(Int, GateState)],
-                 rot: Rotation = Rotation.none): Dataset[Tagged] = {
-    import keyed.sparkSession.implicits._
-    keyed.groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout(),
-        initial.groupByKey(_._1).mapValues(_._2)) {
-        (_: Int, rows: Iterator[Keyed], state: GroupState[GateState]) =>
-          onShard(rows, state, p, rot)
-      }
-  }
-
-  /** [[taggedTws]] seeded with migrated gate state — the tws half of the
-    * migration matrix ([[taggedFrom]] is the classic half): an r14 classic
-    * checkpoint upgrades THROUGH [[StateMigration.migrateNoveltyState]]
-    * into either API's resumed gate.
-    */
-  def taggedTwsFrom(keyed: Dataset[Keyed], p: Bloom.Params,
-                    initial: Dataset[(Int, GateState)],
-                    rot: Rotation = Rotation.none): Dataset[Tagged] = {
-    import keyed.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    keyed.groupByKey(_.shard)
-      .transformWithState(new ShardProcessor(p, rot), TimeMode.None(),
-        OutputMode.Append(), initial.groupByKey(_._1).mapValues(_._2))
   }
 
   /** Swamidass–Baldi cardinality estimate for a Bloom filter: from X set

@@ -5,7 +5,7 @@ import graft.functions.MergePatch
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
   KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+import org.apache.spark.sql.streaming.{GroupState, OutputMode,
   StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Live-mode CDC pipeline: the reference's event loop (`server.go:258-281`)
@@ -112,30 +112,6 @@ object CdcStream {
     TableCdcEvent(k._1, e.event_id, e.ts, e.user_id, e.op, e.payload,
       e.previous, e.changes)
 
-  /** Migrated (or erasure-filtered) state rows as the engine's initial-state
-    * input — the resume side of [[StateMigration]] and [[StateErasure]].
-    */
-  private def seed[K: Encoder](init: Dataset[(K, String)]) =
-    init.groupByKey(_._1).mapValues(_._2)(Encoders.STRING)
-
-  /** The classic `flatMapGroupsWithState` wiring shared by the typed and
-    * the generic folds: processing-time timeout iff a TTL is set, optional
-    * initial state.
-    */
-  private def classic[K: Encoder, V, O: Encoder](
-      grouped: KeyValueGroupedDataset[K, V], stateTtl: Option[String],
-      initial: Option[Dataset[(K, String)]])(
-      f: (K, Iterator[V], GroupState[String]) => Iterator[O]): Dataset[O] = {
-    implicit val str: Encoder[String] = Encoders.STRING
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    initial match {
-      case Some(init) => grouped.flatMapGroupsWithState(OutputMode.Append, timeout, seed(init))(f)
-      case None       => grouped.flatMapGroupsWithState(OutputMode.Append, timeout)(f)
-    }
-  }
-
   /** [[foldChanges]] over a `GroupState`: an empty image removes the key's
     * state, and the TTL re-arms only while state EXISTS — setting a timeout
     * after remove() writes the entry back and the key re-fires forever, so
@@ -168,7 +144,7 @@ object CdcStream {
                     stateTtl: Option[String] = None,
                     initial: Option[Dataset[(Long, String)]] = None): Dataset[CdcEvent] = {
     import ds.sparkSession.implicits._
-    classic(ds.groupByKey(_.user_id), stateTtl, initial)(
+    KeyedState.classic(ds.groupByKey(_.user_id), stateTtl, initial)(
       classicGroup(stateTtl, untagged[Long]))
   }
 
@@ -182,7 +158,7 @@ object CdcStream {
   def withPrevStateByTable(ds: Dataset[TableRawChange],
                            stateTtl: Option[String] = None): Dataset[TableCdcEvent] = {
     import ds.sparkSession.implicits._
-    classic(ds.groupByKey(r => (r.table, r.user_id)), stateTtl, None)(
+    KeyedState.classic(ds.groupByKey(r => (r.table, r.user_id)), stateTtl, None)(
       classicGroup(stateTtl, tagged))
   }
 
@@ -312,7 +288,7 @@ object CdcStream {
     val p = new PrevImageProcessor[K, I, O](cutoffOf, ttl, emit)
     val mode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
     initial match {
-      case Some(init) => grouped.transformWithState(p, mode, OutputMode.Append(), seed(init))
+      case Some(init) => grouped.transformWithState(p, mode, OutputMode.Append(), KeyedState.seed(init))
       case None       => grouped.transformWithState(p, mode, OutputMode.Append())
     }
   }
@@ -416,7 +392,7 @@ object CdcStream {
       coalesce(get_json_object(col("payload"), s"$$.$keyPath"), lit("")).as("row_key"),
       opCol.as("op_hint"), col("event_id"), col("payload"))
       .as[KeyedGenericChange]
-    classic(keyed.groupByKey(_.row_key), stateTtl, initial)(
+    KeyedState.classic(keyed.groupByKey(_.row_key), stateTtl, initial)(
       processGenericGroup(stateTtl))
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.{Dedup, Hashing}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 /** ONLINE near-duplicate detection — the streaming face of the MinHash/LSH
   * dedup family: documents arrive on a stream, and each is judged against
@@ -133,14 +133,9 @@ object DedupStream {
   def verifiedCandidates(bands: Dataset[BandRowV], threshold: Double = 0.2,
                          stateTtl: Option[String] = None): Dataset[Verified] = {
     import bands.sparkSession.implicits._
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    bands.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
-        (_: String, rows: Iterator[BandRowV], state: GroupState[Exemplar]) =>
-          onBucketVerified(rows, state, stateTtl, threshold)
-      }
+    KeyedState.classic(bands.groupByKey(_.key), stateTtl, None)(
+      (_: String, rows: Iterator[BandRowV], state: GroupState[Exemplar]) =>
+        onBucketVerified(rows, state, stateTtl, threshold))
   }
 
   /** Per-bucket transition of the verified path — same TTL discipline as
@@ -179,111 +174,6 @@ object DedupStream {
           else None
         }
     }
-
-  // ===== transformWithState twins for the text stores (r9) =====
-  // Same semantics as candidates/verifiedCandidates (parity spec-pinned);
-  // the modern API buys declarative per-variable TTL and the RocksDB-
-  // native layout, and handleInitialState makes the classic-checkpoint
-  // migration a first-class path — completing the dual-API matrix the
-  // prev-image pipeline and the media store already have.
-
-  /** [[candidates]]' processor: state = the exemplar id, one long. */
-  class BucketProcessor(ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        String, BandRow, Candidate, Long] {
-    import org.apache.spark.sql.streaming.{TimerValues, TimeMode, TTLConfig, ValueState}
-    @transient private var exemplar: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      exemplar = getHandle.getValueState[Long]("exemplar",
-        org.apache.spark.sql.Encoders.scalaLong,
-        ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-    override def handleInitialState(key: String, initial: Long,
-                                    timerValues: TimerValues): Unit =
-      exemplar.update(initial)
-    override def handleInputRows(key: String, rows: Iterator[BandRow],
-                                 timerValues: TimerValues): Iterator[Candidate] = {
-      val rs = rows.toSeq
-      val ex = if (exemplar.exists()) exemplar.get() else {
-        val m = rs.iterator.map(_.doc_id).min
-        exemplar.update(m)
-        m
-      }
-      rs.iterator.filter(_.doc_id != ex).map(r => Candidate(r.doc_id, ex, r.band_id))
-    }
-  }
-
-  /** [[candidates]] on transformWithState. */
-  def candidatesTws(bands: Dataset[BandRow],
-                    ttl: Option[java.time.Duration] = None): Dataset[Candidate] = {
-    import bands.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    bands.groupByKey(_.key)
-      .transformWithState(new BucketProcessor(ttl), mode, OutputMode.Append())
-  }
-
-  /** [[candidatesTws]] seeded with a migrated classic store
-    * ([[StateMigration.readDedupBucketState]]).
-    */
-  def candidatesTwsFrom(bands: Dataset[BandRow], initial: Dataset[(String, Long)],
-                        ttl: Option[java.time.Duration] = None): Dataset[Candidate] = {
-    import bands.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    bands.groupByKey(_.key)
-      .transformWithState(new BucketProcessor(ttl), mode, OutputMode.Append(),
-        initial.groupByKey(_._1).mapValues(_._2))
-  }
-
-  /** [[verifiedCandidates]]' processor: state = the exemplar's
-    * (doc_id, shingle-hash set); the in-handler exact Jaccard mirrors
-    * [[onBucketVerified]] (same unrounded threshold / HALF_UP round-6).
-    */
-  class VerifyBucketProcessor(threshold: Double,
-                              ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        String, BandRowV, Verified, Exemplar] {
-    import org.apache.spark.sql.streaming.{TimerValues, TimeMode, TTLConfig, ValueState}
-    @transient private var ex: ValueState[Exemplar] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      ex = getHandle.getValueState[Exemplar]("exemplar",
-        org.apache.spark.sql.Encoders.product[Exemplar],
-        ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-    override def handleInitialState(key: String, initial: Exemplar,
-                                    timerValues: TimerValues): Unit =
-      ex.update(initial)
-    override def handleInputRows(key: String, rows: Iterator[BandRowV],
-                                 timerValues: TimerValues): Iterator[Verified] = {
-      val rs = rows.toSeq
-      val e = if (ex.exists()) ex.get() else {
-        val m = rs.minBy(_.doc_id)
-        val v = Exemplar(m.doc_id, m.hs)
-        ex.update(v)
-        v
-      }
-      val exSet = e.hs.toSet
-      rs.iterator.filter(_.doc_id != e.doc_id).flatMap { r =>
-        val inter = r.hs.count(exSet.contains)
-        val j = inter.toDouble / (r.hs.size + e.hs.size - inter).toDouble
-        if (j >= threshold)
-          Some(Verified(r.doc_id, e.doc_id, r.band_id,
-            java.math.BigDecimal.valueOf(j)
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()))
-        else None
-      }
-    }
-  }
-
-  /** [[verifiedCandidates]] on transformWithState. */
-  def verifiedCandidatesTws(bands: Dataset[BandRowV], threshold: Double = 0.2,
-                            ttl: Option[java.time.Duration] = None): Dataset[Verified] = {
-    import bands.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    bands.groupByKey(_.key)
-      .transformWithState(new VerifyBucketProcessor(threshold, ttl), mode,
-        OutputMode.Append())
-  }
 
   // ===== media modality: fingerprint streams through the SAME machinery =====
   // "Dedup the crawl as it lands" for images/audio: the batch side
@@ -380,146 +270,20 @@ object DedupStream {
     * the stored set (edges keep flowing) but stop enrolling, the streaming
     * analog of the batch star fallback. At-least-once per band (a pair
     * sharing k bands emits k copies — identical hamming, idempotent
-    * downstream); same TTL retention knob as the text stages.
+    * downstream); same TTL retention knob as the text stages. `initial`
+    * seeds MIGRATED bucket state ([[StateMigration.readMediaDedupState]]) —
+    * relocating the media exemplar store keeps its class history, same
+    * rationale as [[candidates]].
     */
   def fpVerifiedPairs(bands: Dataset[FpBandRow], maxHamming: Int = 3,
                       stateTtl: Option[String] = None,
-                      bucketCap: Int = 10000): Dataset[FpEdge] = {
+                      bucketCap: Int = 10000,
+                      initial: Option[Dataset[(String, FpBucketState)]] = None)
+      : Dataset[FpEdge] = {
     import bands.sparkSession.implicits._
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    bands.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
-        (_: String, rows: Iterator[FpBandRow], state: GroupState[FpBucketState]) =>
-          onFpBucket(rows, state, stateTtl, maxHamming, bucketCap)
-      }
-  }
-
-  /** [[fpVerifiedPairs]] seeded with MIGRATED bucket state
-    * ([[StateMigration.readMediaDedupState]]) — relocating the media
-    * exemplar store keeps its class history, same rationale as
-    * [[candidatesFrom]].
-    */
-  def fpVerifiedPairsFrom(bands: Dataset[FpBandRow],
-                          initial: Dataset[(String, FpBucketState)],
-                          maxHamming: Int = 3,
-                          stateTtl: Option[String] = None,
-                          bucketCap: Int = 10000): Dataset[FpEdge] = {
-    import bands.sparkSession.implicits._
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    bands.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout,
-        initial.groupByKey(_._1).mapValues(_._2)) {
-        (_: String, rows: Iterator[FpBandRow], state: GroupState[FpBucketState]) =>
-          onFpBucket(rows, state, stateTtl, maxHamming, bucketCap)
-      }
-  }
-
-  /** Spark 4 `transformWithState` twin of [[fpVerifiedPairs]] — same
-    * semantics (the parity spec replays both), better STATE SHAPE: the
-    * classic path serializes each bucket's whole exemplar list as one
-    * blob per key (every update rewrites the bucket); here the class
-    * store is a native `MapState[fp → rep]`, so RocksDB holds ONE ENTRY
-    * PER FINGERPRINT CLASS — an exact-dup arrival reads a single map key
-    * (no bucket-blob deserialization), enrollment writes one entry, and
-    * per-state-variable TTL is declarative. The novel-fingerprint Hamming
-    * sweep iterates the map — the same irreducible O(classes-in-bucket)
-    * the classic path pays, without the blob rewrite after it.
-    */
-  class FpBucketProcessor(maxHamming: Int, bucketCap: Int,
-                          ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        String, FpBandRow, FpEdge, FpBucketState] {
-    import org.apache.spark.sql.streaming.{MapState, TimerValues, TimeMode, TTLConfig, ValueState}
-    import org.apache.spark.sql.streaming.OutputMode
-    @transient private var reps: MapState[Long, Long] = _
-    @transient private var count: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-      reps = getHandle.getMapState[Long, Long]("reps",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong, ttlConf)
-      count = getHandle.getValueState[Long]("n",
-        org.apache.spark.sql.Encoders.scalaLong, ttlConf)
-    }
-
-    /** Migration hook: a classic-layout bucket ([[StateMigration
-      * .readMediaDedupState]]) lands as per-class map entries — the
-      * blob-to-entries conversion IS the migration.
-      */
-    override def handleInitialState(key: String, initial: FpBucketState,
-                                    timerValues: TimerValues): Unit = {
-      initial.exemplars.foreach(e => reps.updateValue(e.fp, e.doc_id))
-      count.update(initial.exemplars.size.toLong)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[FpBandRow],
-                                 timerValues: TimerValues): Iterator[FpEdge] = {
-      val out = Vector.newBuilder[FpEdge]
-      rows.toSeq.sortBy(_.doc_id).foreach { r =>
-        if (reps.containsKey(r.fp)) {
-          val rep = reps.getValue(r.fp)
-          if (rep != r.doc_id) out += FpEdge(r.doc_id, rep, r.band_id, 0L)
-        } else {
-          // the Hamming sweep walks every live entry anyway, so counting
-          // them here is free — and with TTL it is the only correct count:
-          // map entries expire per-entry while the counter's TTL re-arms
-          // on every enrollment, so a counter-led cap would keep blocking
-          // enrollment long after the exemplars expired
-          var live = 0L
-          reps.iterator().foreach { kv =>
-            live += 1L
-            val h = java.lang.Long.bitCount(r.fp ^ kv._1).toLong
-            if (h <= maxHamming) out += FpEdge(r.doc_id, kv._2, r.band_id, h)
-          }
-          val n = if (ttl.isDefined) live
-                  else if (count.exists()) count.get() else 0L
-          if (n < bucketCap) {
-            reps.updateValue(r.fp, r.doc_id)
-            count.update(n + 1L)
-          }
-        }
-      }
-      out.result().iterator
-    }
-  }
-
-  /** [[fpVerifiedPairs]] on the transformWithState API — see
-    * [[FpBucketProcessor]] for the state-shape upgrade. REQUIRES the
-    * RocksDB state-store provider (TWS state variables are column
-    * families, which the HDFS-backed heap provider does not support —
-    * Spark's own restriction, true of every TWS operator here).
-    */
-  def fpVerifiedPairsTws(bands: Dataset[FpBandRow], maxHamming: Int = 3,
-                         stateTtl: Option[java.time.Duration] = None,
-                         bucketCap: Int = 10000): Dataset[FpEdge] = {
-    import bands.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    bands.groupByKey(_.key)
-      .transformWithState(new FpBucketProcessor(maxHamming, bucketCap, stateTtl),
-        mode, OutputMode.Append())
-  }
-
-  /** [[fpVerifiedPairsTws]] seeded with a MIGRATED classic-layout store —
-    * the flatMapGroupsWithState → transformWithState direction for the
-    * media dedup state, same recipe as the prev-image pipeline's.
-    */
-  def fpVerifiedPairsTwsFrom(bands: Dataset[FpBandRow],
-                             initial: Dataset[(String, FpBucketState)],
-                             maxHamming: Int = 3,
-                             stateTtl: Option[java.time.Duration] = None,
-                             bucketCap: Int = 10000): Dataset[FpEdge] = {
-    import bands.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    bands.groupByKey(_.key)
-      .transformWithState(new FpBucketProcessor(maxHamming, bucketCap, stateTtl),
-        mode, OutputMode.Append(), initial.groupByKey(_._1).mapValues(_._2))
+    KeyedState.classic(bands.groupByKey(_.key), stateTtl, initial)(
+      (_: String, rows: Iterator[FpBandRow], state: GroupState[FpBucketState]) =>
+        onFpBucket(rows, state, stateTtl, maxHamming, bucketCap))
   }
 
   /** Per-bucket transition of the media path — [[onBucket]]'s TTL
@@ -568,39 +332,21 @@ object DedupStream {
       out.result().iterator
     }
 
-  /** First-writer-wins bucket state over the band-row stream. */
-  def candidates(bands: Dataset[BandRow],
-                 stateTtl: Option[String] = None): Dataset[Candidate] = {
-    import bands.sparkSession.implicits._
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    bands.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
-        (_: String, rows: Iterator[BandRow], state: GroupState[Long]) =>
-          onBucket(rows, state, stateTtl)
-      }
-  }
-
-  /** [[candidates]] seeded with MIGRATED bucket-exemplar state
+  /** First-writer-wins bucket state over the band-row stream. `initial`
+    * seeds a fresh checkpoint with MIGRATED bucket-exemplar state
     * ([[StateMigration.readDedupBucketState]]): relocating a long-lived
-    * dedup store to a fresh checkpoint keeps its exemplar history, so the
-    * new query keeps flagging against the SAME exemplars instead of
-    * re-claiming buckets (which would silently re-admit every historical
-    * near-dup whose exemplar evicted).
+    * dedup store keeps its exemplar history, so the new query keeps
+    * flagging against the SAME exemplars instead of re-claiming buckets
+    * (which would silently re-admit every historical near-dup whose
+    * exemplar evicted).
     */
-  def candidatesFrom(bands: Dataset[BandRow], initial: Dataset[(String, Long)],
-                     stateTtl: Option[String] = None): Dataset[Candidate] = {
+  def candidates(bands: Dataset[BandRow],
+                 stateTtl: Option[String] = None,
+                 initial: Option[Dataset[(String, Long)]] = None): Dataset[Candidate] = {
     import bands.sparkSession.implicits._
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    bands.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout,
-        initial.groupByKey(_._1).mapValues(_._2)) {
-        (_: String, rows: Iterator[BandRow], state: GroupState[Long]) =>
-          onBucket(rows, state, stateTtl)
-      }
+    KeyedState.classic(bands.groupByKey(_.key), stateTtl, initial)(
+      (_: String, rows: Iterator[BandRow], state: GroupState[Long]) =>
+        onBucket(rows, state, stateTtl))
   }
 
   /** The per-bucket state transition, factored out so the TTL paths are

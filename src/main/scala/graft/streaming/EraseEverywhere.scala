@@ -302,8 +302,8 @@ object EraseEverywhere {
   /** Text-dedup band-bucket store ([[DedupStream.candidates]]): exemplar
     * entries whose doc belongs to the erased entity are filtered out
     * offline, the stream resumes through `resumeFrom`
-    * ([[DedupStream.candidatesFrom]] on a fresh checkpoint), and the old
-    * checkpoint is decommissioned. `docsOf` maps the erasure set to the
+    * ([[DedupStream.candidates]] with `initial` on a fresh checkpoint), and
+    * the old checkpoint is decommissioned. `docsOf` maps the erasure set to the
     * entity's doc ids (identity by default — deployments where doc_id is
     * the user key).
     */
@@ -333,7 +333,8 @@ object EraseEverywhere {
 
   /** Media-dedup fingerprint store ([[DedupStream.fpVerifiedPairs]]):
     * erased docs' fingerprints filtered INSIDE each bucket, emptied
-    * buckets dropped; resume via [[DedupStream.fpVerifiedPairsFrom]].
+    * buckets dropped; resume via [[DedupStream.fpVerifiedPairs]] with
+    * `initial`.
     */
   final case class MediaDedup(name: String, checkpointDir: String,
                               resumeFrom: Dataset[(String, DedupStream.FpBucketState)] => String,
@@ -362,8 +363,8 @@ object EraseEverywhere {
 
   /** Semantic-dedup cluster-exemplar store ([[SemDedupStream.judged]]):
     * erased vectors' exemplars filtered per cluster; resume via
-    * [[SemDedupStream.judgedFrom]]. `vecsOf` maps the erasure set to the
-    * entity's vector ids.
+    * [[SemDedupStream.judged]] with `initial`. `vecsOf` maps the erasure
+    * set to the entity's vector ids.
     */
   final case class SemDedup(name: String, checkpointDir: String,
                             resumeFrom: Dataset[(Long, SemDedupStream.ClusterState)] => String,

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.Similarity
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 /** Online SEMANTIC near-dup detection — the embedding-space sibling of
   * [[DedupStream]], mirroring batch SemDeDup ([[Similarity.semDedupDf]])
@@ -62,125 +62,20 @@ object SemDedupStream {
       .agg(sort_array(collect_list(struct(col("vec_id").as("cid"), col("v").as("cv"))))
         .as("cents"))
 
-  def judged(assigned: Dataset[VecRow], tau: Double = 0.4, clusterCap: Int = 256,
-             stateTtl: Option[String] = None): Dataset[Judged] = {
-    import assigned.sparkSession.implicits._
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    assigned.groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
-        (bucket: Long, rows: Iterator[VecRow], state: GroupState[ClusterState]) =>
-          onCluster(bucket, rows, state, stateTtl, tau, clusterCap)
-      }
-  }
-
-  /** [[judged]] seeded with MIGRATED cluster state
+  /** Greedy per-cluster judgment over raw-vector exemplar state (see the
+    * object doc). `initial` seeds MIGRATED cluster state
     * ([[StateMigration.readSemDedupState]]): relocating the semantic-dedup
     * store keeps its exemplar sets, so resumed judgments stay consistent
     * with history (a fresh store would re-admit every vector whose
     * exemplar was lost).
     */
-  def judgedFrom(assigned: Dataset[VecRow], initial: Dataset[(Long, ClusterState)],
-                 tau: Double = 0.4, clusterCap: Int = 256,
-                 stateTtl: Option[String] = None): Dataset[Judged] = {
+  def judged(assigned: Dataset[VecRow], tau: Double = 0.4, clusterCap: Int = 256,
+             stateTtl: Option[String] = None,
+             initial: Option[Dataset[(Long, ClusterState)]] = None): Dataset[Judged] = {
     import assigned.sparkSession.implicits._
-    val timeout =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    assigned.groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, timeout,
-        initial.groupByKey(_._1).mapValues(_._2)) {
-        (bucket: Long, rows: Iterator[VecRow], state: GroupState[ClusterState]) =>
-          onCluster(bucket, rows, state, stateTtl, tau, clusterCap)
-      }
-  }
-
-  /** Spark 4 `transformWithState` twin of [[judged]] — the exemplar set as
-    * a native `ListState[Exemplar]`: RocksDB holds one entry per exemplar
-    * VECTOR (the classic path rewrites the whole cluster's serialized
-    * vector list on every enrollment — the heaviest blob of any store
-    * here, cap × dim doubles), enrollment is an O(1) list append, and the
-    * greedy scan iterates entries in insertion order = the vec_id order
-    * the in-handler sort enforces. The cap rides a ValueState counter.
-    * Semantics identical to [[onCluster]] by construction; parity pinned
-    * in `SemDedupStreamSpec`.
-    */
-  class ClusterProcessor(tau: Double, clusterCap: Int,
-                         ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, VecRow, Judged, ClusterState] {
-    import org.apache.spark.sql.streaming.{ListState, TimerValues, TimeMode, TTLConfig, ValueState}
-    @transient private var ex: ListState[Exemplar] = _
-    @transient private var count: ValueState[Long] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: TimeMode): Unit = {
-      val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-      ex = getHandle.getListState[Exemplar]("exemplars",
-        org.apache.spark.sql.Encoders.product[Exemplar], ttlConf)
-      count = getHandle.getValueState[Long]("n",
-        org.apache.spark.sql.Encoders.scalaLong, ttlConf)
-    }
-    override def handleInitialState(bucket: Long, initial: ClusterState,
-                                    timerValues: TimerValues): Unit = {
-      initial.ex.foreach(ex.appendValue)
-      count.update(initial.ex.size.toLong)
-    }
-    override def handleInputRows(bucket: Long, rows: Iterator[VecRow],
-                                 timerValues: TimerValues): Iterator[Judged] = {
-      val rs = rows.toSeq.sortBy(_.vec_id)
-      // one read of the current entries; within-batch enrollments append
-      // to the local view AND the state list
-      var cur = ex.get().toVector
-      // with TTL, list entries expire per-entry while the counter's TTL is
-      // refreshed by every update below — a counter-led cap would stay
-      // pinned at clusterCap forever after the exemplars expired. The live
-      // entry count is authoritative (and free: `cur` is already read).
-      var n = if (ttl.isDefined) cur.size.toLong
-              else if (count.exists()) count.get() else cur.size.toLong
-      val out = rs.map { r =>
-        val dropped = cur.exists(e =>
-          e.vec_id < r.vec_id && round6(cosine(e.v, r.v)) >= tau)
-        if (n < clusterCap) {
-          val e = Exemplar(r.vec_id, r.v)
-          ex.appendValue(e)
-          cur = cur :+ e
-          n += 1L
-        }
-        Judged(r.vec_id, bucket, !dropped)
-      }
-      count.update(n)
-      out.iterator
-    }
-  }
-
-  /** [[judged]] on transformWithState — see [[ClusterProcessor]]. */
-  def judgedTws(assigned: Dataset[VecRow], tau: Double = 0.4,
-                clusterCap: Int = 256,
-                ttl: Option[java.time.Duration] = None): Dataset[Judged] = {
-    import assigned.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    assigned.groupByKey(_.bucket)
-      .transformWithState(new ClusterProcessor(tau, clusterCap, ttl), mode,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
-
-  /** [[judgedTws]] seeded with a migrated classic-layout store
-    * ([[StateMigration.readSemDedupState]]) — the blob-to-entries
-    * conversion is the `handleInitialState` hook.
-    */
-  def judgedTwsFrom(assigned: Dataset[VecRow],
-                    initial: Dataset[(Long, ClusterState)],
-                    tau: Double = 0.4, clusterCap: Int = 256,
-                    ttl: Option[java.time.Duration] = None): Dataset[Judged] = {
-    import assigned.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    assigned.groupByKey(_.bucket)
-      .transformWithState(new ClusterProcessor(tau, clusterCap, ttl), mode,
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        initial.groupByKey(_._1).mapValues(_._2))
+    KeyedState.classic(assigned.groupByKey(_.bucket), stateTtl, initial)(
+      (bucket: Long, rows: Iterator[VecRow], state: GroupState[ClusterState]) =>
+        onCluster(bucket, rows, state, stateTtl, tau, clusterCap))
   }
 
   // ===== PQ-screened exemplar state (5 bytes/exemplar + rerank cost) =====
@@ -267,78 +162,40 @@ object SemDedupStream {
       val a = math.sqrt(adc(rn, e.codes)) - e.err
       a > 0.0 && 1.0 - a * a / 2.0 < tau - Margin
     }
-  }
 
-  /** [[ClusterProcessor]] with PQ-SCREENED exemplar state — the 100 TB
-    * posture for the semantic gate: RocksDB holds [[PqExemplar]] entries
-    * (~24 bytes) instead of raw cap × dim vectors, the ADC pre-screen
-    * settles most pairs from codes alone, and only the survivors pay
-    * `fetchVec` — a POINT READ of the exemplar's raw vector (in production
-    * a vector-store/row-store lookup keyed by vec_id; the bench wires a
-    * broadcast map, the deployment wires its KV client) — before the SAME
-    * exact round6-cosine decides. Judgments are identical to the raw-state
-    * path by the screen's soundness bound ([[PqScreen.provablyBelow]]);
-    * `SemDedupStreamSpec` pins row-for-row equality.
-    */
-  class PqClusterProcessor(tau: Double, clusterCap: Int,
-                           fetchVec: Long => Seq[Double],
-                           ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, VecRow, Judged] {
-    import org.apache.spark.sql.streaming.{ListState, TimerValues, TimeMode, TTLConfig, ValueState}
-    @transient private var ex: ListState[PqExemplar] = _
-    @transient private var count: ValueState[Long] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: TimeMode): Unit = {
-      val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-      ex = getHandle.getListState[PqExemplar]("pq_exemplars",
-        org.apache.spark.sql.Encoders.product[PqExemplar], ttlConf)
-      count = getHandle.getValueState[Long]("n",
-        org.apache.spark.sql.Encoders.scalaLong, ttlConf)
-    }
-    override def handleInputRows(bucket: Long, rows: Iterator[VecRow],
-                                 timerValues: TimerValues): Iterator[Judged] = {
-      val rs = rows.toSeq.sortBy(_.vec_id)
-      var cur = ex.get().toVector
-      var n = if (ttl.isDefined) cur.size.toLong
-              else if (count.exists()) count.get() else cur.size.toLong
-      val out = rs.map { r =>
-        val rn = PqScreen.normalize(r.v)
-        val dropped = cur.exists { e =>
-          e.vec_id < r.vec_id && !PqScreen.provablyBelow(rn, e, tau) &&
-            round6(cosine(fetchVec(e.vec_id), r.v)) >= tau
-        }
-        if (n < clusterCap) {
-          val e =
-            if (rn == null)
-              // zero vector: no reconstruction is meaningful — infinite
-              // radius forces every probe to the exact path, whose NaN
-              // cosine never drops (same as the raw-state path)
-              PqExemplar(r.vec_id, Seq.fill(graft.ops.PqModel.M)(0), Double.PositiveInfinity)
-            else {
-              val codes = PqScreen.encode(rn)
-              PqExemplar(r.vec_id, codes.toSeq, math.sqrt(PqScreen.adc(rn, codes)))
-            }
-          ex.appendValue(e)
-          cur = cur :+ e
-          n += 1L
-        }
-        Judged(r.vec_id, bucket, !dropped)
+    /** A row's stored form. A zero vector has no meaningful
+      * reconstruction: infinite radius forces every probe to the exact
+      * path, whose NaN cosine never drops (same as the raw-state path).
+      */
+    def exemplar(r: VecRow): PqExemplar = {
+      val rn = normalize(r.v)
+      if (rn == null) PqExemplar(r.vec_id, Seq.fill(PqModel.M)(0), Double.PositiveInfinity)
+      else {
+        val codes = encode(rn)
+        PqExemplar(r.vec_id, codes.toSeq, math.sqrt(adc(rn, codes)))
       }
-      count.update(n)
-      out.iterator
     }
   }
 
-  /** [[judgedTws]] with PQ-screened state — see [[PqClusterProcessor]]. */
-  def judgedPqTws(assigned: Dataset[VecRow], fetchVec: Long => Seq[Double],
-                  tau: Double = 0.4, clusterCap: Int = 256,
-                  ttl: Option[java.time.Duration] = None): Dataset[Judged] = {
+  /** [[judged]] with PQ-SCREENED exemplar state — the 100 TB posture for
+    * the semantic gate: the store holds [[PqExemplar]]s (~24 bytes)
+    * instead of raw cap × dim vectors, the ADC pre-screen settles most
+    * pairs from codes alone, and only the survivors pay `fetchVec` — a
+    * POINT READ of the exemplar's raw vector (in production a
+    * vector-store/row-store lookup keyed by vec_id; the bench wires a
+    * broadcast map, the deployment wires its KV client) — before the SAME
+    * exact round6-cosine decides. Judgments are identical to [[judged]] by
+    * the screen's soundness bound ([[PqScreen.provablyBelow]]);
+    * `SemDedupStreamSpec` pins row-for-row equality. `stateTtl` expires a
+    * whole idle cluster, as in [[judged]].
+    */
+  def judgedPq(assigned: Dataset[VecRow], fetchVec: Long => Seq[Double],
+               tau: Double = 0.4, clusterCap: Int = 256,
+               stateTtl: Option[String] = None): Dataset[Judged] = {
     import assigned.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val mode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    assigned.groupByKey(_.bucket)
-      .transformWithState(new PqClusterProcessor(tau, clusterCap, fetchVec, ttl),
-        mode, org.apache.spark.sql.streaming.OutputMode.Append())
+    KeyedState.classic(assigned.groupByKey(_.bucket), stateTtl, None)(
+      (bucket: Long, rows: Iterator[VecRow], state: GroupState[Seq[PqExemplar]]) =>
+        onPqCluster(bucket, rows, state, stateTtl, tau, clusterCap, fetchVec))
   }
 
   /** Sequential-accumulation cosine — bit-parity with the fused
@@ -359,23 +216,65 @@ object SemDedupStream {
     java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** THE greedy recurrence, shared by [[onCluster]] and [[onPqCluster]]
+    * so the raw and PQ-screened stores cannot drift. Rows run in vec_id
+    * order — the greedy chain's semantics (a member is judged only against
+    * SMALLER ids), not an optimization. A row is dropped iff `dupOf(r)`
+    * holds for a smaller-id exemplar, and joins the set, dropped or not,
+    * while the set is under `clusterCap`. The two stores differ only in
+    * the check and in the exemplar `enrol` builds.
+    */
+  private[graft] def greedy[E](bucket: Long, ex0: Seq[E], rows: Iterator[VecRow], clusterCap: Int)(
+      idOf: E => Long, dupOf: VecRow => E => Boolean, enrol: VecRow => E): (Seq[E], Seq[Judged]) = {
+    var ex = ex0.toVector
+    val out = rows.toSeq.sortBy(_.vec_id).map { r =>
+      val dup = dupOf(r)
+      val dropped = ex.exists(e => idOf(e) < r.vec_id && dup(e))
+      if (ex.size < clusterCap) ex = ex :+ enrol(r)
+      Judged(r.vec_id, bucket, !dropped)
+    }
+    (ex, out)
+  }
+
+  /** [[greedy]] over raw-vector exemplars, on a cluster's `GroupState`:
+    * TTL expiry removes the cluster and does NOT re-arm (re-arming a
+    * timed-out key writes it back and it re-fires forever).
+    */
   private[graft] def onCluster(bucket: Long, rows: Iterator[VecRow],
                                state: GroupState[ClusterState],
                                stateTtl: Option[String], tau: Double,
                                clusterCap: Int): Iterator[Judged] =
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
-      // id order inside the batch: the greedy chain's semantics (a member
-      // is judged only against SMALLER ids), not an optimization
-      val rs = rows.toSeq.sortBy(_.vec_id)
-      var ex = if (state.exists) state.get.ex else Vector.empty[Exemplar]
-      val out = rs.map { r =>
-        val dropped = ex.exists(e =>
-          e.vec_id < r.vec_id && round6(cosine(e.v, r.v)) >= tau)
-        if (ex.size < clusterCap) ex = ex :+ Exemplar(r.vec_id, r.v)
-        Judged(r.vec_id, bucket, !dropped)
-      }
+      val (ex, out) = greedy(bucket, state.getOption.fold(Seq.empty[Exemplar])(_.ex),
+        rows, clusterCap)(_.vec_id,
+        r => e => round6(cosine(e.v, r.v)) >= tau,
+        r => Exemplar(r.vec_id, r.v))
       state.update(ClusterState(ex))
+      stateTtl.foreach(state.setTimeoutDuration)
+      out.iterator
+    }
+
+  /** [[greedy]] over PQ exemplars, same expiry discipline as
+    * [[onCluster]]: a pair the codes cannot rule out pays one `fetchVec`
+    * and the exact check.
+    */
+  private[graft] def onPqCluster(bucket: Long, rows: Iterator[VecRow],
+                                 state: GroupState[Seq[PqExemplar]],
+                                 stateTtl: Option[String], tau: Double,
+                                 clusterCap: Int,
+                                 fetchVec: Long => Seq[Double]): Iterator[Judged] =
+    if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    else {
+      val (ex, out) = greedy(bucket, state.getOption.getOrElse(Seq.empty), rows,
+        clusterCap)(_.vec_id,
+        r => {
+          val rn = PqScreen.normalize(r.v)
+          e => !PqScreen.provablyBelow(rn, e, tau) &&
+            round6(cosine(fetchVec(e.vec_id), r.v)) >= tau
+        },
+        PqScreen.exemplar)
+      state.update(ex)
       stateTtl.foreach(state.setTimeoutDuration)
       out.iterator
     }

@@ -123,7 +123,7 @@ object StateErasure {
     * artifact, so the bucket entry goes; the band's next document simply
     * re-claims the bucket (it would have been the exemplar had the erased
     * doc never existed from that point on). Resume side:
-    * [[DedupStream.candidatesFrom]].
+    * [[DedupStream.candidates]] with `initial`.
     */
   def eraseDedupBucketState(st: Dataset[(String, Long)],
                             erasedDocs: Set[Long]): Dataset[(String, Long)] =
@@ -132,7 +132,7 @@ object StateErasure {
   /** Media-dedup store minus an erased document's fingerprints: exemplars
     * are filtered INSIDE each bucket (a bucket holds many documents'
     * fingerprints; only the erased ones go), empty buckets drop out.
-    * Resume side: [[DedupStream.fpVerifiedPairsFrom]].
+    * Resume side: [[DedupStream.fpVerifiedPairs]] with `initial`.
     */
   def eraseMediaDedupState(st: Dataset[(String, DedupStream.FpBucketState)],
                            erasedDocs: Set[Long])
@@ -144,7 +144,7 @@ object StateErasure {
   }
 
   /** Semantic-dedup store minus an erased document's embedding exemplars.
-    * Resume side: [[SemDedupStream.judgedFrom]].
+    * Resume side: [[SemDedupStream.judged]] with `initial`.
     */
   def eraseSemDedupState(st: Dataset[(Long, SemDedupStream.ClusterState)],
                          erasedVecs: Set[Long])

@@ -152,9 +152,10 @@ object StateMigration {
   /** Bucket-exemplar state of an online text-dedup checkpoint
     * ([[DedupStream.candidates]]'s layout): (band key, exemplar doc_id).
     * The same READ → initial-state RESUME recipe as the prev-image path —
-    * [[DedupStream.candidatesFrom]] is the resume side — so relocating a
-    * long-lived dedup store (new checkpoint volume, new cluster) keeps the
-    * exemplar history instead of re-flagging the whole corpus from scratch.
+    * [[DedupStream.candidates]] with `initial` is the resume side — so
+    * relocating a long-lived dedup store (new checkpoint volume, new
+    * cluster) keeps the exemplar history instead of re-flagging the whole
+    * corpus from scratch.
     */
   def readDedupBucketState(spark: SparkSession,
                            checkpointDir: String): Dataset[(String, Long)] = {
@@ -167,7 +168,8 @@ object StateMigration {
 
   /** Class-grain exemplar state of an online MEDIA-dedup checkpoint
     * ([[DedupStream.fpVerifiedPairs]]'s layout): (band key, exemplar
-    * fingerprint set). Resume side: [[DedupStream.fpVerifiedPairsFrom]].
+    * fingerprint set). Resume side: [[DedupStream.fpVerifiedPairs]] with
+    * `initial`.
     */
   def readMediaDedupState(spark: SparkSession, checkpointDir: String)
       : Dataset[(String, DedupStream.FpBucketState)] = {
@@ -179,7 +181,7 @@ object StateMigration {
 
   /** Cluster-exemplar state of an online semantic-dedup checkpoint
     * ([[SemDedupStream.judged]]'s layout): (bucket, exemplar set).
-    * Resume side: [[SemDedupStream.judgedFrom]].
+    * Resume side: [[SemDedupStream.judged]] with `initial`.
     */
   def readSemDedupState(spark: SparkSession, checkpointDir: String)
       : Dataset[(Long, SemDedupStream.ClusterState)] = {
@@ -212,7 +214,7 @@ object StateMigration {
     * ([[BloomNovelty.estimateInserted]], Swamidass–Baldi), so a shard
     * migrated mid-life rotates where its actual fill says, instead of
     * absorbing a full extra capacity past its sized fpp. Feed the result
-    * to [[BloomNovelty.taggedFrom]] / the tws twin.
+    * to [[BloomNovelty.tagged]] as its `initial`.
     */
   def migrateNoveltyState(legacy: Dataset[(Int, Array[Long])],
                           p: graft.functions.Bloom.Params)

@@ -66,35 +66,6 @@ class BloomNoveltySpec extends SparkSuite {
       "first-time docs mostly tagged maybe_seen — fpp or sharding is off")
   }
 
-  test("transformWithState twin == classic path across the same splits") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // transformWithState requires the RocksDB state store
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val docs = docSeq
-      val input = MemoryStream[BloomNoveltySpec.D]
-      val name = s"bloom_novelty_tws_${System.nanoTime()}"
-      val q = BloomNovelty.taggedTws(
-          BloomNovelty.keyed(input.toDS().toDF(), shardBits = 4), p)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val tws = try {
-        Seq(docs.take(20), docs.drop(20)).foreach { b =>
-          input.addData(b: _*); q.processAllAvailable()
-        }
-        spark.table(name).as[Tagged].collect().toSeq.sortBy(t => (t.doc_id, t.h))
-      } finally q.stop()
-      val classic = runSplits(Seq(docs.take(20), docs.drop(20)))
-      assert(tws == classic, "tws and classic novelty gates diverged")
-    } finally {
-      prior.fold(spark.conf.unset(RocksKey))(spark.conf.set(RocksKey, _))
-    }
-  }
-
   test("within-batch duplicate content: second copy tags maybe_seen (sequential semantics)") {
     val twice = Seq(D(1L, "alpha beta gamma delta epsilon"), D(2L, "alpha beta gamma delta epsilon"))
     val got = runSplits(Seq(twice))
@@ -153,8 +124,8 @@ class BloomNoveltySpec extends SparkSuite {
     val migrated = graft.streaming.StateMigration.migrateNoveltyState(legacy, p)
     val in2 = MemoryStream[D]
     val name = s"bloom_mig_${System.nanoTime()}"
-    val q2 = BloomNovelty.taggedFrom(
-        BloomNovelty.keyed(in2.toDS().toDF(), shardBits = 4), p, migrated)
+    val q2 = BloomNovelty.tagged(
+        BloomNovelty.keyed(in2.toDS().toDF(), shardBits = 4), p, initial = Some(migrated))
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     val resumed = try {
@@ -170,26 +141,6 @@ class BloomNoveltySpec extends SparkSuite {
     assert(resumed == expect, "migrated gate diverged from the uninterrupted fold")
     assert(resumed.exists(!_.definitely_new),
       "wave 2 must re-see wave-1 content through the migrated bits")
-
-    // the tws half of the migration matrix: the SAME migrated state
-    // resumed on transformWithState must classify identically
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in3 = MemoryStream[D]
-      val nameT = s"bloom_mig_tws_${System.nanoTime()}"
-      val q3 = BloomNovelty.taggedTwsFrom(
-          BloomNovelty.keyed(in3.toDS().toDF(), shardBits = 4), p, migrated)
-        .writeStream.format("memory").queryName(nameT)
-        .outputMode("append").start()
-      val resumedTws = try {
-        in3.addData(wave2: _*); q3.processAllAvailable()
-        spark.table(nameT).as[Tagged].collect().toSeq.sortBy(t => (t.doc_id, t.h))
-      } finally q3.stop()
-      assert(resumedTws == expect, "tws-resumed migrated gate diverged")
-    } finally prior.fold(spark.conf.unset(RocksKey))(spark.conf.set(RocksKey, _))
 
     // the occupancy seed: estimate within 15% of the true distinct count
     val pEst = Bloom.forExpected(1024, 0.01)
@@ -299,16 +250,6 @@ class BloomNoveltySpec extends SparkSuite {
       Seq(docs.take(15), docs.slice(15, 41), docs.drop(41)))
     assert(classic1 == expect, "rotating single-batch stream diverged from the batch fold")
     assert(classic3 == expect, "rotating classification changed with split points")
-
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tws = run(BloomNovelty.taggedTws(_, tinyP, tinyRot),
-        Seq(docs.take(20), docs.drop(20)))
-      assert(tws == expect, "rotating tws gate diverged from the batch fold")
-    } finally prior.fold(spark.conf.unset(RocksKey))(spark.conf.set(RocksKey, _))
   }
 }
 

@@ -153,47 +153,6 @@ class DedupStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState twins: candidates and verified edges equal classic on RocksDB") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val docSeq = Tables.load(spark, sf, "documents")
-        .select(col("doc_id"), col("text")).as[Doc].collect().sortBy(_.doc_id).toSeq
-      def replay[T: org.apache.spark.sql.Encoder](
-          name: String, pipe: MemoryStream[Doc] => org.apache.spark.sql.Dataset[T]): Set[T] = {
-        val in = MemoryStream[Doc]
-        val q = pipe(in).writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try {
-          in.addData(docSeq.take(docSeq.size / 2): _*); q.processAllAvailable()
-          in.addData(docSeq.drop(docSeq.size / 2): _*); q.processAllAvailable()
-          spark.table(name).as[T].collect().toSet
-        } finally q.stop()
-      }
-      def bands(in: MemoryStream[Doc]) =
-        DedupStream.bandRows(in.toDS().toDF()).as[DedupStream.BandRow]
-      def bandsV(in: MemoryStream[Doc]) =
-        DedupStream.bandRowsWithSets(in.toDS().toDF()).as[BandRowV]
-      val candClassic = replay("tws_cand_ref", in => DedupStream.candidates(bands(in)))
-      val candTws = replay("tws_cand", in => DedupStream.candidatesTws(bands(in)))
-      assert(candTws == candClassic,
-        s"candidatesTws diverged: ${(candTws -- candClassic).take(5)}")
-      assert(candTws.nonEmpty)
-      val verClassic = replay("tws_ver_ref", in => DedupStream.verifiedCandidates(bandsV(in)))
-      val verTws = replay("tws_ver", in => DedupStream.verifiedCandidatesTws(bandsV(in)))
-      assert(verTws == verClassic,
-        s"verifiedCandidatesTws diverged: ${(verTws -- verClassic).take(5)}")
-      assert(verTws.nonEmpty)
-    } finally prior match {
-      case Some(v) => spark.conf.set(RocksKey, v)
-      case None    => spark.conf.unset(RocksKey)
-    }
-  }
-
   test("streamed corpus candidates cover the batch candidate pairs (star contract)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

@@ -145,7 +145,7 @@ class EraseEverywhereSpec extends SparkSuite {
       DedupBuckets("dedup", chkDd, { filtered =>
         val fresh = tmp("erase_e2e_dd_b")
         val in2 = MemoryStream[DedupStream.Doc]
-        val q2 = DedupStream.candidatesFrom(bands(in2), filtered).writeStream
+        val q2 = DedupStream.candidates(bands(in2), initial = Some(filtered)).writeStream
           .foreachBatch { (b: Dataset[DedupStream.Candidate], _: Long) => b.collect(); () }
           .option("checkpointLocation", fresh).outputMode("append").start()
         // the first batch COMMITS the rewritten state on the fresh

@@ -61,22 +61,42 @@ class HarnessSpec extends SparkSuite {
     intercept[IllegalArgumentException](Harness.json(new Object))
   }
 
-  test("guard: the only SparkSession.builder() in src/main is Graft.sessionBuilder's") {
+  /** Every `.scala` file under `src/main/scala` with its path relative to
+    * that root, found by walking up from the working directory.
+    */
+  private def mainSources(): Seq[(String, String)] = {
     val root: Path =
       Iterator.iterate(Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
         .takeWhile(_ != null).map(_.resolve("src/main/scala"))
         .find(p => Files.isRegularFile(p.resolve("graft/Graft.scala")))
         .getOrElse(fail("src/main/scala not found above the working directory"))
     val files = Files.walk(root)
-    val hits = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
-      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(f => (root.relativize(f).toString, Files.readString(f)))
+    finally files.close()
+  }
+
+  test("guard: the only SparkSession.builder() in src/main is Graft.sessionBuilder's") {
+    val hits = mainSources().flatMap { case (path, text) =>
+      val lines = text.split("\n", -1).toIndexedSeq
       lines.indices.filter(i => lines(i).contains("SparkSession.builder()")).map { i =>
         val enclosingDef = (i to 0 by -1).map(lines(_).trim).find(_.startsWith("def "))
-        (root.relativize(f).toString, enclosingDef.getOrElse(""))
+        (path, enclosingDef.getOrElse(""))
       }
-    } finally files.close()
+    }
     assert(hits.size == 1 && hits.head._1 == "graft/Graft.scala" &&
       hits.head._2.startsWith("def sessionBuilder()"),
       s"SparkSession.builder() outside Graft.sessionBuilder(): ${hits.mkString(", ")}")
+  }
+
+  test("guard: transformWithState and StatefulProcessor subclasses only in streaming/CdcStream.scala") {
+    // the prev-image path keeps transformWithState for its erasure
+    // receipts; every other keyed store runs on classic state
+    val twsApi = """\.transformWithState\s*\(|(extends|with)\s+[\w.]*StatefulProcessor""".r
+    val hits = mainSources().collect {
+      case (path, text) if twsApi.findFirstIn(text).isDefined => path
+    }
+    assert(hits == Seq("graft/streaming/CdcStream.scala"),
+      s"transformWithState API used outside CdcStream: ${hits.mkString(", ")}")
   }
 }

@@ -133,7 +133,7 @@ class MediaDedupStreamSpec extends SparkSuite {
     val st = StateMigration.readMediaDedupState(spark, chk)
     assert(st.count() > 0, "wave 1 enrolled no exemplars")
     val in2 = MemoryStream[FpRow]
-    val q2 = DedupStream.fpVerifiedPairsFrom(bands(in2), st)
+    val q2 = DedupStream.fpVerifiedPairs(bands(in2), initial = Some(st))
       .writeStream.format("memory").queryName("media_mig_b")
       .outputMode("append").start()
     val resumed = try {
@@ -148,64 +148,6 @@ class MediaDedupStreamSpec extends SparkSuite {
       .map(e => (e.dup_of, e.doc_id, e.hamming)).toSet
     assert(resumed == ref,
       s"relocated media store diverged: resumed-only ${resumed -- ref}, ref-only ${ref -- resumed}")
-  }
-
-  test("transformWithState twin: edge-for-edge parity on RocksDB; classic store migrates in") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val fps = Multimodal.pngPhashDf(spark, sf).collect()
-        .map(r => FpRow(r.doc_id, r.phash)).sortBy(_.doc_id).toSeq
-      // same two-batch id-ordered replay as the classic path's runReplay
-      val input = MemoryStream[FpRow]
-      val q = DedupStream.fpVerifiedPairsTws(
-          DedupStream.fpBandRows(input.toDS(), DedupStream.ImageBanding))
-        .writeStream.format("memory").queryName("media_tws")
-        .outputMode("append").start()
-      val tws = try {
-        input.addData(fps.take(fps.size / 2): _*); q.processAllAvailable()
-        input.addData(fps.drop(fps.size / 2): _*); q.processAllAvailable()
-        spark.table("media_tws").as[FpEdge].collect()
-      } finally q.stop()
-      val classic = runReplay(fps, DedupStream.ImageBanding, "media_tws_ref")
-      assert(tws.map(e => (e.dup_of, e.doc_id, e.hamming)).toSet ==
-        classic.map(e => (e.dup_of, e.doc_id, e.hamming)).toSet,
-        "TWS twin diverged from the classic path")
-      // classic-layout store migrates into the MapState layout: wave-1
-      // blob state becomes per-class entries, wave 2 resumes seamlessly
-      val (wave1, wave2) = fps.splitAt(fps.size / 2)
-      val chk = java.nio.file.Files.createTempDirectory("media_tws_mig").toString
-      val in1 = MemoryStream[FpRow]
-      val q1 = DedupStream.fpVerifiedPairs(
-          DedupStream.fpBandRows(in1.toDS(), DedupStream.ImageBanding))
-        .writeStream.format("memory").queryName("media_tws_mig_a")
-        .option("checkpointLocation", chk).outputMode("append").start()
-      try { in1.addData(wave1: _*); q1.processAllAvailable() } finally q1.stop()
-      val st = graft.streaming.StateMigration.readMediaDedupState(spark, chk)
-      val in2 = MemoryStream[FpRow]
-      val q2 = DedupStream.fpVerifiedPairsTwsFrom(
-          DedupStream.fpBandRows(in2.toDS(), DedupStream.ImageBanding), st)
-        .writeStream.format("memory").queryName("media_tws_mig_b")
-        .outputMode("append").start()
-      val resumed = try {
-        in2.addData(wave2: _*); q2.processAllAvailable()
-        spark.table("media_tws_mig_b").as[FpEdge].collect()
-          .map(e => (e.dup_of, e.doc_id, e.hamming)).toSet
-      } finally q2.stop()
-      val wave2Ids = wave2.map(_.doc_id).toSet
-      val ref = classic.filter(e => wave2Ids(e.doc_id))
-        .map(e => (e.dup_of, e.doc_id, e.hamming)).toSet
-      assert(resumed == ref,
-        s"classic→TWS migration diverged: resumed-only ${resumed -- ref}, " +
-          s"ref-only ${ref -- resumed}")
-    } finally prior match {
-      case Some(v) => spark.conf.set(RocksKey, v)
-      case None    => spark.conf.unset(RocksKey)
-    }
   }
 
   test("state transitions: class enrollment, exact-dup star edge, verify gate, TTL expiry") {
@@ -253,44 +195,5 @@ class MediaDedupStreamSpec extends SparkSuite {
       hasTimedOut = true)
     val out = DedupStream.onFpBucket(Iterator.empty, expired, Some("1 hour"), 3, 100).toList
     assert(out.isEmpty && expired.isRemoved && !expired.isUpdated)
-  }
-
-  test("TWS TTL: expired fingerprint classes re-admit enrollment (cap counts live entries)") {
-    // the TTL drift scenario: map entries expire per-entry while the
-    // counter's TTL re-arms on every enrollment — a counter-led cap would
-    // block enrollment long after the exemplars expired. The fix derives
-    // the cap from the live entries the Hamming sweep walks anyway.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[FpBandRow]
-      def row(id: Long, fp: Long) = FpBandRow("ttl-0", id, 0, fp)
-      val q = DedupStream.fpVerifiedPairsTws(in.toDS(), maxHamming = 3,
-          stateTtl = Some(java.time.Duration.ofSeconds(3)), bucketCap = 2)
-        .writeStream.format("memory").queryName("media_ttl")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-        .outputMode("append").start()
-      try {
-        // all fingerprints pairwise > maxHamming apart, so the ONLY edge
-        // the run can produce is the within-class one asserted at the end
-        in.addData(row(1L, 0L)); awaitSourceOffset(q, 0)       // enroll fp 0
-        Thread.sleep(2000)
-        in.addData(row(2L, 15L)); awaitSourceOffset(q, 1)      // enroll fp 15 — cap full, counter re-armed
-        Thread.sleep(2500) // fp 0 expired (age ≥ 4.5 s); fp 15 + counter alive
-        in.addData(row(3L, 0xFF00L)); awaitSourceOffset(q, 2)  // 1 live entry < cap → must enroll
-        in.addData(row(4L, 0xFF00L)); awaitSourceOffset(q, 3)  // exact dup of doc 4's class
-        val edges = spark.table("media_ttl").as[FpEdge].collect()
-          .map(e => (e.doc_id, e.dup_of, e.hamming)).toSet
-        assert(edges.contains((4L, 3L, 0L)),
-          s"doc 4 must hit doc 3's re-enrolled class at hamming 0; got $edges")
-      } finally q.stop()
-    } finally prior match {
-      case Some(v) => spark.conf.set(RocksKey, v)
-      case None    => spark.conf.unset(RocksKey)
-    }
   }
 }

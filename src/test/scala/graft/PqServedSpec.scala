@@ -10,8 +10,15 @@ import graft.ops.{PqModel, Similarity}
   */
 class PqServedSpec extends SparkSuite {
 
-  private def planOf(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
+  /** The executed plan's text, scan `Location`s untruncated: the default
+    * 100-char metadata cap cuts a long table path short of its name.
+    */
+  private def planOf(df: org.apache.spark.sql.DataFrame): String = {
+    val key = "spark.sql.maxMetadataStringLength"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try df.queryExecution.executedPlan.toString finally spark.conf.set(key, prior)
+  }
 
   /** A single-query serve's (vec_id, cos_sim) rows as it returns them: a
     * batch of one comes out in rank order (cos_sim desc, vec_id), the

@@ -55,65 +55,6 @@ class SemDedupStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState twin: judgments equal classic on RocksDB; classic store migrates in") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val base = Tables.load(spark, sf, "embeddings")
-        .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("v"))
-      val planted = base.filter(col("vec_id") % 7 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("v"), x => x * lit(2.0)).as("v"))
-      val corpus = base.unionAll(planted)
-      val cents = SemDedupStream.centroids(corpus)
-      val rows = corpus.as[(Long, Seq[Double])].collect().sortBy(_._1)
-      def assigned(in: MemoryStream[(Long, Seq[Double])]) =
-        SemDedupStream.assign(in.toDS().toDF("vec_id", "v"), cents).as[VecRow]
-      val batch = Similarity.semDedupDf(corpus)
-        .select(col("vec_id"), col("bucket"), col("kept"))
-        .as[(Long, Long, Boolean)].collect()
-        .map { case (id, b, k) => Judged(id, b, k) }.toSet
-      // full replay on the TWS path (ListState entry per exemplar vector)
-      val in = MemoryStream[(Long, Seq[Double])]
-      val q = SemDedupStream.judgedTws(assigned(in))
-        .writeStream.format("memory").queryName("sem_tws")
-        .outputMode("append").start()
-      val tws = try {
-        in.addData(rows.take(rows.length / 2): _*); q.processAllAvailable()
-        in.addData(rows.drop(rows.length / 2): _*); q.processAllAvailable()
-        spark.table("sem_tws").as[Judged].collect().toSet
-      } finally q.stop()
-      assert(tws == batch, s"TWS judgments diverged: ${(tws -- batch).take(5)}")
-      // classic wave-1 store migrates into the per-entry layout
-      val (wave1, wave2) = rows.splitAt(rows.length / 2)
-      val chk = java.nio.file.Files.createTempDirectory("sem_tws_mig").toString
-      val in1 = MemoryStream[(Long, Seq[Double])]
-      val q1 = SemDedupStream.judged(assigned(in1))
-        .writeStream.format("memory").queryName("sem_tws_mig_a")
-        .option("checkpointLocation", chk).outputMode("append").start()
-      try { in1.addData(wave1: _*); q1.processAllAvailable() } finally q1.stop()
-      val st = graft.streaming.StateMigration.readSemDedupState(spark, chk)
-      val in2 = MemoryStream[(Long, Seq[Double])]
-      val q2 = SemDedupStream.judgedTwsFrom(assigned(in2), st)
-        .writeStream.format("memory").queryName("sem_tws_mig_b")
-        .outputMode("append").start()
-      val resumed = try {
-        in2.addData(wave2: _*); q2.processAllAvailable()
-        spark.table("sem_tws_mig_b").as[Judged].collect().toSet
-      } finally q2.stop()
-      val wave2Ids = wave2.map(_._1).toSet
-      assert(resumed == batch.filter(j => wave2Ids(j.vec_id)),
-        s"classic→TWS semantic migration diverged: ${resumed.take(5)}")
-    } finally prior match {
-      case Some(v) => spark.conf.set(RocksKey, v)
-      case None    => spark.conf.unset(RocksKey)
-    }
-  }
-
   test("PQ-screened state: judgments equal the raw-vector path; the screen actually screens") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -143,13 +84,13 @@ class SemDedupStreamSpec extends SparkSuite {
         .map { case (id, b, k) => Judged(id, b, k) }.toSet
 
       val in = MemoryStream[(Long, Seq[Double])]
-      val q = SemDedupStream.judgedPqTws(assigned(in), fetch)
-        .writeStream.format("memory").queryName("sem_pq_tws")
+      val q = SemDedupStream.judgedPq(assigned(in), fetch)
+        .writeStream.format("memory").queryName("sem_pq")
         .outputMode("append").start()
       val pq = try {
         in.addData(rows.take(rows.length / 2): _*); q.processAllAvailable()
         in.addData(rows.drop(rows.length / 2): _*); q.processAllAvailable()
-        spark.table("sem_pq_tws").as[Judged].collect().toSet
+        spark.table("sem_pq").as[Judged].collect().toSet
       } finally q.stop()
       // judgments unchanged — ADC only pre-screens, exact cosine decides
       assert(pq == batch, s"PQ-screened judgments diverged: ${(pq -- batch).take(5)}")
@@ -193,7 +134,7 @@ class SemDedupStreamSpec extends SparkSuite {
     val st = StateMigration.readSemDedupState(spark, chk)
     assert(st.count() > 0, "wave 1 built no cluster state")
     val in2 = MemoryStream[(Long, Seq[Double])]
-    val q2 = SemDedupStream.judgedFrom(assigned(in2), st)
+    val q2 = SemDedupStream.judged(assigned(in2), initial = Some(st))
       .writeStream.format("memory").queryName("sem_mig_b")
       .outputMode("append").start()
     val resumed = try {
@@ -210,49 +151,62 @@ class SemDedupStreamSpec extends SparkSuite {
     assert(resumed.exists(!_.kept), "wave 2 must exercise drops against wave-1 exemplars")
   }
 
-  test("TWS TTL: expired exemplars re-admit enrollment (cap counts live entries)") {
-    // the TTL drift scenario: ListState entries expire per-entry while the
-    // counter ValueState is refreshed every batch — a counter-led cap
-    // would pin the cluster at clusterCap forever after its exemplars
-    // expired. The fix derives the cap from the live entries (free: the
-    // greedy scan reads them anyway).
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def vec(i: Int) = Seq.tabulate(4)(j => if (j == i) 1.0 else 0.0)
-      val in = MemoryStream[VecRow]
-      val q = SemDedupStream.judgedTws(in.toDS(), tau = 0.4, clusterCap = 2,
-          ttl = Some(java.time.Duration.ofSeconds(3)))
-        .writeStream.format("memory").queryName("sem_ttl")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-        .outputMode("append").start()
-      try {
-        // batch 1: two orthogonal exemplars fill the cap
-        in.addData(VecRow(7L, 1L, vec(0)), VecRow(7L, 2L, vec(1)))
-        awaitSourceOffset(q, 0)
-        Thread.sleep(2000)
-        // batch 2: cap full — row 3 is judged but not enrolled; this batch
-        // refreshes the old counter's TTL (the drift setup: entries will
-        // expire while the counter survives)
-        in.addData(VecRow(7L, 3L, vec(2))); awaitSourceOffset(q, 1)
-        Thread.sleep(2500) // exemplars 1,2 expired (age ≥ 4.5 s); counter alive
-        // the store is empty again — enrollment must re-admit
-        in.addData(VecRow(7L, 4L, vec(3))); awaitSourceOffset(q, 2)
-        // a clone of row 4 must be DROPPED — the proof row 4 enrolled
-        in.addData(VecRow(7L, 5L, vec(3))); awaitSourceOffset(q, 3)
-        val got = spark.table("sem_ttl").as[Judged].collect()
-          .map(j => j.vec_id -> j.kept).toMap
-        assert(got(4L), "row 4 arrived into an expired cluster and must be kept")
-        assert(!got(5L),
-          s"row 5 clones row 4; dropping it proves re-enrollment after expiry (got $got)")
-      } finally q.stop()
-    } finally prior match {
-      case Some(v) => spark.conf.set(RocksKey, v)
-      case None    => spark.conf.unset(RocksKey)
+  test("cluster fold transitions, raw and PQ stores alike: smaller-id greedy, cap, expiry") {
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, TestGroupState}
+    import SemDedupStream.{ClusterState, Exemplar, PqScreen}
+    val dim = graft.ops.PqModel.M * graft.ops.PqModel.Sub
+    // axis vectors: distinct axes are orthogonal (cos 0), a scaled copy of
+    // one is its clone (cos 1)
+    def axis(i: Int, scale: Double = 1.0) = Seq.tabulate(dim)(j => if (j == i) scale else 0.0)
+    val stored = VecRow(7L, 10L, axis(2)) // enrolled by an earlier batch
+    // arrival order is not id order; sorted, the batch reads 3 4 5 8 9 12
+    val batch = Seq(VecRow(7L, 9L, axis(0, 2.0)), VecRow(7L, 12L, axis(2, 5.0)),
+      VecRow(7L, 5L, axis(1)), VecRow(7L, 3L, axis(0)), VecRow(7L, 8L, axis(2, 0.5)),
+      VecRow(7L, 4L, axis(1, 3.0)))
+    val byId = (stored +: batch).map(r => r.vec_id -> r.v).toMap
+
+    /** A store's handler over a `TestGroupState`, its state seeded from
+      * rows, and the exemplar ids that state holds.
+      */
+    case class Store[S](name: String, seed: Seq[VecRow] => S, ids: S => Seq[Long],
+                        run: (Iterator[VecRow], GroupState[S], Int) => Iterator[Judged])
+
+    def transitions[S](st: Store[S]): Seq[Judged] = {
+      def state(timedOut: Boolean) = TestGroupState.create[S](
+        optionalState = Optional.of(st.seed(Seq(stored))),
+        timeoutConf = GroupStateTimeout.ProcessingTimeTimeout,
+        batchProcessingTimeMs = 1000L,
+        eventTimeWatermarkMs = Optional.empty[Long](),
+        hasTimedOut = timedOut)
+      val live = state(timedOut = false)
+      val judged = st.run(batch.iterator, live, 4).toList
+      // 3 is kept though the stored 10 clones it (only SMALLER ids judge);
+      // 5 drops against 4, 9 against 3, 12 against the stored 10; 8 keeps,
+      // its only clone being the larger 10
+      assert(judged.map(j => j.vec_id -> j.kept) == List(
+        3L -> true, 4L -> true, 5L -> false, 8L -> true, 9L -> false, 12L -> false),
+        s"${st.name}: $judged")
+      assert(judged.forall(_.bucket == 7L))
+      // cap 4: 3, 4 and 5 fill the set; 8, 9 and 12 are judged, not enrolled
+      assert(st.ids(live.get) == Seq(10L, 3L, 4L, 5L), s"${st.name}: ${st.ids(live.get)}")
+      assert(live.getTimeoutTimestampMs.isPresent, s"${st.name}: a live cluster re-arms its TTL")
+      // expiry: the cluster goes, and no timeout is set on the way out
+      val expired = state(timedOut = true)
+      assert(st.run(Iterator.empty, expired, 4).isEmpty)
+      assert(expired.isRemoved && !expired.isUpdated &&
+        !expired.getTimeoutTimestampMs.isPresent, s"${st.name}: expiry re-armed")
+      judged
     }
+
+    val raw = transitions(Store[ClusterState]("raw",
+      rs => ClusterState(rs.map(r => Exemplar(r.vec_id, r.v))), _.ex.map(_.vec_id),
+      (rows, state, cap) =>
+        SemDedupStream.onCluster(7L, rows, state, Some("1 hour"), 0.4, cap)))
+    val pq = transitions(Store[Seq[SemDedupStream.PqExemplar]]("pq",
+      _.map(PqScreen.exemplar), _.map(_.vec_id),
+      (rows, state, cap) =>
+        SemDedupStream.onPqCluster(7L, rows, state, Some("1 hour"), 0.4, cap, byId)))
+    assert(pq == raw)
   }
 }

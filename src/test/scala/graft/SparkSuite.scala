@@ -46,23 +46,4 @@ trait SparkSuite extends AnyFunSuite {
         s"$layout: the batched serve for query $q diverged from its batch of one")
     }
   }
-
-  /** Wait until the query's FIRST source has committed through `target`
-    * (a MemoryStream LongOffset — one increment per addData call).
-    * `processAllAvailable` cannot be used on a transformWithState query in
-    * `TimeMode.ProcessingTime`: the TTL machinery keeps scheduling batches,
-    * so the no-new-data latch it waits on never sets. Progress rows are
-    * emitted AFTER sink commit, so once the offset shows there the data is
-    * queryable.
-    */
-  def awaitSourceOffset(q: org.apache.spark.sql.streaming.StreamingQuery,
-                        target: Long, timeoutMs: Long = 60000): Unit = {
-    val end = System.currentTimeMillis + timeoutMs
-    def cur: Long = q.recentProgress.flatMap(_.sources.headOption)
-      .flatMap(s => Option(s.endOffset))
-      .map(_.replaceAll("[^0-9-]", "")).filter(_.nonEmpty).map(_.toLong)
-      .foldLeft(-1L)(math.max)
-    while (cur < target && System.currentTimeMillis < end) Thread.sleep(100)
-    assert(cur >= target, s"source stalled before offset $target (at $cur)")
-  }
 }

@@ -301,7 +301,7 @@ class StateErasureSpec extends SparkSuite {
     def replay(initial: org.apache.spark.sql.Dataset[(String, Long)],
                name: String): Set[Candidate] = {
       val in2 = MemoryStream[Doc]
-      val q2 = DedupStream.candidatesFrom(bands(in2), initial)
+      val q2 = DedupStream.candidates(bands(in2), initial = Some(initial))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {

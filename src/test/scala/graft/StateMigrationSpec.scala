@@ -176,7 +176,7 @@ class StateMigrationSpec extends SparkSuite {
     val st = StateMigration.readDedupBucketState(spark, chk)
     assert(st.count() > 0, "wave 1 claimed no buckets — fixture too small")
     val in2 = MemoryStream[Doc]
-    val q2 = DedupStream.candidatesFrom(bands(in2), st)
+    val q2 = DedupStream.candidates(bands(in2), initial = Some(st))
       .writeStream.format("memory").queryName("mig_dd_b")
       .outputMode("append").start()
     val resumed = try {
@@ -333,7 +333,7 @@ class StateMigrationSpec extends SparkSuite {
     val chkB = java.nio.file.Files.createTempDirectory("rep_dd_chk_b").toString
     val in2 = MemoryStream[Doc]
     val resumed = StateMigration.withStatePartitions(spark, 32) {
-      val q2 = DedupStream.candidatesFrom(bands(in2), st)
+      val q2 = DedupStream.candidates(bands(in2), initial = Some(st))
         .writeStream.format("memory").queryName("rep_dd_b")
         .option("checkpointLocation", chkB).outputMode("append").start()
       try {
